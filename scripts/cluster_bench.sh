@@ -60,6 +60,8 @@ sleep 6
 # ~30 threads oversubscribing the 8-core app). (2) spark.locality.wait=0 —
 # all executors are on one host, so the 3s default process-local wait for
 # persisted blocks is pure idle latency with no data-movement payoff.
+# Both JVMs also get --add-modules jdk.incubator.vector: without it the SIMD
+# MinHash kernel silently falls back to the scalar loop.
 submit() { # submit <total_cores> <tag>
   local cores=$1 tag=$2
   echo "=== submit $tag ($cores cores) $(date +%T) ===" | tee -a "$LOG/chain.log"
@@ -73,7 +75,8 @@ submit() { # submit <total_cores> <tag>
     --conf spark.cores.max="$cores" \
     --conf spark.local.dir=/dev/shm/spark-graft \
     --conf spark.ui.enabled=false \
-    --conf "spark.executor.extraJavaOptions=-XX:ActiveProcessorCount=1" \
+    --conf "spark.driver.extraJavaOptions=--add-modules jdk.incubator.vector" \
+    --conf "spark.executor.extraJavaOptions=-XX:ActiveProcessorCount=1 --add-modules jdk.incubator.vector" \
     --conf spark.locality.wait=0s \
     "$JAR" > "$LOG/run_${tag}.log" 2>&1
   grep -h '"cluster_bench"' "$LOG/run_${tag}.log" >> "$LOG/results.jsonl" || true

@@ -1,9 +1,17 @@
 #!/bin/bash
-# Round-3 scale-proof driver: run the full test suite, then each
-# graft.tools.ScaleBench section in its own JVM (sections persist to
-# BENCH/scale_sections/*.md and SCALE.md is reassembled after each).
+# Scale-proof driver: run each requested graft.tools.ScaleBench section in
+# its own JVM (sections persist to BENCH/scale_sections/*.md and SCALE.md is
+# reassembled after each).
+#
+# usage: scripts/scale_run.sh <section>...
+#   a section is a ScaleBench mode, with its arguments joined by ':'
+#   (`protocol:sf0.3` runs `ScaleBench protocol sf0.3`); the pseudo-section
+#   `test` runs the sbt test suite instead. Example (the full round-3 chain):
+#     scripts/scale_run.sh test linearity workload ann decode protocol:sf0.3
+# SPARK_HOME must point at the Spark install; logs land under /tmp/scale.
 set -uo pipefail
-cd /root/repo
+[ $# -gt 0 ] || { sed -n '2,11p' "$0"; exit 2; }
+cd "$(dirname "$0")/.."
 LOG=/tmp/scale
 mkdir -p "$LOG"
 
@@ -15,29 +23,25 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 # snapshot the compiled classes so recompiles during the (hours-long) chain
 # cannot corrupt lazily-loaded classes in running sections
-rm -rf /tmp/scale/classes
-cp -r target/scala-2.13/classes /tmp/scale/classes
-CP="/tmp/scale/classes:/opt/spark/jars/*"
+rm -rf "$LOG/classes"
+cp -r target/scala-2.13/classes "$LOG/classes"
+CP="$LOG/classes:${SPARK_HOME:?SPARK_HOME must point at the Spark install}/jars/*"
 MEM="${SPARK_DRIVER_MEM:-24g}"
 
-run() { # run <name> <class> [args...]
-  local name=$1; shift
+for section in "$@"; do
+  name=${section//:/_}
   echo "=== $name start $(date +%T) ===" | tee -a "$LOG/chain.log"
-  java $ADD_OPENS -Xmx$MEM -Xms$MEM -XX:+AlwaysPreTouch -XX:+UseParallelGC \
-       -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-       -cp "$CP" "$@" > "$LOG/$name.log" 2>&1
-  local rc=$?
-  echo "=== $name done rc=$rc $(date +%T) ===" | tee -a "$LOG/chain.log"
-  return 0
-}
-
-echo "=== sbt test start $(date +%T) ===" | tee -a "$LOG/chain.log"
-sbt -batch test > "$LOG/test.log" 2>&1
-echo "=== sbt test done rc=$? $(date +%T) ===" | tee -a "$LOG/chain.log"
-
-run linearity graft.tools.ScaleBench linearity
-run workload graft.tools.ScaleBench workload
-run ann      graft.tools.ScaleBench ann
-run decode   graft.tools.ScaleBench decode
-SPARK_GRAFT_SCALE_ROUNDS=2 run protocol graft.tools.ScaleBench protocol sf0.3
+  if [ "$section" = test ]; then
+    sbt -batch test > "$LOG/$name.log" 2>&1
+  else
+    IFS=: read -r -a args <<< "$section"
+    # --add-modules: without it the SIMD MinHash kernel silently falls back
+    # to the scalar loop (MinHash.vectorKernelUsable)
+    java $ADD_OPENS --add-modules jdk.incubator.vector \
+         -Xmx$MEM -Xms$MEM -XX:+AlwaysPreTouch -XX:+UseParallelGC \
+         -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+         -cp "$CP" graft.tools.ScaleBench "${args[@]}" > "$LOG/$name.log" 2>&1
+  fi
+  echo "=== $name done rc=$? $(date +%T) ===" | tee -a "$LOG/chain.log"
+done
 echo "=== chain complete $(date +%T) ===" | tee -a "$LOG/chain.log"

@@ -53,36 +53,12 @@ object DocOps {
   def ngramDupPairsExact(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       maxDf: Int = Int.MaxValue): DataFrame = {
     val (pref, gramSets) = ngramPrefixIndex(docs, n, tau, maxDf)
-    val cand0 = pref.toDF("id_a", "g")
+    pref.toDF("id_a", "g")
       .join(pref.toDF("id_b", "g"), "g")
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    // r6: semi-filter the per-doc gram sets to candidate ids BEFORE the
-    // tokenize projection (guide §3.2) — the confirm joins are inner on
-    // doc_id, so non-candidate docs never influence the output; without the
-    // filter both join sides re-tokenize the full corpus. The candidate set
-    // is checkpointed only when the gate's size floor passes (the id pass +
-    // count consume it twice); under the floor the plan is exactly the r5
-    // shape plus one cheap docs.count.
-    val nDocs = docs.count()
-    val (cand, confirmSets) =
-      if (nDocs < graft.pipeline.Dedup.semiFilterMinRows(docs.sparkSession))
-        (cand0, gramSets)
-      else {
-        val c = cand0.localCheckpoint()
-        val sets = graft.pipeline.Dedup.confirmIdFilter(c, nDocs) match {
-          case Some(ids) =>
-            docs.join(broadcast(ids.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-              .where(size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n)
-              .select(col("doc_id"), gf.token_ngrams(col("text"), n).as("gs"))
-              .localCheckpoint()
-          case None => gramSets
-        }
-        (c, sets)
-      }
-    cand
-      .join(confirmSets.toDF("id_a", "gs_a"), "id_a")
-      .join(confirmSets.toDF("id_b", "gs_b"), "id_b")
+      .join(gramSets.toDF("id_a", "gs_a"), "id_a")
+      .join(gramSets.toDF("id_b", "gs_b"), "id_b")
       // coalesce: a bare `jaccard >= τ` predicate lets constraint inference
       // plant `isnotnull(token_ngrams(text))` filters that re-evaluate the
       // tokenize kernel under each join side (guide §4.4 duplication; same
@@ -156,16 +132,7 @@ object DocOps {
       hotThreshold: Int = 1 << 12, saltChunks: Int = 16): DataFrame = {
     val cand = minhashCandidates(docs, n, numPerm, bands, rowsPerBand,
       hotThreshold, saltChunks)
-    // r6: semi-filter the text side to candidate ids (guide §3.2) — the
-    // confirm joins are inner on doc_id, so the filter is output-identical
-    // and keeps the full corpus text out of both join shuffles
-    val base = docs.select(col("doc_id"), col("text"))
-    val texts = graft.pipeline.Dedup.confirmIdFilter(cand, docs.count()) match {
-      case Some(ids) =>
-        base.join(broadcast(ids.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-      case None => base
-    }
+    val texts = docs.select(col("doc_id"), col("text"))
     cand
       .join(texts.toDF("id_a", "text_a"), "id_a")
       .join(texts.toDF("id_b", "text_b"), "id_b")
@@ -229,17 +196,9 @@ object DocOps {
       saltChunks, keyedRows = sigs.count() * (maxHamming + 1), // sigs checkpointed
       firstAgreeBlocks = maxHamming + 1) // keys derive from sh == the carried signature
       .toDF("id_a", "id_b")
-    // r6: semi-filter the signature side to candidate ids (inner joins on
-    // doc_id ⇒ output-identical); sigs is already checkpointed, so the
-    // filtered sides are cheap broadcast filters over cached blocks
-    val confirmSigs = graft.pipeline.Dedup.confirmIdFilter(pairs, sigs.count()) match {
-      case Some(ids) =>
-        sigs.join(broadcast(ids.select(col("id").as("doc_id"))), Seq("doc_id"), "left_semi")
-      case None => sigs
-    }
     pairs
-      .join(confirmSigs.toDF("id_a", "sh_a"), "id_a")
-      .join(confirmSigs.toDF("id_b", "sh_b"), "id_b")
+      .join(sigs.toDF("id_a", "sh_a"), "id_a")
+      .join(sigs.toDF("id_b", "sh_b"), "id_b")
       .select(col("id_a"), col("id_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
   }

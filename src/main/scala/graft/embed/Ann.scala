@@ -106,6 +106,10 @@ object Ann {
     val base = emb.select(col("vec_id"), vecD(col("embedding")).as("v"))
       .withColumn("norm", sqrt(gf.vec_dot(col("v"), col("v"))))
     val n = base.count()
+    // no vectors means no centroid to seed (assign would build greatest()
+    // over zero arguments); brute force over the empty table is the same
+    // empty (query_id, neighbor_id, rank, sim) result
+    if (n == 0) return cosineTopK(emb, k, queryFilter)
     val stride = math.max(1L, n / centroids)
     def withCnorm(c: DataFrame): DataFrame =
       c.withColumn("cnorm", sqrt(gf.vec_dot(col("cvec"), col("cvec"))))

@@ -74,6 +74,32 @@ object Dedup {
   /** number of pigeonhole blocks for the configured Hamming threshold. */
   def blocksFor(cfg: Config): Int = cfg.hammingThreshold + 1
 
+  /** Scale-adaptive partition count for the walk's wide exchange (r6).
+    * The session default (`spark.sql.shuffle.partitions` = core count in
+    * the bench sessions) leaves each in-partition bv-sort with
+    * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
+    * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
+    * which brushes the execution-memory share and intermittently spills
+    * (FloorProbe: exchange+sort at 32 parts measured 6.9-20 s vs 4.2-4.6 s
+    * at 96). Deriving the width from the DATA (rows/‘rowsPerSortTask’,
+    * floored at the session default) keeps per-task sorts at a bounded
+    * ~45-70 MB at every scale — the guide §2 rule that a cluster sizes
+    * shuffle partitions to the data, not the executor count. The knob is
+    * conf-overridable for cluster tuning; partition count never affects the
+    * output set (hash partitioning by bv co-locates each bucket at any
+    * width, and everything downstream is order-insensitive).
+    * `keyedRows < 0` (unknown) keeps the session default. */
+  private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
+      keyedRows: Long): Int = {
+    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    if (keyedRows < 0) dflt
+    else {
+      val perTask = spark.conf.getOption("graft.walk.rowsPerSortTask")
+        .map(_.toLong).getOrElse(1500000L)
+      math.min(100000L, math.max(dflt.toLong, (keyedRows + perTask - 1) / perTask)).toInt
+    }
+  }
+
   /** Pair generation over an LSH-keyed frame `(id, phash, bv)`.
     *
     * ONE wide shuffle: `repartition(bv)` co-locates every bucket, a
@@ -109,32 +135,6 @@ object Dedup {
     * no-op there (no signature to re-key by), so hot buckets route STRAIGHT
     * to the terminal salt-and-replicate join — output-bound fan-out across
     * `saltChunks` tasks, the StreamingDedup.SaltChunks pattern. */
-  /** Scale-adaptive partition count for the walk's wide exchange (r6).
-    * The session default (`spark.sql.shuffle.partitions` = core count in
-    * the bench sessions) leaves each in-partition bv-sort with
-    * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
-    * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
-    * which brushes the execution-memory share and intermittently spills
-    * (FloorProbe: exchange+sort at 32 parts measured 6.9-20 s vs 4.2-4.6 s
-    * at 96). Deriving the width from the DATA (rows/‘rowsPerSortTask’,
-    * floored at the session default) keeps per-task sorts at a bounded
-    * ~45-70 MB at every scale — the guide §2 rule that a cluster sizes
-    * shuffle partitions to the data, not the executor count. The knob is
-    * conf-overridable for cluster tuning; partition count never affects the
-    * output set (hash partitioning by bv co-locates each bucket at any
-    * width, and everything downstream is order-insensitive).
-    * `keyedRows < 0` (unknown) keeps the session default. */
-  private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
-      keyedRows: Long): Int = {
-    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (keyedRows < 0) dflt
-    else {
-      val perTask = spark.conf.getOption("graft.walk.rowsPerSortTask")
-        .map(_.toLong).getOrElse(1500000L)
-      math.min(100000L, math.max(dflt.toLong, (keyedRows + perTask - 1) / perTask)).toInt
-    }
-  }
-
   private[graft] def saltedBucketPairs(keyed: DataFrame, maxHamming: Int,
       hotThreshold: Int, saltChunks: Int, keyedRows: Long = -1L,
       firstAgreeBlocks: Int = 0): DataFrame = {
@@ -230,9 +230,9 @@ object Dedup {
       val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
       val fanned = if (keyed.columns.contains("bands")) denseFirstAgreeJoin(dense)
         else denseSaltedJoin(dense)
-      // checkpoint: downstream confirm consumes the candidate set more than
-      // once (pair joins + the r6 semi-filter id pass + its count gate);
-      // without materialization each consumer re-executes the dense join
+      // checkpoint: like every other branch, hand back a materialized pair
+      // set, so a consumer that reads it more than once never re-executes
+      // the dense join
       return small.union(fanned).distinct().localCheckpoint()
     }
     // Hot path: bucket sizes for POPULAR band values grow ∝ corpus size, so
@@ -284,24 +284,6 @@ object Dedup {
       keyedRows: Long = -1L): DataFrame =
     saltedBucketPairs(keyed, maxHamming = 64, hotThreshold, saltChunks, keyedRows)
 
-  /** Streaming walk of bv-sorted rows: buffers one bucket run at a time
-    * (bounded by `hotThreshold`), emits its Hamming-filtered pairs, skips
-    * singleton runs, and reports each oversized run as one MARKER pair
-    * `(Long.MinValue, bv)` so the caller can route it to the salted hot
-    * path. Input must be sorted by bv within the partition; every row of a
-    * bv is in this partition (hash partitioned).
-    *
-    * Runs of ≥ [[BucketRunPairs.SubBucketMin]] members take a pigeonhole
-    * SUB-BUCKET pass instead of the O(n²) cursor walk: the 64 phash bits are
-    * partitioned into `maxHamming+1` interleaved classes, members are
-    * grouped by each class value, and only within-group pairs are compared
-    * (a pair within Hamming ≤ maxHamming must agree on ≥ 1 class — same
-    * pigeonhole as the block channel, applied recursively inside a bucket).
-    * Pairs are deduped by their FIRST agreeing class, so output equals the
-    * full cross-product walk exactly (BucketRunPairsSpec). Large LSH buckets
-    * are dominated by FALSE band collisions with near-random phashes, where
-    * class groups are near-singletons: measured 3.59B raw in-bucket pairs at
-    * the 4.25M-row corpus collapse to ~collision count work. */
   /** primitive-field rows for the walk's encoder boundaries: scala Tuple3 is
     * UNSPECIALIZED, so a `Dataset[(Long, Long, Long)]` decode allocates a
     * Tuple3 plus three boxed Longs per row (4 allocations × 1.36B banded
@@ -326,7 +308,26 @@ object Dedup {
       val emitted: org.apache.spark.util.LongAccumulator,
       val subSortNanos: org.apache.spark.util.LongAccumulator) extends Serializable
 
-  /** `firstAgreeBlocks` (r6): when > 0, the walk's bucket keys are the
+  /** Streaming walk of bv-sorted rows: buffers one bucket run at a time
+    * (bounded by `hotThreshold`), emits its Hamming-filtered pairs, skips
+    * singleton runs, and reports each oversized run as one MARKER pair
+    * `(Long.MinValue, bv)` so the caller can route it to the salted hot
+    * path. Input must be sorted by bv within the partition; every row of a
+    * bv is in this partition (hash partitioned).
+    *
+    * Runs of ≥ [[BucketRunPairs.SubBucketMin]] members take a pigeonhole
+    * SUB-BUCKET pass instead of the O(n²) cursor walk: the 64 phash bits are
+    * partitioned into `maxHamming+1` interleaved classes, members are
+    * grouped by each class value, and only within-group pairs are compared
+    * (a pair within Hamming ≤ maxHamming must agree on ≥ 1 class — same
+    * pigeonhole as the block channel, applied recursively inside a bucket).
+    * Pairs are deduped by their FIRST agreeing class, so output equals the
+    * full cross-product walk exactly (BucketRunPairsSpec). Large LSH buckets
+    * are dominated by FALSE band collisions with near-random phashes, where
+    * class groups are near-singletons: measured 3.59B raw in-bucket pairs at
+    * the 4.25M-row corpus collapse to ~collision count work.
+    *
+    * `firstAgreeBlocks` (r6): when > 0, the walk's bucket keys are the
     * `firstAgreeBlocks` interleaved block keys of the SAME signature carried
     * in the `phash` field (candidatesPhashBlocks; doc simhashDupPairs), and
     * a pair within Hamming ≤ maxHamming shares ≥ blocks−maxHamming of them
@@ -697,19 +698,15 @@ object Dedup {
 
   /** exact-cover candidate pairs (numeric ids): same interleaved block key,
     * Hamming-filtered in the join stage. */
-  def candidatesPhashBlocks(corpus: DataFrame, cfg: Config = defaultConfig,
-      corpusRows: Long = -1L): DataFrame = {
+  def candidatesPhashBlocks(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
     val keyed = prepared(corpus)
       .select(col("id"), col("phash"),
         explode(gf.phash_block_keys(col("phash"), blocksFor(cfg))).as("bv"))
-    // keyedRows: cheap parquet count × blocks (callers that already know the
-    // row count pass it — dupPairs shares one count between this and the
-    // confirm gate), sizing the walk exchange; firstAgreeBlocks: keys derive
-    // from the carried phash, so the walk can emit each pair only from its
-    // owning (first-agreeing) block bucket
-    val n = if (corpusRows >= 0) corpusRows else corpus.count()
+    // keyedRows: cheap parquet count × blocks, sizing the walk exchange;
+    // firstAgreeBlocks: keys derive from the carried phash, so the walk can
+    // emit each pair only from its owning (first-agreeing) block bucket
     saltedBucketPairs(keyed, cfg.hammingThreshold, hotThreshold = 1 << 20, saltChunks = 16,
-      keyedRows = n * blocksFor(cfg), firstAgreeBlocks = blocksFor(cfg))
+      keyedRows = corpus.count() * blocksFor(cfg), firstAgreeBlocks = blocksFor(cfg))
   }
 
   /** SimHash pigeonhole candidates (numeric ids): interleaved block keys
@@ -764,92 +761,17 @@ object Dedup {
       keyedRows = sigs.count() * cfg.bands)
   }
 
-  /** Pre-filter a corpus-side confirm input to the ids that actually occur
-    * in the candidate pair set (guide §3.2 "reduce the big side before
-    * shuffling it"). The confirm joins are inner equi-joins on id, so
-    * dropping rows whose id never appears in `candidates` cannot change the
-    * output — it only stops the full corpus (and the per-row tokenize that
-    * sits above it) from being shuffled into both join sides when the
-    * candidate set is orders of magnitude smaller than the corpus (at sf0.1:
-    * ~23k pairs vs 4.25M rows, i.e. ~99% of the tokenize+shuffle work fed
-    * rows the joins discarded).
-    *
-    * Adaptive gate (conf-overridable so cluster deployments retune without
-    * code changes), measured on the sf0.1 corpus both ways — a size floor
-    * on the big side (gate 0, in code below) plus:
-    *  1. SELECTIVITY pre-gate: candidate pairs must number well under the
-    *     big side's row count (`pairs · graft.confirm.semiFilterSelectivity`
-    *     ≤ bigRows, default factor 4). The dup-dense image corpus at sf0.1
-    *     (18.4M pairs over 4.25M rows) fails here instantly — engaging
-    *     there measured 8.6 s vs 4.3 s because the distinct-id shuffle, the
-    *     broadcast build and the filtered-side checkpoint outweigh removing
-    *     only ~half the corpus. The doc channels (tens of pairs over
-    *     thousands of docs) and any realistically-selective 100 TB dedup
-    *     pass it. Both counts are cheap: candidates are localCheckpoint-ed
-    *     by every caller, and the big side is a parquet count.
-    *  2. distinct-id count ≤ `graft.confirm.semiFilterMaxIds` (default 8M
-    *     ids ≈ 150-200 MB broadcast hash relation — the guide's "few
-    *     hundred MB is fine" band); ids are localCheckpoint-ed so one
-    *     materialization feeds the gate count and both join-side
-    *     broadcasts.
-    * Known non-engagement: a single mega-clique (many pairs, few ids) fails
-    * gate 1 even though the filter would be very selective — detecting it
-    * would cost the distinct-id pass on every dense corpus, which is
-    * exactly the measured regression. Returns None when a gate declines
-    * (callers keep the full-shuffle shape — output identical either way). */
-  /** gate-0 floor of [[confirmIdFilter]], exposed so callers that must
-    * decide whether to even materialize their candidate frame (the id pass
-    * consumes it twice) can short-circuit without paying a checkpoint job
-    * the declined gate would never use. */
-  private[graft] def semiFilterMinRows(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("graft.confirm.semiFilterMinRows").map(_.toLong).getOrElse(1L << 20)
-
-  private[graft] def confirmIdFilter(candidates: DataFrame, bigRows: => Long): Option[DataFrame] = {
-    val spark = candidates.sparkSession
-    def confL(key: String, dflt: Long): Long =
-      spark.conf.getOption(key).map(_.toLong).getOrElse(dflt)
-    // 0. big sides below `semiFilterMinRows` aren't worth ANY gate job: the
-    //    full-corpus confirm is already sub-second there, and the gate's
-    //    count/distinct/broadcast jobs measured a net +0.2-0.3 s on the
-    //    5000-doc sf0.1 channels. One cheap count decides.
-    if (bigRows < semiFilterMinRows(spark)) None
-    else if (candidates.count() * confL("graft.confirm.semiFilterSelectivity", 4L) > bigRows) None
-    else {
-      val ids = candidates
-        .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        .localCheckpoint()
-      if (ids.count() > confL("graft.confirm.semiFilterMaxIds", 8L << 20)) None
-      else Some(ids)
-    }
-  }
-
   /** exact confirm of (already Hamming-filtered) candidate pairs: recheck
     * Hamming, then exact token jaccard over pre-hashed token sets.
     * Both candidate channels pre-filter Hamming inside the bucket join, so
     * the surviving pair set is already tiny — fetch (phash, tok) together,
     * ONE shuffle join per side, instead of a phash-only pre-shrink pass
     * that would double the join count for no reduction.
-    * Output ids formatted back to strings.
-    *
-    * r6: the corpus side is semi-filtered to candidate ids FIRST (broadcast
-    * left-semi over the distinct candidate ids, [[confirmIdFilter]]), then
-    * tokenized, then localCheckpoint-ed so BOTH join sides read the one
-    * tiny materialized frame instead of two full corpus scans — the
-    * tokenize kernel and the confirm-join shuffles now run over ~candidate
-    * cardinality, not corpus cardinality. Join results are identical: the
-    * joins are inner on id and the filter only removes non-matching rows. */
-  def confirm(candidates: DataFrame, corpus: DataFrame, cfg: Config = defaultConfig,
-      corpusRows: Long = -1L): DataFrame = {
-    val rows = confirmIdFilter(candidates,
-      if (corpusRows >= 0) corpusRows else corpus.count()) match {
-      case Some(ids) =>
-        corpus
-          .select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
-          .join(broadcast(ids), Seq("id"), "left_semi")
-          .select(col("id"), col("phash"), gf.token_ngrams(col("caption"), 1).as("tok"))
-          .localCheckpoint()
-      case None => prepared(corpus)
-    }
+    * Output ids formatted back to strings. Building the frame runs no
+    * Spark job. */
+  def confirm(candidates: DataFrame, corpus: DataFrame,
+      cfg: Config = defaultConfig): DataFrame = {
+    val rows = prepared(corpus)
     candidates
       // shuffle_hash: broadcast builds are single-threaded driver work and
       // sort-merge would sort the fat token arrays
@@ -878,13 +800,7 @@ object Dedup {
     * lcs(a,b) ≥ L  ⇔  the char L-gram sets of a and b intersect. */
   def confirmSubstring(candidates: DataFrame, corpus: DataFrame,
       cfg: Config = defaultConfig, minLen: Int = 12): DataFrame = {
-    val base = corpus.select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
-    // r6: same candidate-id semi-filter as `confirm` — inner joins on id, so
-    // dropping never-joined corpus rows is output-identical
-    val rows = confirmIdFilter(candidates, corpus.count()) match {
-      case Some(ids) => base.join(broadcast(ids), Seq("id"), "left_semi").localCheckpoint()
-      case None => base
-    }
+    val rows = corpus.select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
     candidates
       .hint("shuffle_hash").join(rows.toDF("id_a", "phash_a", "cap_a"), "id_a")
       .hint("shuffle_hash").join(rows.toDF("id_b", "phash_b", "cap_b"), "id_b")
@@ -898,13 +814,9 @@ object Dedup {
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"), col("lcs"))
   }
 
-  /** full oracle-exact dup-pair query. One corpus count serves both the
-    * walk-exchange sizing and the confirm gate. */
-  def dupPairs(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val n = corpus.count()
-    confirm(candidatesPhashBlocks(corpus, cfg, n), corpus, cfg, corpusRows = n)
-      .select("id_a", "id_b")
-  }
+  /** full oracle-exact dup-pair query. */
+  def dupPairs(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =
+    confirm(candidatesPhashBlocks(corpus, cfg), corpus, cfg).select("id_a", "id_b")
 
   /** full minhash-channel dup-pair query. The signature projection is
     * materialized FIRST: the salted-bucket hot path re-executes its input

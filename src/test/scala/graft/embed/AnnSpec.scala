@@ -111,4 +111,11 @@ class AnnSpec extends AnyFunSuite {
     assert(r8 === 1.0, s"full probe must be exact, got $r8")
     assert(r2 > 0.15 && r2 <= r8, s"r2=$r2 r8=$r8")
   }
+
+  test("IVF on an empty embeddings table: empty result with the non-empty schema") {
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val out = Ann.ivfTopK(planted.limit(0))
+    assert(out.collect().isEmpty)
+    assert(fields(out) === fields(Ann.ivfTopK(planted, 5, 8, 2, 1, col("vec_id") < 5)))
+  }
 }

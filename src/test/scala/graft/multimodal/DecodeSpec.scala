@@ -86,26 +86,6 @@ class DecodeSpec extends AnyFunSuite {
     }
   }
 
-  test("audio stub: deterministic PCM interpretation, rms bounded") {
-    val a1 = Decode.audioMetaStub(corpus.limit(10), "image_id", "bytes").collect()
-      .map(m => m.id -> (m.n_samples, m.rms)).toMap
-    val a2 = Decode.audioMetaStub(corpus.limit(10), "image_id", "bytes").collect()
-      .map(m => m.id -> (m.n_samples, m.rms)).toMap
-    assert(a1 === a2)
-    assert(a1.values.forall { case (n, rms) => n > 0 && rms >= 0.0 && rms <= 32768.0 })
-  }
-
-  test("video frame-sample stub: chunks cover the payload exactly") {
-    val rows = corpus.limit(5).select("image_id", "bytes").collect()
-      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
-    val frames = Decode.videoFrameSampleStub(corpus.limit(5), 4, "image_id", "bytes")
-      .collect().groupBy(_.id)
-    for ((id, fs) <- frames) {
-      assert(fs.map(_.frame_idx).sorted.toSeq === Seq(0, 1, 2, 3))
-      val joined = fs.sortBy(_.frame_idx).flatMap(_.frame_bytes)
-      assert(java.util.Arrays.equals(joined, rows(id)))
-    }
-  }
   test("fast decode paths are bit-identical to the ImageIO baseline (r6)") {
     val rows = (0L until 60L).flatMap(fid => SyntheticImages.family(fid, 42L, fid * 8))
     assert(rows.exists(_.fmt == "png") && rows.exists(_.fmt == "jpeg"))

@@ -213,4 +213,33 @@ class PipelineSpec extends AnyFunSuite {
       .collect()
     assert(withLcs.forall(r => r.getAs[Int]("lcs") > 0))
   }
+
+  test("confirm and confirmSubstring build their plans without starting a Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val cands = Dedup.candidatesPhashBlocks(corpus) // eager: its jobs run before the window
+    val group = "confirm-build"
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobGroups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "building confirm plans")
+      try {
+        Dedup.confirm(cands, corpus)
+        Dedup.confirmSubstring(cands, corpus)
+      } finally sc.clearJobGroup()
+      // listener events arrive in post order: once the sentinel job's start
+      // is seen, every job the builds above started has been seen too
+      sc.setJobGroup("sentinel", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobGroups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobGroups.contains("sentinel"), "listener never saw the sentinel job")
+      assert(!jobGroups.contains(group), "building a confirm plan started a Spark job")
+    } finally sc.removeSparkListener(listener)
+  }
 }
