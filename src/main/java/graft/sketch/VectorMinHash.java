@@ -12,9 +12,9 @@ import jdk.incubator.vector.VectorSpecies;
  * min(sig[p], (a_p * fmix64(x) + b_p) ^ MIN_VALUE)} — is NOT auto-vectorized
  * by C2 on JDK 17 (long min/max SuperWord support landed in later JDKs), so
  * it runs ~1.6 ns per perm×feature: 28.7 µs/row at 128 perms × ~143
- * features (tools.SigSplit), the single largest kernel of the signature
- * stage. This class expresses the identical arithmetic through the Panama
- * Vector API; on AVX-512DQ hosts the JIT emits {@code vpmullq}/{@code
+ * features (an r6 probe, since removed), the single largest kernel of the
+ * signature stage. This class expresses the identical arithmetic through the
+ * Panama Vector API; on AVX-512DQ hosts the JIT emits {@code vpmullq}/{@code
  * vpaddq}/{@code vpxorq}/{@code vpminsq} over 8 long lanes. Every operation
  * is exact two's-complement integer arithmetic evaluated per permutation
  * slot independently, so the result is BIT-IDENTICAL to the scalar loop on

@@ -46,13 +46,9 @@ object DocOps {
     *
     * 100 TB shape: df is one groupBy on the gram hash; the prefix self-join
     * shuffles ~(1−τ) of the index, keyed on rare grams (near-uniform
-    * buckets); AQE skew-join backstops the residue. `maxDf` (legacy knob)
-    * additionally drops grams above a document-frequency cap BEFORE prefix
-    * selection — with it set, recall on pairs whose overlap is exclusively
-    * hot grams is sacrificed (documented; default keeps exactness). */
-  def ngramDupPairsExact(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
-      maxDf: Int = Int.MaxValue): DataFrame = {
-    val (pref, gramSets) = ngramPrefixIndex(docs, n, tau, maxDf)
+    * buckets); AQE skew-join backstops the residue. */
+  def ngramDupPairsExact(docs: DataFrame, n: Int = 3, tau: Double = 0.6): DataFrame = {
+    val (pref, gramSets) = ngramPrefixIndex(docs, n, tau)
     pref.toDF("id_a", "g")
       .join(pref.toDF("id_b", "g"), "g")
       .where(col("id_a") < col("id_b"))
@@ -73,7 +69,7 @@ object DocOps {
     * (BENCH/SCALE.md) can count the prefix join volume the SHIPPED query
     * shuffles, without duplicating the index construction. */
   private[graft] def ngramPrefixIndex(docs: DataFrame, n: Int = 3,
-      tau: Double = 0.6, maxDf: Int = Int.MaxValue): (DataFrame, DataFrame) = {
+      tau: Double = 0.6): (DataFrame, DataFrame) = {
     // the emptiness guard runs BEFORE the tokenize projection as a cheap
     // builtin predicate: `size(gs) > 0` collapsed into a Filter that
     // re-evaluated the token_ngrams kernel per row on top of the Project's
@@ -83,13 +79,7 @@ object DocOps {
     val gramSets = docs
       .where(size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n)
       .select(col("doc_id"), gf.token_ngrams(col("text"), n).as("gs"))
-    val grams0 = gramSets.select(col("doc_id"), explode(col("gs")).as("g"))
-    val grams =
-      if (maxDf == Int.MaxValue) grams0
-      else {
-        val dfCap = grams0.groupBy("g").agg(count(lit(1)).as("df")).where(col("df") <= maxDf)
-        grams0.join(dfCap.select("g"), "g")
-      }
+    val grams = gramSets.select(col("doc_id"), explode(col("gs")).as("g"))
     val dfc = grams.groupBy("g").agg(count(lit(1)).as("df"))
     // single-pass prefix selection: one hash aggregation per doc collects the
     // (df, g) pairs, an in-row array_sort orders them (struct order = df asc,

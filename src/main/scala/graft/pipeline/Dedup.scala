@@ -80,25 +80,25 @@ object Dedup {
     * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
     * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
     * which brushes the execution-memory share and intermittently spills
-    * (FloorProbe: exchange+sort at 32 parts measured 6.9-20 s vs 4.2-4.6 s
-    * at 96). Deriving the width from the DATA (rows/‘rowsPerSortTask’,
-    * floored at the session default) keeps per-task sorts at a bounded
-    * ~45-70 MB at every scale — the guide §2 rule that a cluster sizes
-    * shuffle partitions to the data, not the executor count. The knob is
-    * conf-overridable for cluster tuning; partition count never affects the
-    * output set (hash partitioning by bv co-locates each bucket at any
-    * width, and everything downstream is order-insensitive).
+    * (an r6 probe, since removed: exchange+sort at 32 parts measured
+    * 6.9-20 s vs 4.2-4.6 s at 96). Deriving the width from the DATA
+    * (rows/[[WalkRowsPerSortTask]], floored at the session default) keeps
+    * per-task sorts at a bounded ~45-70 MB at every scale — the guide §2
+    * rule that a cluster sizes shuffle partitions to the data, not the
+    * executor count. Partition count never affects the output set (hash
+    * partitioning by bv co-locates each bucket at any width, and everything
+    * downstream is order-insensitive).
     * `keyedRows < 0` (unknown) keeps the session default. */
   private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
       keyedRows: Long): Int = {
     val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
     if (keyedRows < 0) dflt
-    else {
-      val perTask = spark.conf.getOption("graft.walk.rowsPerSortTask")
-        .map(_.toLong).getOrElse(1500000L)
-      math.min(100000L, math.max(dflt.toLong, (keyedRows + perTask - 1) / perTask)).toInt
-    }
+    else math.min(100000L, math.max(dflt.toLong,
+      (keyedRows + WalkRowsPerSortTask - 1) / WalkRowsPerSortTask)).toInt
   }
+
+  /** banded rows per walk sort task (see [[walkPartitions]]). */
+  private val WalkRowsPerSortTask = 1500000L
 
   /** Pair generation over an LSH-keyed frame `(id, phash, bv)`.
     *
@@ -148,11 +148,12 @@ object Dedup {
     // the DEDUPED pair set is checkpointed: the raw emission stream (389M
     // pairs at the 42.5M-row corpus) is ~11× the distinct set, and
     // checkpointing it cost more block I/O than the walk itself once the
-    // storage pool was under pressure — WalkStats measured the walk+count at
-    // ~136 s vs 439 s for the walk+checkpoint+distinct stage. Markers pass
-    // through distinct unharmed (id_a = Long.MinValue never collides with a
-    // real id), so hot detection still needs no extra pass. The upstream
-    // re-executes only in the pathological hot case, filtered to hot buckets.
+    // storage pool was under pressure — a dev probe (since removed) measured
+    // the walk+count at ~136 s vs 439 s for the walk+checkpoint+distinct
+    // stage. Markers pass through distinct unharmed (id_a = Long.MinValue
+    // never collides with a real id), so hot detection still needs no extra
+    // pass. The upstream re-executes only in the pathological hot case,
+    // filtered to hot buckets.
     // (Earlier designs either re-ran the upstream per consumer — Catalyst's
     // column pruning specializes each consumer's exchange subplan so
     // ReuseExchange never fires — or checkpointed the full keyed frame or the
@@ -386,8 +387,7 @@ object Dedup {
     // its `= 0L` initializer run AFTER advance() already buffered the first
     // run, wiping state that outlives the call — curBv would read 0 for
     // every later emission from the first run (the r6 first-agree check
-    // tripped exactly this; same constructor-ordering trap radixAux
-    // documents)
+    // tripped exactly this)
     private var markerBv = 0L
     private var curBv = 0L // bv of the currently buffered run
     advance()
@@ -494,57 +494,6 @@ object Dedup {
       }
     }
 
-    // LSD radix scratch, allocated on first radix-path use (the constructor
-    // calls advance() before later field initializers would run, so an eager
-    // `val` here would still be null inside the first run's sort) and lazily
-    // sized to the largest sub-bucketed run so far (≤ cap = 8 MB); the
-    // 256-counter array is trivially cache-resident
-    private var radixAux: Array[Long] = null
-    private var radixCnt: Array[Int] = null
-
-    /** Sort the packed `(classKey << 20 | member)` run. Class keys are
-      * `floor(63/classes)+1` bits wide; for classes ≥ 4 (≤ 16 key bits —
-      * the shipped Hamming-3 config is 4) a large run takes a 2-pass stable
-      * LSD radix over the key bytes instead of `Arrays.sort`'s O(n log n)
-      * dual-pivot: the comparison sort's log factor grows with run size
-      * (max pHash occupancy 64 → 690 across sf0.1 → sf1, BENCH/SCALE.md),
-      * which was one of the two candidate explanations for the sf1 per-unit
-      * walk drift (VERDICT r3 #4). Stability makes the result IDENTICAL to
-      * `Arrays.sort`: within equal keys the input order is ascending member
-      * index, which is exactly the packed low-bit order (BucketRunPairsSpec
-      * crosses the radix threshold). Small runs and wide keys (classes ≤ 3)
-      * keep `Arrays.sort` — radix's fixed 2×256-counter overhead loses
-      * below ~256 members, and classes ≤ 3 keys exceed the 16 bits two
-      * byte passes cover. */
-    private def sortPacked(packed: Array[Long], classes: Int): Unit = {
-      val n = packed.length
-      if (classes >= 4 && n >= BucketRunPairs.RadixMin) {
-        if (radixAux == null || radixAux.length < n) radixAux = new Array[Long](n)
-        if (radixCnt == null) radixCnt = new Array[Int](256)
-        radixPass(packed, radixAux, n, 20)
-        radixPass(radixAux, packed, n, 28)
-      } else java.util.Arrays.sort(packed)
-    }
-
-    /** one stable counting pass on byte `shift..shift+7` of src into dst. */
-    private def radixPass(src: Array[Long], dst: Array[Long], n: Int, shift: Int): Unit = {
-      val cnt = radixCnt
-      java.util.Arrays.fill(cnt, 0)
-      var i = 0
-      while (i < n) { cnt(((src(i) >>> shift) & 0xffL).toInt) += 1; i += 1 }
-      var sum = 0
-      i = 0
-      while (i < 256) { val c = cnt(i); cnt(i) = sum; sum += c; i += 1 }
-      i = 0
-      while (i < n) {
-        val v = src(i)
-        val d = ((v >>> shift) & 0xffL).toInt
-        dst(cnt(d)) = v
-        cnt(d) += 1
-        i += 1
-      }
-    }
-
     /** value of the first block key on which both signatures agree — the
       * pair's owning bucket under the firstAgreeBlocks dedup. A pair within
       * Hamming ≤ blocks−1 always has one (pigeonhole), and this walk only
@@ -621,7 +570,7 @@ object Dedup {
         m = 0
         while (m < n) { packed(m) = (keys(off + m) << 20) | m; m += 1 }
         val tSort = if (counters != null) System.nanoTime() else 0L
-        sortPacked(packed, classes)
+        java.util.Arrays.sort(packed)
         if (counters != null) cSubSortNs += System.nanoTime() - tSort
         // walk equal-key groups
         var lo = 0
@@ -687,10 +636,6 @@ object Dedup {
     /** initial (and post-dense-run) capacity of the surviving-pair buffers. */
     val InitialPairBuf = 1024
 
-    /** run size at which the 2-pass LSD radix beats `Arrays.sort` (fixed
-      * 2×(256-counter fill + prefix) overhead vs the n log n comparisons). */
-    val RadixMin = 256
-
     /** surviving-pair buffer cap per run (8M pairs = 128 MB of id longs);
       * beyond it the run markers to the salted hot path. */
     val MaxBufferedPairs = 8 << 20
@@ -716,11 +661,11 @@ object Dedup {
     * This channel fits the NEAR-IDENTICAL regime only (e.g. boilerplate
     * docs, doc_simhash_dup_pairs): ~10% caption churn moves enough
     * weighted bit votes that dup-pair simhash Hamming is wide on the image
-    * corpus (measured p50=11, p99=20 — BandTune), so recall there is 0.85
-    * at blocks=8 vs ≥0.99 for the banded-MinHash channel, which remains
-    * the general-similarity path. Block width shrinks with block count
-    * (8 blocks ⇒ 8-bit keys), so bucket sizes grow ~ n/2^width — past
-    * ~10^6 rows use [[candidatesMinhash]] instead. */
+    * corpus (measured p50=11, p99=20 by a dev probe, since removed), so
+    * recall there is 0.85 at blocks=8 vs ≥0.99 for the banded-MinHash
+    * channel, which remains the general-similarity path. Block width
+    * shrinks with block count (8 blocks ⇒ 8-bit keys), so bucket sizes grow
+    * ~ n/2^width — past ~10^6 rows use [[candidatesMinhash]] instead. */
   def candidatesSimhash(sigs: DataFrame, cfg: Config = defaultConfig,
       simhashBlocks: Int = 8): DataFrame = {
     val keyed = sigs
@@ -822,9 +767,9 @@ object Dedup {
     * materialized FIRST: the salted-bucket hot path re-executes its input
     * frame filtered to hot buckets, and with signatures inline that re-run
     * repeats the entire 128-perm signature stage over the full corpus —
-    * measured 65-70 s vs 19 s at the 4.25M-row corpus (StageProbe,
-    * local[32]). One localCheckpoint of (id, phash, minhash) turns the
-    * re-run into a cached-block filter and also cuts the walk's lineage. */
+    * measured 65-70 s vs 19 s at the 4.25M-row corpus (a dev probe, since
+    * removed; local[32]). One localCheckpoint of (id, phash, minhash) turns
+    * the re-run into a cached-block filter and also cuts the walk's lineage. */
   def dupPairsMinhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
     val banded = signatures(corpus, cfg)
       .select(col("image_id"), col("phash"),

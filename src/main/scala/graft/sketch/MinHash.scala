@@ -180,12 +180,8 @@ object MinHash {
     * scalar vs 3-8 µs vectorized at 128 perms × ~143 features, the largest
     * kernel of the signature stage); both paths are bit-identical (per-JVM
     * self-test + SketchAlgebraSpec property). */
-  /** dev A/B toggle (same-JVM kernel comparison in tools.SigStage); shipped
-    * paths never touch it — it defaults on and only the probe flips it. */
-  @volatile private[graft] var simdEnabled: Boolean = true
-
   def minhashSig(features: Array[Long], affine: Array[Long]): Array[Long] =
-    if (simdEnabled && vectorKernelUsable) VectorMinHash.sig(features, affine)
+    if (vectorKernelUsable) VectorMinHash.sig(features, affine)
     else minhashSigScalar(features, affine)
 
   /** the scalar loop — fallback for JVMs without the incubator module. */

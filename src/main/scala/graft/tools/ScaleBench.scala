@@ -248,18 +248,16 @@ object ScaleBench {
         |  at sf0.1 and ${nsUnitB}%.1f ns/unit at sf1
         |  (ratio ${nsUnitB / nsUnitA}%.2f×). The super-linear wall term in the
         |  linearity series is dominated by the workload's measured growth.
-        |  units() counting each sorted element as O(1) is now exact, not an
-        |  approximation: runs past ${Dedup.BucketRunPairs.RadixMin} members
-        |  take a 2-pass LSD radix (O(n), stable, output identical to
-        |  Arrays.sort — VERDICT r3 #4), so no log-of-run-length term exists
-        |  even as max pHash occupancy grows ${a.maxPhashOcc} →
-        |  ${b.maxPhashOcc}. The in-walk sort core-time is measured directly
+        |  units() counts each sorted element as O(1), an approximation: the
+        |  sub-bucket sort is Arrays.sort, whose log-of-run-length factor grows
+        |  with max pHash occupancy (${a.maxPhashOcc} →
+        |  ${b.maxPhashOcc}). The in-walk sort core-time is measured directly
         |  (column above): ${sortNsElemA}%.1f ns/sorted-elem at sf0.1 vs
         |  ${sortNsElemB}%.1f ns/sorted-elem at sf1 (ratio
         |  ${sortNsElemB / sortNsElemA}%.2f×), ${sortShareB * 100}%.0f%% of
-        |  32-core-equivalent walk time at sf1 — so the sort neither carries
-        |  a super-linear term nor dominates the drift. The residual per-unit
-        |  drift is attributable to the larger-than-cache working set of the
+        |  32-core-equivalent walk time at sf1 — the sort's log term shows in
+        |  that ratio, and its share bounds how much of the drift it carries.
+        |  The residual per-unit drift is attributable to the larger-than-cache working set of the
         |  10× banded exchange (1.36B rows through one box's DRAM and storage
         |  pool), not a candidate-volume blow-up (emitted pairs and confirmed
         |  edges per row stay flat).

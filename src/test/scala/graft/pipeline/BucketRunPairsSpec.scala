@@ -81,14 +81,13 @@ class BucketRunPairsSpec extends AnyFunSuite {
     assert(walk(h0, 0, 4096).toSet === brute(h0, 0, 4096))
   }
 
-  test("radix-sorted runs == brute force across the RadixMin threshold") {
-    // runs straddling BucketRunPairs.RadixMin (Arrays.sort below, 2-pass LSD
-    // radix above) with HEAVY class-key duplication — phashes drawn from a
-    // tiny pool so most sub-bucket groups have many members, stressing the
-    // radix passes' stability (within-group member order must stay ascending
-    // for the first-agreeing-class dedup to mirror the sorted walk)
+  test("sub-sorted large runs == brute force across 255-768 members") {
+    // large sub-bucketed runs with HEAVY class-key duplication — phashes
+    // drawn from a tiny pool so most sub-bucket groups have many members
+    // (within-group member order must stay ascending for the
+    // first-agreeing-class dedup to mirror the sorted walk)
     val rnd = new scala.util.Random(13)
-    val rm = Dedup.BucketRunPairs.RadixMin
+    val rm = 256
     for ((runLen, trial) <- Seq(rm - 1, rm, rm + 1, rm * 3).zipWithIndex) {
       val pool = Array.fill(8)(rnd.nextLong())
       var id = 0L

@@ -1,0 +1,105 @@
+package graft.pipeline
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.data.SyntheticImages
+import graft.docs.DocOps
+import graft.spark.{functions => gf}
+
+/** Empty, single-row, null/empty-caption and exact-twin inputs through the
+  * image channels and the doc channels: none may throw, and each yields the
+  * pair and cluster counts pinned below. */
+class DegenerateInputSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** one real generated row: a caption and pHash the channels accept. */
+  private lazy val sample = SyntheticImages.family(7L, 42L, 0L).head
+
+  private def images(rows: Seq[(String, Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("image_id", "phash", "caption")
+  }
+
+  private def docs(rows: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "text")
+  }
+
+  private lazy val empty = images(Seq.empty)
+  private lazy val single = images(Seq(("img_0000000001", sample.phash, sample.caption)))
+  private lazy val blankCaptions = images(Seq(
+    ("img_0000000001", sample.phash, null), ("img_0000000002", sample.phash, null),
+    ("img_0000000003", sample.phash, ""), ("img_0000000004", sample.phash, "")))
+  private lazy val twins = images(Seq(
+    ("img_0000000001", sample.phash, sample.caption),
+    ("img_0000000002", sample.phash, sample.caption)))
+
+  private def pairCount(df: DataFrame): Long = df.select("id_a", "id_b").count()
+
+  /** the north-star chain as `Bench.pipelineE2E` runs it:
+    * (confirmed pairs, cluster rows, rows summed over the partition metrics). */
+  private def northStar(corpus: DataFrame): (Long, Long, Long) = {
+    val cfg = Dedup.defaultConfig
+    val sigs = Dedup.signatures(corpus)
+      .select(col("image_id"), col("phash"), col("simhash"),
+        gf.band_keys(col("minhash"), cfg.bands, cfg.rowsPerBand).as("bands"))
+      .cache()
+    try {
+      val edges = Dedup.confirm(Dedup.candidatesFromBands(sigs, cfg), corpus)
+        .select("id_a", "id_b")
+      val clustered = Dedup.clusters(edges, corpus.select("image_id"))
+      val metricRows = Dedup.partitionMetrics(clustered)
+        .agg(coalesce(sum("rows"), lit(0L))).head().getLong(0)
+      (edges.count(), clustered.count(), metricRows)
+    } finally sigs.unpersist()
+  }
+
+  /** pair counts of the four image pair queries beside the north-star chain. */
+  private def channels(corpus: DataFrame): Seq[Long] = Seq(
+    pairCount(Dedup.dupPairs(corpus)),
+    pairCount(Dedup.dupPairsMinhash(corpus)),
+    pairCount(Dedup.dupPairsSimhash(corpus)),
+    pairCount(Dedup.confirmSubstring(Dedup.candidatesPhashBlocks(corpus), corpus)))
+
+  test("empty corpus: no pairs, no cluster rows") {
+    assert(northStar(empty) === ((0L, 0L, 0L)))
+    assert(channels(empty) === Seq(0L, 0L, 0L, 0L))
+  }
+
+  test("single-row corpus: one cluster row, no pairs") {
+    assert(northStar(single) === ((0L, 1L, 1L)))
+    assert(channels(single) === Seq(0L, 0L, 0L, 0L))
+  }
+
+  test("null and empty captions on one pHash: no pairs") {
+    assert(northStar(blankCaptions) === ((0L, 4L, 4L)))
+    assert(channels(blankCaptions) === Seq(0L, 0L, 0L, 0L))
+  }
+
+  test("two identical rows: exactly one pair in every channel") {
+    assert(northStar(twins) === ((1L, 2L, 2L)))
+    assert(channels(twins) === Seq(1L, 1L, 1L, 1L))
+    val clusterIds = Dedup.clusters(Dedup.dupPairs(twins), twins.select("image_id"))
+      .select("cluster_id").distinct().collect().map(_.getString(0))
+    assert(clusterIds.toSeq === Seq("img_0000000001"))
+  }
+
+  test("doc channels on an empty and a single-row table: no pairs") {
+    for (d <- Seq(docs(Seq.empty), docs(Seq((1L, "the quick brown fox jumps over it"))))) {
+      assert(DocOps.ngramDupPairsExact(d).count() === 0L)
+      assert(DocOps.minhashDupPairs(d).count() === 0L)
+      assert(DocOps.simhashDupPairs(d).count() === 0L)
+    }
+  }
+}

@@ -70,9 +70,10 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     // confirm applies the same exact predicate, so precision is 1.0
     assert(sh.subsetOf(exact))
-    // image captions churn ~10% of tokens → wide simhash Hamming (BandTune:
-    // p50=11); the channel is documented as near-identical-regime only, and
-    // its measured recall there is ~0.85 — assert it stays in that band
+    // image captions churn ~10% of tokens → wide simhash Hamming (a dev
+    // probe, since removed, measured p50=11); the channel is documented as
+    // near-identical-regime only, and its measured recall there is ~0.85 —
+    // assert it stays in that band
     val recall = sh.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.75, s"simhash-channel recall $recall (${sh.size} vs ${exact.size})")
   }
