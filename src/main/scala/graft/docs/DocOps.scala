@@ -2,6 +2,7 @@ package graft.docs
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Dedup
 import graft.spark.{functions => gf}
 
 /** Training-data pipeline operators over a `documents(doc_id, text, lang,
@@ -18,6 +19,14 @@ import graft.spark.{functions => gf}
 object DocOps {
 
   private val toks: Column = split(col("text"), " ")
+
+  /** docs with at least one token n-gram: #whitespace tokens ≥ n (null text
+    * fails too). Applied BEFORE a tokenize projection as a cheap builtin
+    * predicate: `size(token_ngrams(text, n)) > 0` collapsed into a Filter
+    * that re-evaluated the token_ngrams kernel per row on top of the
+    * Project's own evaluation (cross-operator subtrees get no CSE). */
+  private def hasNgrams(n: Int): Column =
+    size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n
 
   /** exact duplicate grouping: canon_id = min doc_id with identical text. */
   def exactDupGroups(docs: DataFrame): DataFrame = {
@@ -70,14 +79,7 @@ object DocOps {
     * shuffles, without duplicating the index construction. */
   private[graft] def ngramPrefixIndex(docs: DataFrame, n: Int = 3,
       tau: Double = 0.6): (DataFrame, DataFrame) = {
-    // the emptiness guard runs BEFORE the tokenize projection as a cheap
-    // builtin predicate: `size(gs) > 0` collapsed into a Filter that
-    // re-evaluated the token_ngrams kernel per row on top of the Project's
-    // own evaluation (cross-operator subtrees get no CSE). size(token_ngrams
-    // (text, n)) > 0  ⇔  #whitespace tokens ≥ n, and both forms drop null
-    // text, so the kept row set is identical.
-    val gramSets = docs
-      .where(size(filter(split(col("text"), "\\s+"), t => t =!= "")) >= n)
+    val gramSets = docs.where(hasNgrams(n))
       .select(col("doc_id"), gf.token_ngrams(col("text"), n).as("gs"))
     val grams = gramSets.select(col("doc_id"), explode(col("gs")).as("g"))
     val dfc = grams.groupBy("g").agg(count(lit(1)).as("df"))
@@ -114,14 +116,13 @@ object DocOps {
     * materializes that bucket's full O(n²) cross product inside one skewed
     * partition (AQE can split the partition but not shrink the candidate
     * volume). The walk streams cold buckets from a tight loop and fans hot
-    * buckets across `saltChunks` tasks via salt-and-replicate — the same
+    * buckets across salted tasks via salt-and-replicate — the same
     * machinery the image channel uses (planted-boilerplate case in
     * DocOpsSpec mirrors SaltingSpec). */
   def minhashDupPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
-      hotThreshold: Int = 1 << 12, saltChunks: Int = 16): DataFrame = {
-    val cand = minhashCandidates(docs, n, numPerm, bands, rowsPerBand,
-      hotThreshold, saltChunks)
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
+    val cand = minhashCandidates(docs, n, numPerm, bands, rowsPerBand, hotThreshold)
     val texts = docs.select(col("doc_id"), col("text"))
     cand
       .join(texts.toDF("id_a", "text_a"), "id_a")
@@ -131,14 +132,11 @@ object DocOps {
   }
 
   /** the minhash channel's candidate stage (distinct in-bucket pairs),
-    * exposed for the docskew scale instrument (BENCH/SCALE.md).
-    * `firstAgreeDedup = false` drops the bandsById hand-off so the hot
-    * fan-out reverts to per-bucket emission — the A/B control. */
+    * exposed for the docskew scale instrument (BENCH/SCALE.md). */
   private[graft] def minhashCandidates(docs: DataFrame, n: Int = 3,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
-      hotThreshold: Int = 1 << 12, saltChunks: Int = 16,
-      firstAgreeDedup: Boolean = true): DataFrame = {
-    // the banded frame is materialized BEFORE the explode: the walk's hot
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
+    // the banded frame is materialized BEFORE the walk's explode: the hot
     // path re-executes its input filtered to hot buckets, and with the
     // signature inline that re-run would repeat the 128-perm stage over the
     // full corpus (the Dedup.dupPairsMinhash lesson); the band-key arrays
@@ -148,24 +146,16 @@ object DocOps {
         gf.minhash_sig(gf.token_ngrams(col("text"), n), numPerm, 42L),
         bands, rowsPerBand).as("bands"))
       .localCheckpoint()
-    // carrying `bands` on the keyed frame engages the first-agreeing-band
-    // dedup of the hot fan-out: band keys mix the band index
-    // (MinHash.bandKeys), so a bucket's bv IS the shared band value and each
-    // hot pair crosses the distinct exchange once instead of once per
-    // agreeing band; the walk's own select prunes the array off the wide
-    // exchange
-    val keyed =
-      if (firstAgreeDedup)
-        banded.select(col("id"), lit(0L).as("phash"), explode(col("bands")).as("bv"),
-          col("bands"))
-      else banded.select(col("id"), lit(0L).as("phash"), explode(col("bands")).as("bv"))
-    graft.pipeline.Dedup.saltedAllPairs(keyed, hotThreshold, saltChunks,
+    Dedup.saltedAllPairs(banded, hotThreshold,
       keyedRows = banded.count() * bands) // banded is checkpointed — cheap count
       .toDF("id_a", "id_b")
   }
 
   /** SimHash near-dup pairs: 64-bit SimHash over token n-grams, pigeonhole
-    * block keys (exact cover of Hamming ≤ blocks−1), Hamming filter.
+    * block keys (exact cover of Hamming ≤ blocks−1), Hamming filter. Docs
+    * with fewer than `n` tokens have no n-gram, so they are dropped (as in
+    * the exact and MinHash channels) instead of all sharing the empty-set
+    * simhash.
     *
     * Runs through the full [[graft.pipeline.Dedup.saltedBucketPairs]]
     * machinery with the simhash as the walk's Hamming-filter signature —
@@ -176,14 +166,14 @@ object DocOps {
     * 64 bit positions into `blocks` classes preserves the exact cover, so
     * the Hamming-filtered output is identical. */
   def simhashDupPairs(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
-      hotThreshold: Int = 1 << 20, saltChunks: Int = 16): DataFrame = {
-    val sigs = docs.select(col("doc_id"),
+      hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
+    val sigs = docs.where(hasNgrams(n)).select(col("doc_id"),
       gf.simhash64(gf.token_ngrams(col("text"), n)).as("sh"))
       .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
     val keyed = sigs.select(col("doc_id").as("id"), col("sh").as("phash"),
       explode(gf.phash_block_keys(col("sh"), maxHamming + 1)).as("bv"))
-    val pairs = graft.pipeline.Dedup.saltedBucketPairs(keyed, maxHamming, hotThreshold,
-      saltChunks, keyedRows = sigs.count() * (maxHamming + 1), // sigs checkpointed
+    val pairs = Dedup.saltedBucketPairs(keyed, maxHamming, hotThreshold,
+      keyedRows = sigs.count() * (maxHamming + 1), // sigs checkpointed
       firstAgreeBlocks = maxHamming + 1) // keys derive from sh == the carried signature
       .toDF("id_a", "id_b")
     pairs

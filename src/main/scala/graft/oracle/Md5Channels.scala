@@ -2,6 +2,7 @@ package graft.oracle
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Dedup
 
 /** Cross-engine-deterministic dedup channels: every per-element hash is
   * md5-derived (two 32-bit halves of the hex digest packed into an int64),
@@ -172,11 +173,10 @@ object Md5Channels {
     * salted tasks instead of materializing a skewed self-join partition. */
   def docMinhashDupPairsMd5(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 32, bands: Int = 16, r: Int = 2,
-      hotThreshold: Int = 1 << 12, saltChunks: Int = 16): DataFrame = {
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
     val grams = tokenNgramStrings(col("text"), n)
-    // walk-key array in band order engages the first-agreeing-band dedup
-    // of the hot fan-out (pair set unchanged — owning key is a shared walk
-    // key, so both members sit in its bucket)
+    // `bands` keeps band order: saltedAllPairs' hot fan-out owns each pair
+    // by its first agreeing band key
     val sigs = docs
       .where(size(split(col("text"), " ")) >= n)
       .select(col("doc_id"), grams.as("grams"))
@@ -188,11 +188,8 @@ object Md5Channels {
       // both confirm joins re-read the gram sets (the Dedup.dupPairsMinhash
       // lesson — un-checkpointed, the upstream runs 3-4×)
       .localCheckpoint()
-    val keyed = sigs.select(col("doc_id"), col("bands"))
-      .select(col("doc_id").as("id"), lit(0L).as("phash"),
-        explode(col("bands")).as("bv"), col("bands"))
-    val cand = graft.pipeline.Dedup.saltedAllPairs(keyed, hotThreshold, saltChunks)
-      .toDF("id_a", "id_b")
+    val cand = Dedup.saltedAllPairs(sigs.select(col("doc_id").as("id"), col("bands")),
+      hotThreshold).toDF("id_a", "id_b")
     val gsets = sigs.select(col("doc_id"), col("grams"))
     cand
       .join(gsets.toDF("id_a", "g_a"), "id_a")
@@ -210,7 +207,7 @@ object Md5Channels {
     * signature; the combined walk key `bi·2^width + bv` is injective, so
     * bucketing is identical to the oracle's (bi, bv) join. */
   def docSimhashDupPairsMd5(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
-      hotThreshold: Int = 1 << 20, saltChunks: Int = 16): DataFrame = {
+      hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
     val blocks = maxHamming + 1
     val width = 64 / blocks
     val sigs = docs
@@ -222,7 +219,7 @@ object Md5Channels {
       .select(col("doc_id"), col("sh"), explode(contiguousBlocks(col("sh"), blocks)).as("blk"))
       .select(col("doc_id").as("id"), col("sh").as("phash"),
         (col("blk.bi").cast("long") * (1L << width) + col("blk.bv")).as("bv"))
-    graft.pipeline.Dedup.saltedBucketPairs(keyed, maxHamming, hotThreshold, saltChunks)
+    Dedup.saltedBucketPairs(keyed, maxHamming, hotThreshold)
       .toDF("id_a", "id_b")
       .join(sigs.toDF("id_a", "sh_a"), "id_a")
       .join(sigs.toDF("id_b", "sh_b"), "id_b")
@@ -235,11 +232,10 @@ object Md5Channels {
     * token jaccard ≥ tau (the dup_pairs predicate). */
   def imgMinhashDupPairsMd5(corpus: DataFrame, ht: Int = 3, tau: Double = 0.5,
       numPerm: Int = 32, bands: Int = 16, r: Int = 2,
-      hotThreshold: Int = 1 << 12, saltChunks: Int = 16): DataFrame = {
-    import graft.pipeline.Dedup.{idNum, idStr, saltedAllPairs}
-    // the walk-key ARRAY (band order) rides along as `bands`, engaging the
-    // first-agreeing-band dedup of the hot fan-out (same pair set — the
-    // owning key is a shared walk key, so both members sit in its bucket)
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
+    import Dedup.{idNum, idStr}
+    // `bands` keeps band order: saltedAllPairs' hot fan-out owns each pair
+    // by its first agreeing band key
     val sigs = corpus.select(col("image_id"), col("phash"),
       tokenNgramStrings(col("caption"), 1).as("toks"))
       .select(col("image_id"), col("phash"), col("toks"),
@@ -248,10 +244,8 @@ object Md5Channels {
       // one computation of the md5 token-hash + xor-min + band-key stage
       // (walk hot-path re-read + both confirm joins re-consume it)
       .localCheckpoint()
-    val keyed = sigs.select(col("image_id"), col("bands"))
-      .select(idNum(col("image_id")).as("id"), lit(0L).as("phash"),
-        explode(col("bands")).as("bv"), col("bands"))
-    val cand = saltedAllPairs(keyed, hotThreshold, saltChunks)
+    val cand = Dedup.saltedAllPairs(
+        sigs.select(idNum(col("image_id")).as("id"), col("bands")), hotThreshold)
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"))
     confirmTokens(cand, sigs.select(col("image_id"), col("phash"), col("toks")), ht, tau)
   }
@@ -261,8 +255,8 @@ object Md5Channels {
     * Hamming-filtered on phash (mirrors Dedup.candidatesSimhash, which
     * Hamming-filters inside the bucket walk); confirm = dup_pairs predicate. */
   def imgSimhashDupPairs(corpus: DataFrame, ht: Int = 3, tau: Double = 0.5,
-      simhashBlocks: Int = 4, hotThreshold: Int = 1 << 20, saltChunks: Int = 16): DataFrame = {
-    import graft.pipeline.Dedup.{idNum, idStr, saltedBucketPairs}
+      simhashBlocks: Int = 4, hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
+    import Dedup.{idNum, idStr}
     val width = 64 / simhashBlocks
     val sigs = corpus.select(col("image_id"), col("phash"),
       tokenNgramStrings(col("caption"), 1).as("toks"))
@@ -275,7 +269,7 @@ object Md5Channels {
         explode(contiguousBlocks(col("sh"), simhashBlocks)).as("blk"))
       .select(idNum(col("image_id")).as("id"), col("phash"),
         (col("blk.bi").cast("long") * (1L << width) + col("blk.bv")).as("bv"))
-    val cand = saltedBucketPairs(keyed, ht, hotThreshold, saltChunks)
+    val cand = Dedup.saltedBucketPairs(keyed, ht, hotThreshold)
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"))
     confirmTokens(cand, sigs.select(col("image_id"), col("phash"), col("toks")), ht, tau)
   }

@@ -100,142 +100,87 @@ object Dedup {
   /** banded rows per walk sort task (see [[walkPartitions]]). */
   private val WalkRowsPerSortTask = 1500000L
 
-  /** Pair generation over an LSH-keyed frame `(id, phash, bv)`.
+  /** Hot-bucket policy of every channel: a walk buffers at most
+    * `hotThreshold` members of one bucket run, and a longer run is hot.
+    * Hamming walks afford 2^20 (≈ 16 MB/task); all-pairs walks emit every
+    * in-run pair from ONE task, so runs past 2^12 take the salted fan-out
+    * across `SaltChunks` tasks. The salt count only spreads work; it never
+    * changes a pair set. */
+  private[graft] val HammingHotCap: Int = 1 << 20
+  private[graft] val AllPairsHotCap: Int = 1 << 12
+  private[graft] val SaltChunks: Int = 16
+
+  /** One streaming walk over a keyed frame `(bv, id, phash)`: ONE wide
+    * shuffle (`repartition(bv)` co-locates every bucket), a bv-sort within
+    * each partition makes buckets contiguous runs, and [[BucketRunPairs]]
+    * emits each run's Hamming-filtered pairs. Returns the hot bucket keys
+    * (runs past `hotThreshold`) and the deduped, checkpointed pair set of
+    * every other run.
     *
-    * ONE wide shuffle: `repartition(bv)` co-locates every bucket, a
-    * bv-sort within each partition makes buckets contiguous *runs*, and a
-    * streaming per-partition walk ([[BucketRunPairs]]) emits each run's
-    * Hamming-filtered cross product from a tight primitive loop. Singleton
-    * runs (typically 90%+ of banded rows) are skipped with ZERO allocation,
-    * and the raw cross product (10-100× the surviving pairs) never
-    * materializes — earlier formulations paid for both (a self-join
-    * shuffled the banded set four times and materialized every in-bucket
-    * pair; a `collect_list` aggregation built buffers for tens of millions
-    * of singleton buckets it then threw away).
+    * The walk STREAMS straight into the dedup exchange and only the DEDUPED
+    * pair set is checkpointed: the raw emission stream (389M pairs at the
+    * 42.5M-row corpus) is ~11× the distinct set, and checkpointing it cost
+    * more block I/O than the walk itself once the storage pool was under
+    * pressure — a dev probe (since removed) measured the walk+count at
+    * ~136 s vs 439 s for the walk+checkpoint+distinct stage. An oversized
+    * run is emitted as one MARKER row (id_a = Long.MinValue, id_b = bv),
+    * which passes distinct unharmed (never collides with a real id), so hot
+    * detection needs no extra pass; the caller re-reads its input only in
+    * the hot case, filtered to hot buckets. */
+  private def runWalk(kf: DataFrame, maxHamming: Int, hotThreshold: Int,
+      walkParts: Int, firstAgreeBlocks: Int): (Array[Long], DataFrame) = {
+    val spark = kf.sparkSession
+    import spark.implicits._
+    // marker count travels back on an accumulator (populated by the eager
+    // localCheckpoint of the DEDUPED frame). Task retries can only inflate
+    // the count (the walk is deterministic), and it is only tested against
+    // zero; the hot bv collect scans the small deduped checkpoint.
+    val markers = spark.sparkContext.longAccumulator("graft.dedup.hotMarkers")
+    val deduped = kf.select(col("bv"), col("id"), col("phash"))
+      .repartition(walkParts, col("bv"))
+      .sortWithinPartitions(col("bv"))
+      .as[BandedRow]
+      .mapPartitions(it => new BucketRunPairs(it, maxHamming, hotThreshold,
+        markers = markers, firstAgreeBlocks = firstAgreeBlocks))
+      .toDF("id_a", "id_b")
+      .distinct()
+      .localCheckpoint()
+    val hotBvs = if (markers.value == 0L) Array.empty[Long]
+      else deduped.where(col("id_a") === Long.MinValue)
+        .select(col("id_b")).as[Long].collect()
+    (hotBvs, deduped.where(col("id_a") =!= Long.MinValue))
+  }
+
+  /** Hamming-filtered pair generation over an LSH-keyed frame
+    * `(id, phash, bv)`: every pair that shares a bucket and lies within
+    * `maxHamming` of each other on `phash`, deduped.
+    *
+    * One [[runWalk]] in the common case. Singleton runs (typically 90%+ of
+    * banded rows) are skipped with ZERO allocation, and the raw cross
+    * product (10-100× the surviving pairs) never materializes — earlier
+    * formulations paid for both (a self-join shuffled the banded set four
+    * times and materialized every in-bucket pair; a `collect_list`
+    * aggregation built buffers for tens of millions of singleton buckets it
+    * then threw away).
     *
     * Popular band values (bucket size grows ∝ corpus size) never take a raw
     * O(n²) walk: runs past [[BucketRunPairs.SubBucketMin]] are pigeonhole
-    * sub-bucketed IN the walk, up to the `hotThreshold` buffer cap (2^20
-    * members ≈ 16 MB/task — at the 42.5M-row corpus the largest bucket is
-    * 135k members, so every bucket is handled inline). Buckets past the cap
-    * marker out to a REFINEMENT pass: members re-keyed by (bv,
+    * sub-bucketed IN the walk, up to the `hotThreshold` buffer cap. Buckets
+    * past the cap go to a REFINEMENT pass: members re-keyed by (bv,
     * interleaved-phash-class key) and walked again, collapsing false
     * collisions to ~output-size work; only genuine mega-duplicate clusters
     * (a phash class shared verbatim past the cap, output inherently O(n²)
-    * pairs) fall through to a terminal salt-and-replicate self-join fanned
-    * across `saltChunks` tasks. All branches emit exactly the
-    * Hamming-filtered per-bucket cross product — correctness unchanged,
-    * verified by SaltingSpec and the DuckDB oracle gate.
-    *
-    * ALL-PAIRS mode (`maxHamming >= 64`, see [[saltedAllPairs]]): the
-    * Hamming predicate passes every pair, turning the walk into a
-    * skew-hardened in-bucket cross product — the candidate generator the
-    * doc LSH channels need (their confirm predicate lives downstream over
-    * token sets the walk never sees). The pigeonhole refinement pass is a
-    * no-op there (no signature to re-key by), so hot buckets route STRAIGHT
-    * to the terminal salt-and-replicate join — output-bound fan-out across
-    * `saltChunks` tasks, the StreamingDedup.SaltChunks pattern. */
+    * pairs) fall through to the terminal [[denseSaltedJoin]] fanned across
+    * [[SaltChunks]] tasks. All branches emit exactly the Hamming-filtered
+    * per-bucket cross product — verified by SaltingSpec and the DuckDB
+    * oracle gate. */
   private[graft] def saltedBucketPairs(keyed: DataFrame, maxHamming: Int,
-      hotThreshold: Int, saltChunks: Int, keyedRows: Long = -1L,
+      hotThreshold: Int = HammingHotCap, keyedRows: Long = -1L,
       firstAgreeBlocks: Int = 0): DataFrame = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    val walkParts = walkPartitions(spark, keyedRows)
-    // ONE pass of the expensive upstream in the common case: the walk
-    // consumes the single wide shuffle and, when it meets an oversized run,
-    // emits a MARKER row (id_a = Long.MinValue, id_b = bv) instead of that
-    // run's pairs. The walk STREAMS straight into the dedup exchange and only
-    // the DEDUPED pair set is checkpointed: the raw emission stream (389M
-    // pairs at the 42.5M-row corpus) is ~11× the distinct set, and
-    // checkpointing it cost more block I/O than the walk itself once the
-    // storage pool was under pressure — a dev probe (since removed) measured
-    // the walk+count at ~136 s vs 439 s for the walk+checkpoint+distinct
-    // stage. Markers pass through distinct unharmed (id_a = Long.MinValue
-    // never collides with a real id), so hot detection still needs no extra
-    // pass. The upstream re-executes only in the pathological hot case,
-    // filtered to hot buckets.
-    // (Earlier designs either re-ran the upstream per consumer — Catalyst's
-    // column pruning specializes each consumer's exchange subplan so
-    // ReuseExchange never fires — or checkpointed the full keyed frame or the
-    // raw emission stream, whose extra GBs of block I/O erased the win in the
-    // bandwidth-bound 32-core regime.)
-    def runWalk(kf: DataFrame, fab: Int): (Array[Long], DataFrame) = {
-      // marker count travels back on an accumulator (populated by the eager
-      // localCheckpoint of the DEDUPED frame). Task retries can only inflate
-      // the count (the walk is deterministic), and it is only tested against
-      // zero; the hot bv collect scans the small deduped checkpoint.
-      val markers = spark.sparkContext.longAccumulator("graft.dedup.hotMarkers")
-      val deduped = kf.select(col("bv"), col("id"), col("phash"))
-        .repartition(walkParts, col("bv"))
-        .sortWithinPartitions(col("bv"))
-        .as[BandedRow]
-        .mapPartitions(it => new BucketRunPairs(it, maxHamming, hotThreshold,
-          markers = markers, firstAgreeBlocks = fab))
-        .toDF("id_a", "id_b")
-        .distinct()
-        .localCheckpoint()
-      val hotBvs = if (markers.value == 0L) Array.empty[Long]
-        else deduped.where(col("id_a") === Long.MinValue)
-          .select(col("id_b")).as[Long].collect()
-      (hotBvs, deduped.where(col("id_a") =!= Long.MinValue))
-    }
-    // the terminal salt-and-replicate self-join over a (bv, id, phash) frame
-    // of pair-dense buckets: each bucket's full Hamming-filtered cross
-    // product, fanned across `saltChunks` tasks (work is output-bound)
-    def denseSaltedJoin(dense: DataFrame): DataFrame = {
-      val denseLeft = dense
-        .select(col("bv"), col("id").as("id_a"), col("phash").as("phash_a"),
-          pmod(col("id"), lit(saltChunks.toLong)).as("salt"))
-      val denseRight = dense
-        .select(col("bv"), col("id").as("id_b"), col("phash").as("phash_b"),
-          explode(sequence(lit(0L), lit(saltChunks.toLong - 1))).as("salt"))
-      // the dense self-join sides are the same order of magnitude — force a
-      // shuffled hash join so Catalyst never tries to broadcast-build them
-      denseLeft.hint("shuffle_hash").join(denseRight, Seq("bv", "salt"))
-        .where(col("id_a") < col("id_b") &&
-          bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= maxHamming)
-        .select("id_a", "id_b")
-    }
-    // first-agreeing-band dedup of the all-pairs dense fan-out (engaged when
-    // the caller's keyed frame carries a `bands` column — the walk's select
-    // prunes it off the wide exchange, so only this small dense re-read
-    // materializes the arrays): a pair whose members share k of the b band
-    // keys is otherwise emitted from ALL k of its hot buckets — b× the
-    // distinct-exchange volume for a boilerplate mega-cluster hot in every
-    // band. Each pair is owned by its FIRST agreeing band key; this join
-    // emits it only from the owning bucket (`first_agree_key == bv`).
-    // LOSSLESS: the owning key is a shared band value, so both members sit
-    // in the owning bucket — if that bucket is hot, its own dense join emits
-    // the pair; if cold, the streaming walk already emitted it. The filter
-    // fuses into the join under whole-stage codegen, so suppressed
-    // duplicates never reach the exchange. DocOpsSpec asserts the pair set
-    // against brute force with the dense path forced.
-    def denseFirstAgreeJoin(dense: DataFrame): DataFrame = {
-      val left = dense
-        .select(col("bv"), col("id").as("id_a"), col("bands").as("bands_a"),
-          pmod(col("id"), lit(saltChunks.toLong)).as("salt"))
-      val right = dense
-        .select(col("bv"), col("id").as("id_b"), col("bands").as("bands_b"),
-          explode(sequence(lit(0L), lit(saltChunks.toLong - 1))).as("salt"))
-      left.hint("shuffle_hash").join(right, Seq("bv", "salt"))
-        .where(col("id_a") < col("id_b") &&
-          gf.first_agree_key(col("bands_a"), col("bands_b")) === col("bv"))
-        .select("id_a", "id_b")
-    }
-    val (hotBvs, small) = runWalk(keyed, firstAgreeBlocks)
+    require(maxHamming < 64, "all-pairs generation runs through saltedAllPairs")
+    val walkParts = walkPartitions(keyed.sparkSession, keyedRows)
+    val (hotBvs, small) = runWalk(keyed, maxHamming, hotThreshold, walkParts, firstAgreeBlocks)
     if (hotBvs.isEmpty) return small
-    if (maxHamming >= 64) {
-      // all-pairs mode: no signature to pigeonhole-refine by — every hot
-      // bucket is pair-dense by definition (its output IS the cross
-      // product), so skip the refinement pass and fan it out directly
-      val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
-      val fanned = if (keyed.columns.contains("bands")) denseFirstAgreeJoin(dense)
-        else denseSaltedJoin(dense)
-      // checkpoint: like every other branch, hand back a materialized pair
-      // set, so a consumer that reads it more than once never re-executes
-      // the dense join
-      return small.union(fanned).distinct().localCheckpoint()
-    }
     // Hot path: bucket sizes for POPULAR band values grow ∝ corpus size, so
     // any raw per-bucket cross product is quadratic in N (measured at sf1:
     // 249 hot buckets, 7.1M members, 142e9 raw pairs — 62× the sf0.1 walk
@@ -259,31 +204,78 @@ object Dedup {
     // refinement pass: bucket keys are xxhash64(obv, ck) — NOT block keys —
     // so the first-agree ownership check must stay off here (it is also the
     // pass that re-emits pairs whose owning bucket was hot)
-    val (denseBvs, small2) = runWalk(refined, 0)
+    val (denseBvs, small2) = runWalk(refined, maxHamming, hotThreshold, walkParts, 0)
     if (denseBvs.isEmpty) return small.union(small2).distinct().localCheckpoint()
     // Terminal path: a refined bucket only stays hot when >hotThreshold
     // members share a phash class verbatim — a genuine mega-duplicate
-    // cluster, whose OUTPUT is inherently O(n²) pairs. Salt-and-replicate
-    // fans each such cluster across `saltChunks` tasks; the work is
+    // cluster, whose OUTPUT is inherently O(n²) pairs; the work is
     // output-bound, not an avoidable cross product.
     val dense = refined.where(col("bv").isInCollection(denseBvs)).localCheckpoint()
-    small.union(small2).union(denseSaltedJoin(dense)).distinct().localCheckpoint()
+    small.union(small2).union(denseSaltedJoin(dense, maxHamming)).distinct().localCheckpoint()
   }
 
-  /** Skew-hardened in-bucket ALL-PAIRS generation over an LSH-keyed frame
-    * `(id, phash, bv)` — [[saltedBucketPairs]] in all-pairs mode (the
-    * `phash` column is carried but never filters; pass the row's signature
-    * or `lit(0L)`). The candidate stage of the doc LSH channels: one wide
-    * shuffle, streaming run-walk for the common case, hot buckets (the
-    * boilerplate-text regime, where one band value's membership grows ∝
-    * corpus size) fan out through the terminal salt-and-replicate join
-    * instead of serializing one task or materializing a skewed self-join
-    * partition. Output = exactly the distinct per-bucket cross product
-    * (DocOpsSpec planted-boilerplate case). */
-  private[graft] def saltedAllPairs(keyed: DataFrame,
-      hotThreshold: Int = 1 << 12, saltChunks: Int = 16,
-      keyedRows: Long = -1L): DataFrame =
-    saltedBucketPairs(keyed, maxHamming = 64, hotThreshold, saltChunks, keyedRows)
+  /** the terminal salt-and-replicate self-join over a (bv, id, phash) frame
+    * of pair-dense buckets: each bucket's full Hamming-filtered cross
+    * product, fanned across [[SaltChunks]] tasks (work is output-bound). */
+  private def denseSaltedJoin(dense: DataFrame, maxHamming: Int): DataFrame = {
+    val denseLeft = dense
+      .select(col("bv"), col("id").as("id_a"), col("phash").as("phash_a"),
+        pmod(col("id"), lit(SaltChunks.toLong)).as("salt"))
+    val denseRight = dense
+      .select(col("bv"), col("id").as("id_b"), col("phash").as("phash_b"),
+        explode(sequence(lit(0L), lit(SaltChunks.toLong - 1))).as("salt"))
+    // the dense self-join sides are the same order of magnitude — force a
+    // shuffled hash join so Catalyst never tries to broadcast-build them
+    denseLeft.hint("shuffle_hash").join(denseRight, Seq("bv", "salt"))
+      .where(col("id_a") < col("id_b") &&
+        bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= maxHamming)
+      .select("id_a", "id_b")
+  }
+
+  /** Skew-hardened in-bucket ALL-PAIRS generation over a banded frame
+    * `(id, bands)`: every distinct pair that shares at least one band key.
+    * The candidate stage of the banded-MinHash doc and md5-twin channels
+    * (their confirm predicate lives downstream over token sets the walk
+    * never sees). Band keys must mix the band index (MinHash.bandKeys,
+    * Md5Channels.bandWalkKeys), so a bucket's key IS the shared band value.
+    *
+    * One [[runWalk]] whose Hamming predicate (`maxHamming` 64) passes every
+    * pair streams the cold buckets. A hot bucket — the boilerplate-text
+    * regime, where one band value's membership grows ∝ corpus size — is
+    * pair-dense by definition and there is no signature to refine it by, so
+    * it goes straight to a salt-and-replicate fan-out across [[SaltChunks]]
+    * tasks, the StreamingDedup.SaltChunks pattern. That fan-out dedups at
+    * the source: a pair sharing k band keys would otherwise leave ALL k of
+    * its hot buckets (b× the distinct-exchange volume for a mega-cluster hot
+    * in every band), so the join emits it only from the bucket of its FIRST
+    * agreeing band key. LOSSLESS: both members sit in that bucket — if it is
+    * hot, its own dense join emits the pair; if cold, the streaming walk
+    * did. The walk's select prunes `bands` off the wide exchange, so only
+    * the small dense re-read materializes the arrays. DocOpsSpec asserts the
+    * pair set against brute force with the hot path forced. */
+  private[graft] def saltedAllPairs(banded: DataFrame,
+      hotThreshold: Int = AllPairsHotCap, keyedRows: Long = -1L): DataFrame = {
+    val keyed = banded.select(col("id"), lit(0L).as("phash"),
+      explode(col("bands")).as("bv"), col("bands"))
+    val (hotBvs, small) = runWalk(keyed, maxHamming = 64, hotThreshold,
+      walkPartitions(keyed.sparkSession, keyedRows), firstAgreeBlocks = 0)
+    if (hotBvs.isEmpty) return small
+    val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
+    val left = dense
+      .select(col("bv"), col("id").as("id_a"), col("bands").as("bands_a"),
+        pmod(col("id"), lit(SaltChunks.toLong)).as("salt"))
+    val right = dense
+      .select(col("bv"), col("id").as("id_b"), col("bands").as("bands_b"),
+        explode(sequence(lit(0L), lit(SaltChunks.toLong - 1))).as("salt"))
+    val fanned = left.hint("shuffle_hash").join(right, Seq("bv", "salt"))
+      .where(col("id_a") < col("id_b") &&
+        gf.first_agree_key(col("bands_a"), col("bands_b")) === col("bv"))
+      .select("id_a", "id_b")
+    // checkpoint: like every other branch, hand back a materialized pair
+    // set, so a consumer that reads it more than once never re-executes the
+    // dense join
+    small.union(fanned).distinct().localCheckpoint()
+  }
 
   /** primitive-field rows for the walk's encoder boundaries: scala Tuple3 is
     * UNSPECIALIZED, so a `Dataset[(Long, Long, Long)]` decode allocates a
@@ -336,7 +328,7 @@ object Dedup {
     * block's bucket (~3-4× the distinct-exchange volume at the shipped
     * Hamming-3 / 4-block config). The walk then emits a pair only from the
     * bucket whose key equals the pair's FIRST agreeing block key. LOSSLESS
-    * by the same ownership argument as denseFirstAgreeJoin: both members
+    * by the same ownership argument as [[saltedAllPairs]]: both members
     * carry the owning key, so they share that bucket; if it is cold the walk
     * emits the pair there, and if it is hot the refinement pass (which runs
     * with firstAgreeBlocks = 0) emits it. 0 disables the check (banded LSH
@@ -650,7 +642,7 @@ object Dedup {
     // keyedRows: cheap parquet count × blocks, sizing the walk exchange;
     // firstAgreeBlocks: keys derive from the carried phash, so the walk can
     // emit each pair only from its owning (first-agreeing) block bucket
-    saltedBucketPairs(keyed, cfg.hammingThreshold, hotThreshold = 1 << 20, saltChunks = 16,
+    saltedBucketPairs(keyed, cfg.hammingThreshold,
       keyedRows = corpus.count() * blocksFor(cfg), firstAgreeBlocks = blocksFor(cfg))
   }
 
@@ -672,7 +664,7 @@ object Dedup {
       .select(idNum(col("image_id")).as("id"), col("phash"),
         explode(gf.phash_block_keys(col("simhash"), simhashBlocks)).as("bv"))
     // keyedRows: callers hand a materialized sigs frame, so the count is cheap
-    saltedBucketPairs(keyed, cfg.hammingThreshold, hotThreshold = 1 << 20, saltChunks = 16,
+    saltedBucketPairs(keyed, cfg.hammingThreshold,
       keyedRows = sigs.count() * simhashBlocks)
   }
 
@@ -702,7 +694,7 @@ object Dedup {
     // keyedRows: every shipped caller (dupPairsMinhash, Bench.pipelineE2E,
     // ResumablePipeline) hands a materialized sigs frame, so the count is a
     // cheap cached-block pass, not a recompute of the signature stage
-    saltedBucketPairs(keyed, cfg.hammingThreshold, hotThreshold = 1 << 20, saltChunks = 16,
+    saltedBucketPairs(keyed, cfg.hammingThreshold,
       keyedRows = sigs.count() * cfg.bands)
   }
 

@@ -65,27 +65,6 @@ object SimHash {
     }
   }
 
-  def simhash64Weighted(features: Array[Long], weights: Array[Double]): Long = {
-    require(features.length == weights.length)
-    if (features.isEmpty) return 0L
-    val votes = new Array[Double](64)
-    var i = 0
-    while (i < features.length) {
-      val h = features(i)
-      val w = weights(i)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) != 0L) votes(b) += w else votes(b) -= w
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
-    out
-  }
-
   @inline def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** SimHash LSH block keys: split the 64 bits into `blocks` contiguous

@@ -30,15 +30,6 @@ object Kernels {
   def phashBitgrams(phash: Long, gram: Int, step: Int): ArrayData =
     longs(Shingles.phashBitgrams(phash, gram, step))
 
-  def concatLongs(a: ArrayData, b: ArrayData): ArrayData = {
-    val x = a.toLongArray()
-    val y = b.toLongArray()
-    val out = new Array[Long](x.length + y.length)
-    System.arraycopy(x, 0, out, 0, x.length)
-    System.arraycopy(y, 0, out, x.length, y.length)
-    longs(out)
-  }
-
   def simhash64(features: ArrayData): Long = SimHash.simhash64(features.toLongArray())
 
   def bottomK(features: ArrayData, s: Int): ArrayData =
@@ -152,34 +143,6 @@ object Kernels {
     var i = 0
     while (i < x.length) { s += x(i) * y(i); i += 1 }
     s
-  }
-
-  /** L2-normalize (float or double input) → unit double vector. */
-  def vecNormalize(a: ArrayData): ArrayData = {
-    val x = a.toDoubleArray()
-    var n = 0.0
-    var i = 0
-    while (i < x.length) { n += x(i) * x(i); i += 1 }
-    val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-    val out = new Array[Double](x.length)
-    i = 0
-    while (i < x.length) { out(i) = x(i) * inv; i += 1 }
-    doubles(out)
-  }
-
-  def vecNormalizeFloat(a: ArrayData): ArrayData = {
-    val xf = a.toFloatArray()
-    val x = new Array[Double](xf.length)
-    var i = 0
-    while (i < xf.length) { x(i) = xf(i).toDouble; i += 1 }
-    var n = 0.0
-    i = 0
-    while (i < x.length) { n += x(i) * x(i); i += 1 }
-    val inv = if (n == 0.0) 0.0 else 1.0 / math.sqrt(n)
-    val out = new Array[Double](x.length)
-    i = 0
-    while (i < x.length) { out(i) = x(i) * inv; i += 1 }
-    doubles(out)
   }
 
   // ---- HLL scalars ----

@@ -499,18 +499,6 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** L2-normalize a float vector → unit double vector. */
-case class VecNormalizeFloat(child: Expression)
-    extends UnaryExpression with KernelCall {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "vec_normalize"
-  protected override def nullSafeEval(a: Any): Any =
-    Kernels.vecNormalizeFloat(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"$kernelsRef.vecNormalizeFloat($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 // ---- cold-path (CodegenFallback) expressions ----
 
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback

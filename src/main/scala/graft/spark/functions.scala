@@ -48,8 +48,6 @@ object functions {
 
   // LSH
   def band_keys(sig: Column, bands: Int, rows: Int): Column = c(BandKeysExpr(e(sig), bands, rows))
-  def bucket_pairs(members: Column, maxHamming: Int): Column =
-    c(BucketPairsGen(e(members), maxHamming))
 
   // estimators
   def sig_jaccard(a: Column, b: Column): Column = c(SigJaccard(e(a), e(b)))
@@ -78,7 +76,6 @@ object functions {
     c(InterleavedBlockKeys(e(phash), blocks))
   def exact_jaccard(a: Column, b: Column): Column = c(ExactJaccardSorted(e(a), e(b)))
   def vec_dot(a: Column, b: Column): Column = c(VecDot(e(a), e(b)))
-  def vec_normalize_float(a: Column): Column = c(VecNormalizeFloat(e(a)))
   def hll_card(regs: Column): Column = c(HllCard(e(regs)))
   def hll_jaccard(a: Column, b: Column): Column = c(HllJaccard(e(a), e(b)))
   def hll_merge2(a: Column, b: Column): Column = c(HllMergeScalar(e(a), e(b)))

@@ -279,10 +279,9 @@ object ScaleBench {
       // The boilerplate-skew regime the round-3 verdict flagged for the doc
       // LSH channels, at ~270x the driver-gate doc count: two mega-templates
       // whose band buckets are hot in every band, a 20k-cluster cold tail,
-      // and 1M noise docs. Three candidate-stage legs over the SAME corpus,
-      // all producing the identical distinct pair set:
+      // and 1M noise docs. Two candidate-stage legs over the SAME corpus,
+      // both producing the identical distinct pair set:
       //   selfjoin   — the pre-round-4 shape (plain band self-join + AQE)
-      //   walk       — salted run-walk, per-bucket hot fan-out
       //   firstagree — salted run-walk + first-agreeing-band dedup (ships)
       val spec = graft.data.SyntheticDocs.Spec()
       locally { // generate once, outside any timed leg
@@ -348,8 +347,6 @@ object ScaleBench {
           keyed.toDF("id_a", "bv").join(keyed.toDF("id_b", "bv"), "bv")
             .where(col("id_a") < col("id_b")).select("id_a", "id_b").distinct()
         },
-        leg("walk")(docs => graft.docs.DocOps.minhashCandidates(
-          docs, hotThreshold = hot, firstAgreeDedup = false)),
         leg("firstagree")(docs => graft.docs.DocOps.minhashCandidates(
           docs, hotThreshold = hot)))
       require(legs.map(l => (l.cand, l.fingerprint)).distinct.size == 1,
@@ -359,27 +356,21 @@ object ScaleBench {
         s"${spec.megaMembers} near-identical members (pairwise 3-gram jaccard ≥ 0.6,\n" +
         s"band buckets hot in all 64 bands at hotThreshold=$hot), " +
         s"${spec.smallClusters} cold clusters × ${spec.smallMembers}, ${spec.noise} noise docs.\n" +
-        "All legs emit the IDENTICAL distinct candidate set (asserted: equal count\n" +
+        "Both legs emit the IDENTICAL distinct candidate set (asserted: equal count\n" +
         "AND equal order-independent xxhash64 XOR set fingerprint, untimed pass). Walls are\n" +
         "best-of-2 (warm run measured); shuffle GB is the second run's total task\n" +
         "shuffle-write volume — the metric the first-agreeing-band dedup targets.\n\n"
       out ++= "| leg | distinct candidates | wall (s) | shuffle write (GB) |\n|---|---|---|---|\n"
       legs.foreach(l => out ++= f"| ${l.name} | ${l.cand} | ${l.wall}%.2f | ${l.shuffleGB}%.2f |\n")
-      val (sj, wk, fa) = (legs(0), legs(1), legs(2))
+      val (sj, fa) = (legs(0), legs(1))
       out ++= f"""
-        |- **selfjoin → walk**: same flood volume by construction (each hot pair
-        |  still emitted once per agreeing band), but the walk streams cold
-        |  buckets with no join build and fans each hot bucket across 16 salted
-        |  tasks instead of leaving it one AQE-split skew partition.
-        |- **walk → firstagree**: the dedup-at-source cut — each hot-path pair
-        |  crosses the distinct exchange once instead of once per agreeing band:
-        |  ${wk.shuffleGB / fa.shuffleGB}%.1f× less shuffle-write volume,
-        |  ${wk.wall / fa.wall}%.2f× faster wall. At a 100 TB web corpus the
-        |  boilerplate share grows with the crawl, so this factor (bounded by
-        |  the band count, 64) is the difference between an exchange sized by
-        |  LSH redundancy and one sized by the true candidate set.
-        |- vs the pre-round-4 self-join shape end to end:
-        |  ${sj.wall / fa.wall}%.2f× faster, ${sj.shuffleGB / fa.shuffleGB}%.1f× less shuffle.
+        |- **selfjoin → firstagree** (the shipped walk): it streams cold buckets
+        |  with no join build, fans each hot bucket across
+        |  ${graft.pipeline.Dedup.SaltChunks} salted tasks instead of leaving it
+        |  one AQE-split skew partition, and sends each hot-path pair through
+        |  the distinct exchange once instead of once per agreeing band:
+        |  ${sj.wall / fa.wall}%.2f× faster, ${sj.shuffleGB / fa.shuffleGB}%.1f× less
+        |  shuffle-write volume.
         |
         |""".stripMargin
       endSection("docskew")

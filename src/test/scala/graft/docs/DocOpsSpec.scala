@@ -81,7 +81,7 @@ class DocOpsSpec extends AnyFunSuite {
       (i.toLong, (0 until 14).map(_ => s"w${g.nextInt(5000)}").mkString(" ")))
     val all = hot ++ churn ++ cold
     val d = all.toDF("doc_id", "text")
-    val salted = DocOps.minhashDupPairs(d, 3, 0.6, hotThreshold = 32, saltChunks = 4)
+    val salted = DocOps.minhashDupPairs(d, 3, 0.6, hotThreshold = 32)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val unsalted = DocOps.minhashDupPairs(d, 3, 0.6, hotThreshold = 1 << 20)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -106,8 +106,8 @@ class DocOpsSpec extends AnyFunSuite {
     // mega-cluster hot in EVERY band plus churn members whose pairs
     // first-agree at varying band indexes, plus cold clusters whose pairs
     // the streaming walk (not the dense join) must still emit — the
-    // losslessness claim of the dedup-at-source join, gated directly
-    // against the per-bucket-emission control
+    // losslessness claim of the dedup-at-source join, gated against the
+    // brute-force set of pairs that share at least one band key
     import spark.implicits._
     val boiler = "cookie policy banner text repeated on every page of the site forever"
     val hot = (0 until 120).map(i => (i.toLong, boiler))
@@ -118,15 +118,20 @@ class DocOpsSpec extends AnyFunSuite {
       Seq((300L + 2 * c, base), (301L + 2 * c, base + " zz"))
     }
     val d = (hot ++ churn ++ cold).toDF("doc_id", "text")
-    def pairs(firstAgree: Boolean) =
-      DocOps.minhashCandidates(d, 3, hotThreshold = 16, saltChunks = 4,
-          firstAgreeDedup = firstAgree)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val per = pairs(firstAgree = false)
-    val fa = pairs(firstAgree = true)
-    assert(per.size > (120 * 119) / 2) // the hot fan-out really engaged
-    assert(fa === per,
-      s"first-agree diff: missing=${(per -- fa).size} extra=${(fa -- per).size}")
+    val fa = DocOps.minhashCandidates(d, 3, hotThreshold = 16)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the channel's own band keys (minhashCandidates defaults), collected once
+    val gf = graft.spark.functions
+    val bands = d.select(col("doc_id"),
+        gf.band_keys(gf.minhash_sig(gf.token_ngrams(col("text"), 3), 128, 42L), 64, 2))
+      .as[(Long, Array[Long])].collect().map { case (id, b) => id -> b.toSet }
+    val brute = (for {
+      (ia, ba) <- bands; (ib, bb) <- bands
+      if ia < ib && ba.exists(bb.contains)
+    } yield (ia, ib)).toSet
+    assert(brute.size > (120 * 119) / 2) // the hot fan-out really engaged
+    assert(fa === brute,
+      s"first-agree diff: missing=${(brute -- fa).size} extra=${(fa -- brute).size}")
   }
 
   test("planted boilerplate hot bucket: simhash channel == brute force under salting") {
@@ -144,7 +149,7 @@ class DocOpsSpec extends AnyFunSuite {
       (ia, sa) <- sigs; (ib, sb) <- sigs
       if ia < ib && java.lang.Long.bitCount(sa ^ sb) <= 3
     } yield (ia, ib)).toSet
-    val salted = DocOps.simhashDupPairs(d, 3, 3, hotThreshold = 32, saltChunks = 4)
+    val salted = DocOps.simhashDupPairs(d, 3, 3, hotThreshold = 32)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(brute.size >= 120 * 119 / 2)
     assert(salted === brute,
@@ -162,9 +167,9 @@ class DocOpsSpec extends AnyFunSuite {
     val mh = graft.oracle.Md5Channels
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(mh.docMinhashDupPairsMd5(d, hotThreshold = 32, saltChunks = 4))
+    assert(pairs(mh.docMinhashDupPairsMd5(d, hotThreshold = 32))
       === pairs(mh.docMinhashDupPairsMd5(d, hotThreshold = 1 << 12)))
-    assert(pairs(mh.docSimhashDupPairsMd5(d, hotThreshold = 32, saltChunks = 4))
+    assert(pairs(mh.docSimhashDupPairsMd5(d, hotThreshold = 32))
       === pairs(mh.docSimhashDupPairsMd5(d, hotThreshold = 1 << 20)))
   }
 

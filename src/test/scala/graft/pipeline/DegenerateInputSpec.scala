@@ -96,7 +96,11 @@ class DegenerateInputSpec extends AnyFunSuite {
   }
 
   test("doc channels on an empty and a single-row table: no pairs") {
-    for (d <- Seq(docs(Seq.empty), docs(Seq((1L, "the quick brown fox jumps over it"))))) {
+    // plus a table whose docs all have fewer than n = 3 tokens (or null
+    // text) beside one real doc: no n-gram, so no channel may pair them
+    val short = docs(Seq((1L, ""), (2L, "a b"), (3L, "x"), (4L, null),
+      (5L, "one two three four five")))
+    for (d <- Seq(docs(Seq.empty), docs(Seq((1L, "the quick brown fox jumps over it"))), short)) {
       assert(DocOps.ngramDupPairsExact(d).count() === 0L)
       assert(DocOps.minhashDupPairs(d).count() === 0L)
       assert(DocOps.simhashDupPairs(d).count() === 0L)

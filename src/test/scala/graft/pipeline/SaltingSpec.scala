@@ -28,9 +28,9 @@ class SaltingSpec extends AnyFunSuite {
       .select(col("id"), col("phash"),
         explode(graft.spark.functions.phash_block_keys(col("phash"), 4)).as("bv"))
 
-    val salted = Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 16, saltChunks = 8)
+    val salted = Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val unsalted = Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 1000000, saltChunks = 1)
+    val unsalted = Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 1000000)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute force: every pair within hamming <= 3 (exact-cover guarantee)
     val all = (hot ++ cold).map { case (id, ph, _) => (id.drop(4).toLong, ph) }
@@ -57,7 +57,7 @@ class SaltingSpec extends AnyFunSuite {
     }
     val all = base ++ planted
     val keyed = all.toDF("id", "phash").select(col("id"), col("phash"), lit(0x42L).as("bv"))
-    val got = Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 64, saltChunks = 4)
+    val got = Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = (for {
       (ia, pa) <- all; (ib, pb) <- all
