@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import graft.spark.{functions => gf}
 
@@ -30,7 +30,8 @@ import graft.spark.{functions => gf}
   *    per-pair confirm is a codegen'd merge walk (`exact_jaccard`), never a
   *    re-tokenization;
   *  - candidate pairs are `distinct`-ed before the confirm join; the
-  *    confirm join carries only (id, phash, tok);
+  *    confirm shuffles the corpus side (id, phash, tok) ONCE, and that one
+  *    exchange feeds both endpoint joins;
   *  - bucket skew is handled EXPLICITLY by salt-and-replicate
   *    ([[saltedBucketPairs]]) plus AQE skew-join as a backstop;
   *  - the input scan prunes `bytes` (asserted in PipelineSpec).
@@ -698,22 +699,42 @@ object Dedup {
       keyedRows = sigs.count() * cfg.bands)
   }
 
+  /** Both endpoints of every candidate pair joined to ONE side table
+    * `(id, phash, payload)`: side columns come back suffixed `_a` / `_b`.
+    *
+    * The side is scanned, projected and shuffled ONCE: the two endpoint
+    * subtrees differ only in column names, which plan canonicalization
+    * erases, so AQE reuses the first side exchange for the second join.
+    * That needs both subtrees to carry the same filters, and constraint
+    * inference would plant the candidate frame's own predicates on the
+    * endpoint they name: the walk's marker filter `id_a =!= Long.MinValue`
+    * ([[runWalk]]) reaches side A alone, and a hot-path union (kept through
+    * `localCheckpoint`) plants a disjunction on it. The identity map hands
+    * the join fresh candidate attributes that carry no constraints, so each
+    * endpoint infers only its join key's `isnotnull` and both canonicalize
+    * identically whatever produced the candidates.
+    *
+    * shuffle_hash: broadcast builds are single-threaded driver work and
+    * sort-merge would sort the fat payload arrays. */
+  private def joinEndpoints(candidates: DataFrame, side: DataFrame): DataFrame = {
+    def endpoint(s: String): DataFrame = side.toDF(side.columns.map(c => s"${c}_$s"): _*)
+    candidates.map((r: Row) => r)(Encoders.row(candidates.schema))
+      .hint("shuffle_hash").join(endpoint("a"), "id_a")
+      .hint("shuffle_hash").join(endpoint("b"), "id_b")
+  }
+
   /** exact confirm of (already Hamming-filtered) candidate pairs: recheck
     * Hamming, then exact token jaccard over pre-hashed token sets.
     * Both candidate channels pre-filter Hamming inside the bucket join, so
-    * the surviving pair set is already tiny — fetch (phash, tok) together,
-    * ONE shuffle join per side, instead of a phash-only pre-shrink pass
-    * that would double the join count for no reduction.
+    * the surviving pair set is already tiny — fetch (phash, tok) together
+    * in ONE side exchange that feeds both endpoint joins
+    * ([[joinEndpoints]]), instead of a phash-only pre-shrink pass that
+    * would double the join count for no reduction.
     * Output ids formatted back to strings. Building the frame runs no
     * Spark job. */
   def confirm(candidates: DataFrame, corpus: DataFrame,
-      cfg: Config = defaultConfig): DataFrame = {
-    val rows = prepared(corpus)
-    candidates
-      // shuffle_hash: broadcast builds are single-threaded driver work and
-      // sort-merge would sort the fat token arrays
-      .hint("shuffle_hash").join(rows.toDF("id_a", "phash_a", "tok_a"), "id_a")
-      .hint("shuffle_hash").join(rows.toDF("id_b", "phash_b", "tok_b"), "id_b")
+      cfg: Config = defaultConfig): DataFrame =
+    joinEndpoints(candidates, prepared(corpus))
       .withColumn("hamming", bit_count(col("phash_a").bitwiseXOR(col("phash_b"))))
       .where(col("hamming") <= cfg.hammingThreshold)
       .withColumn("jaccard", gf.exact_jaccard(col("tok_a"), col("tok_b")))
@@ -727,7 +748,6 @@ object Dedup {
       .where(coalesce(col("jaccard"), lit(-1.0)) >= cfg.tokenJaccard)
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"),
         col("hamming"), col("jaccard"))
-  }
 
   /** suffix-array substring confirm (north_star: "suffix-array substring
     * pass confirming caption near-dups"): keep Hamming-close candidate pairs
@@ -736,11 +756,9 @@ object Dedup {
     * as the `lcs_len` column function). SQL-oracle-equivalent predicate:
     * lcs(a,b) ≥ L  ⇔  the char L-gram sets of a and b intersect. */
   def confirmSubstring(candidates: DataFrame, corpus: DataFrame,
-      cfg: Config = defaultConfig, minLen: Int = 12): DataFrame = {
-    val rows = corpus.select(idNum(col("image_id")).as("id"), col("phash"), col("caption"))
-    candidates
-      .hint("shuffle_hash").join(rows.toDF("id_a", "phash_a", "cap_a"), "id_a")
-      .hint("shuffle_hash").join(rows.toDF("id_b", "phash_b", "cap_b"), "id_b")
+      cfg: Config = defaultConfig, minLen: Int = 12): DataFrame =
+    joinEndpoints(candidates,
+        corpus.select(idNum(col("image_id")).as("id"), col("phash"), col("caption").as("cap")))
       .where(bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= cfg.hammingThreshold)
       .withColumn("lcs", gf.lcs_len(col("cap_a"), col("cap_b")))
       // coalesce: same InferFiltersFromConstraints shield as `confirm` —
@@ -749,7 +767,6 @@ object Dedup {
       // any inferred isnotnull should the plan shape change
       .where(coalesce(col("lcs"), lit(-1)) >= minLen)
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"), col("lcs"))
-  }
 
   /** full oracle-exact dup-pair query. */
   def dupPairs(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =

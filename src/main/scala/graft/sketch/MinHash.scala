@@ -159,13 +159,34 @@ object MinHash {
     * AND a self-test reproduces the scalar path bit-for-bit on a planted
     * input. The kernel is exact integer arithmetic per permutation slot, so
     * agreement on any input implies agreement on all — the self-test guards
-    * against classloading/species surprises, not arithmetic. */
-  private[graft] lazy val vectorKernelUsable: Boolean =
-    try {
+    * against classloading/species surprises, not arithmetic. A JVM that
+    * falls back logs one WARN naming the cause ([[vectorKernelProblem]]). */
+  private[graft] lazy val vectorKernelUsable: Boolean = {
+    val problem = vectorKernelProblem(
+      ModuleLayer.boot().findModule("jdk.incubator.vector").isPresent,
+      (f, a) => VectorMinHash.sig(f, a))
+    problem.foreach(org.slf4j.LoggerFactory.getLogger(getClass).warn(_))
+    problem.isEmpty
+  }
+
+  /** Why the SIMD kernel is unusable, or None when it is usable: the
+    * incubator module is not loaded, or `kernel` does not reproduce the
+    * scalar loop bit-for-bit on a planted input. */
+  private[graft] def vectorKernelProblem(modulePresent: Boolean,
+      kernel: (Array[Long], Array[Long]) => Array[Long]): Option[String] = {
+    val fallback = "MinHash signatures use the scalar kernel (~5x slower)"
+    if (!modulePresent)
+      Some(s"$fallback: module jdk.incubator.vector is missing; " +
+        "add --add-modules jdk.incubator.vector to the JVM options")
+    else try {
       val feats = Array.tabulate(67)(i => fmix64(i * 0x9e3779b97f4a7c15L))
       val aff = permAffine(128, 42L)
-      java.util.Arrays.equals(VectorMinHash.sig(feats, aff), minhashSigScalar(feats, aff))
-    } catch { case _: Throwable => false }
+      if (java.util.Arrays.equals(kernel(feats, aff), minhashSigScalar(feats, aff))) None
+      else Some(s"$fallback: the SIMD kernel self-test mismatched the scalar loop")
+    } catch {
+      case t: Throwable => Some(s"$fallback: the SIMD kernel self-test threw $t")
+    }
+  }
 
   /** k-permutation signature over 64-bit affine permutations:
     * `sig(p) = min_x (a_p·fmix64(x) + b_p)` (mod 2^64; a_p odd ⇒ bijection) —

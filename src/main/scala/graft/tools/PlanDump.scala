@@ -49,9 +49,14 @@ object PlanDump {
           .repartition(col("bv"))
           .sortWithinPartitions(col("bv"))
       }),
-      ("confirm", "two shuffled hash joins on numeric ids carrying only (id, phash, tok); " +
-        "the codegen'd exact_jaccard merge-walk runs post-join",
-        Dedup.confirm(Dedup.candidatesPhashBlocks(corpus), corpus)),
+      ("confirm", "executed before formatting, so this is the final AQE plan: ONE exchange " +
+        "of the corpus side (id, phash, tok) feeds both shuffled hash joins on numeric ids " +
+        "(the second join reads it as a ReusedExchange); the codegen'd exact_jaccard " +
+        "merge-walk runs post-join", {
+        val c = Dedup.confirm(Dedup.candidatesPhashBlocks(corpus), corpus)
+        c.collect()
+        c
+      }),
       ("doc_ngram_dup_pairs", "PREFIX-FILTERED inverted index (lossless AllPairs pruning): " +
         "df groupBy on gram hash, per-doc (df, gram)-ordered prefix in ONE agg pass " +
         "(array_sort + slice), index localCheckpoint-ed so both self-join sides scan the " +

@@ -243,4 +243,55 @@ class PipelineSpec extends AnyFunSuite {
       assert(!jobGroups.contains(group), "building a confirm plan started a Spark job")
     } finally sc.removeSparkListener(listener)
   }
+
+  test("confirm and confirmSubstring shuffle the corpus side once, reused by both joins") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+    object Plans extends AdaptiveSparkPlanHelper
+    // the corpus scan feeds this exchange directly, not through another one
+    def sideOf(exchangeInput: SparkPlan): Boolean = exchangeInput match {
+      case _: FileSourceScanExec => true
+      case _: Exchange | _: QueryStageExec => false
+      case p => p.children.exists(sideOf)
+    }
+    // (live corpus-side shuffles, reused corpus-side exchanges) in the final
+    // AQE plan; a reused stage is a leaf, so it never counts as a live one
+    def sideExchanges(df: DataFrame): (Int, Int) = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      (Plans.collect(plan) { case s: ShuffleExchangeExec if sideOf(s.child) => s }.size,
+        Plans.collect(plan) { case r: ReusedExchangeExec if sideOf(r.child.child) => r }.size)
+    }
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    def check(source: String, cands: DataFrame, side: DataFrame): Unit =
+      for ((name, df) <- Seq("confirm" -> Dedup.confirm(cands, side),
+          "confirmSubstring" -> Dedup.confirmSubstring(cands, side))) {
+        val (live, reused) = sideExchanges(df)
+        if (live != 1 || reused != 1) failures +=
+          s"$name over $source: $live live corpus shuffles, $reused reused:\n" +
+            df.queryExecution.executedPlan
+      }
+    // cold walk outputs (marker-filtered deduped checkpoints)
+    val path = java.nio.file.Files.createTempDirectory("confirmside").toString
+    corpus.write.mode("overwrite").parquet(path)
+    val pq = spark.read.parquet(path)
+    check("candidatesPhashBlocks", Dedup.candidatesPhashBlocks(pq), pq)
+    val banded = Dedup.signatures(pq)
+      .select(col("image_id"), col("phash"), gf.band_keys(col("minhash"), 32, 4).as("bands"))
+      .localCheckpoint()
+    check("candidatesFromBands", Dedup.candidatesFromBands(banded), pq)
+    // a hot-path frame: 60 rows share one phash, hot at threshold 16
+    import spark.implicits._
+    val hotPath = java.nio.file.Files.createTempDirectory("confirmsidehot").toString
+    ((0 until 60).map(i => (f"img_$i%010d", 0x1234567890abcdefL, s"caption $i")) ++
+      (100 until 140).map(i => (f"img_$i%010d", 0x0f0f0f0f0f0f0f0fL ^ (i.toLong << 16), s"caption $i")))
+      .toDF("image_id", "phash", "caption").write.mode("overwrite").parquet(hotPath)
+    val hot = spark.read.parquet(hotPath)
+    val keyed = Dedup.prepared(hot)
+      .select(col("id"), col("phash"), explode(gf.phash_block_keys(col("phash"), 4)).as("bv"))
+    check("saltedBucketPairs (hot)", Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 16), hot)
+    if (failures.nonEmpty) fail(failures.mkString("\n"))
+  }
 }

@@ -130,6 +130,20 @@ class SketchAlgebraSpec extends AnyFunSuite {
     }
   }
 
+  test("SIMD kernel fallback names its cause") {
+    assert(MinHash.vectorKernelProblem(modulePresent = true, VectorMinHash.sig) === None)
+    val missing = MinHash.vectorKernelProblem(modulePresent = false, VectorMinHash.sig)
+    assert(missing.exists(_.contains("module jdk.incubator.vector is missing")), missing)
+    val wrong = MinHash.vectorKernelProblem(modulePresent = true,
+      (f, a) => MinHash.minhashSigScalar(f, a).map(_ ^ 1L))
+    assert(wrong.exists(_.contains("self-test mismatched")), wrong)
+    val thrown = MinHash.vectorKernelProblem(modulePresent = true,
+      (_, _) => throw new NoClassDefFoundError("jdk/incubator/vector/LongVector"))
+    assert(thrown.exists(_.contains("self-test threw")), thrown)
+    // every cause says what the JVM falls back to
+    for (p <- Seq(missing, wrong, thrown)) assert(p.exists(_.contains("scalar kernel")), p)
+  }
+
   test("signature merge law: sig(A ∪ B) = mergeSig(sig(A), sig(B))") {
     val seeds = MinHash.permAffine(128, 42)
     val a = randSet(15, 1000)
