@@ -26,7 +26,10 @@ done
 rm -rf "$LOG/classes"
 cp -r target/scala-2.13/classes "$LOG/classes"
 CP="$LOG/classes:${SPARK_HOME:?SPARK_HOME must point at the Spark install}/jars/*"
-MEM="${SPARK_DRIVER_MEM:-24g}"
+# heap (-Xms = -Xmx, pre-touched): SPARK_DRIVER_MEM, else half of MemTotal
+# clamped to 2g-8g, 2g if unreadable (the build.sbt rule), so the JVM starts
+# on a host of any size
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
 
 for section in "$@"; do
   name=${section//:/_}

@@ -136,19 +136,21 @@ object DocOps {
   private[graft] def minhashCandidates(docs: DataFrame, n: Int = 3,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
       hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
-    // the banded frame is materialized BEFORE the walk's explode: the hot
+    // docs with fewer than `n` tokens have no n-gram: they would all share
+    // the empty set's sentinel signature, hence one bucket per band, and
+    // pair with each other only to fail the confirm (jaccard 0).
+    // The banded frame is materialized BEFORE the walk's explode: the hot
     // path re-executes its input filtered to hot buckets, and with the
     // signature inline that re-run would repeat the 128-perm stage over the
     // full corpus (the Dedup.dupPairsMinhash lesson); the band-key arrays
-    // are also 4× smaller than the signature they replace
-    val banded = docs.select(col("doc_id").as("id"),
+    // are also 4× smaller than the signature they replace, and the walk's
+    // sizing job reads them from the checkpoint
+    val banded = docs.where(hasNgrams(n)).select(col("doc_id").as("id"),
       gf.band_keys(
         gf.minhash_sig(gf.token_ngrams(col("text"), n), numPerm, 42L),
-        bands, rowsPerBand).as("bands"))
+        bands, rowsPerBand).as("keys"))
       .localCheckpoint()
-    Dedup.saltedAllPairs(banded, hotThreshold,
-      keyedRows = banded.count() * bands) // banded is checkpointed — cheap count
-      .toDF("id_a", "id_b")
+    Dedup.saltedAllPairs(banded, hotThreshold).toDF("id_a", "id_b")
   }
 
   /** SimHash near-dup pairs: 64-bit SimHash over token n-grams, pigeonhole
@@ -170,11 +172,11 @@ object DocOps {
     val sigs = docs.where(hasNgrams(n)).select(col("doc_id"),
       gf.simhash64(gf.token_ngrams(col("text"), n)).as("sh"))
       .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
-    val keyed = sigs.select(col("doc_id").as("id"), col("sh").as("phash"),
-      explode(gf.phash_block_keys(col("sh"), maxHamming + 1)).as("bv"))
-    val pairs = Dedup.saltedBucketPairs(keyed, maxHamming, hotThreshold,
-      keyedRows = sigs.count() * (maxHamming + 1), // sigs checkpointed
-      firstAgreeBlocks = maxHamming + 1) // keys derive from sh == the carried signature
+    val pairs = Dedup.saltedBucketPairs(
+        sigs.select(col("doc_id").as("id"), col("sh").as("phash"),
+          gf.phash_block_keys(col("sh"), maxHamming + 1).as("keys")),
+        maxHamming, hotThreshold,
+        firstAgreeBlocks = maxHamming + 1) // keys derive from sh == the carried signature
       .toDF("id_a", "id_b")
     pairs
       .join(sigs.toDF("id_a", "sh_a"), "id_a")

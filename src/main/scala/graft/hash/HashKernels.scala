@@ -154,6 +154,31 @@ object HashKernels {
     v = (v | (v >>> 12)) & 0x000000FF000000FFL // 8 bits per 32
     (v | (v >>> 24)) & 0xFFFFL // 16 contiguous bits
   }
+
+  /** Interleaved bit-class key: bit j of class `c` (of `classes`) is source
+    * bit `j·classes + c`, for j < 64/classes, so correlated ADJACENT bits
+    * (neighboring DCT coefficients in a pHash) land in different classes.
+    * The classes cover every bit position when `classes` divides 64 and
+    * otherwise drop the top 64 mod `classes` bits, which only merges keys:
+    * a pair within Hamming ≤ classes−1 still agrees on ≥ 1 class verbatim
+    * (pigeonhole). The one implementation behind the block-key channels
+    * (`phash_block_keys`), the walk's first-agree ownership check and its
+    * in-run sub-bucket pass; 4 classes (the shipped Hamming-3 config) take
+    * the [[unzip4]] kernel. */
+  @inline def classKey(x: Long, classes: Int, c: Int): Long =
+    if (classes == 4) unzip4(x, c)
+    else {
+      val width = 64 / classes
+      var v = 0L
+      var j = 0
+      while (j < width) { v |= ((x >>> (j * classes + c)) & 1L) << j; j += 1 }
+      v
+    }
+
+  /** [[classKey]] tagged with its block index in the high byte: the bucket
+    * key of block `i`, distinct across blocks of one signature. */
+  @inline def blockKey(x: Long, blocks: Int, i: Int): Long =
+    (i.toLong << 56) | classKey(x, blocks, i)
 }
 
 /** MT19937-64 (Matsumoto & Nishimura, public specification) — reproduces the

@@ -126,15 +126,17 @@ object Md5Channels {
     bits.reduce(_ + _)
   }
 
-  /** interleaved?-no: CONTIGUOUS pigeonhole block values of a 64-bit sig:
-    * block i = bits [i·width, (i+1)·width). Any pair within Hamming ≤
-    * blocks−1 shares ≥ 1 block verbatim (exact cover). Contiguous (not
-    * interleaved) so the SQL mirror is a shift+mask. */
+  /** CONTIGUOUS pigeonhole block keys of a 64-bit sig: block i's value is
+    * bits [i·width, (i+1)·width), keyed `i·2^width + value`, which is
+    * injective in (block, value), so bucketing on it is the oracle's (bi, bv)
+    * join. Any pair within Hamming ≤ blocks−1 shares ≥ 1 block verbatim
+    * (exact cover). Contiguous (not interleaved) so the SQL mirror is a
+    * shift+mask. */
   def contiguousBlocks(sig: Column, blocks: Int): Column = {
     val width = 64 / blocks
     val mask = if (width == 64) lit(-1L) else lit((1L << width) - 1)
     array((0 until blocks).map { i =>
-      struct(lit(i).as("bi"), shiftright(sig, i * width).bitwiseAND(mask).as("bv"))
+      lit(i.toLong * (1L << width)) + shiftright(sig, i * width).bitwiseAND(mask)
     }: _*)
   }
 
@@ -188,7 +190,7 @@ object Md5Channels {
       // both confirm joins re-read the gram sets (the Dedup.dupPairsMinhash
       // lesson — un-checkpointed, the upstream runs 3-4×)
       .localCheckpoint()
-    val cand = Dedup.saltedAllPairs(sigs.select(col("doc_id").as("id"), col("bands")),
+    val cand = Dedup.saltedAllPairs(sigs.select(col("doc_id").as("id"), col("bands").as("keys")),
       hotThreshold).toDF("id_a", "id_b")
     val gsets = sigs.select(col("doc_id"), col("grams"))
     cand
@@ -204,22 +206,18 @@ object Md5Channels {
   /** doc near-dup pairs: md5 majority-vote SimHash, contiguous pigeonhole
     * blocks (exact cover of Hamming ≤ blocks−1), Hamming filter. Runs
     * through the full salted run-walk with the simhash as the Hamming
-    * signature; the combined walk key `bi·2^width + bv` is injective, so
-    * bucketing is identical to the oracle's (bi, bv) join. */
+    * signature, bucketed on the injective [[contiguousBlocks]] keys. */
   def docSimhashDupPairsMd5(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
       hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
-    val blocks = maxHamming + 1
-    val width = 64 / blocks
     val sigs = docs
       .where(size(split(col("text"), " ")) >= n)
       .select(col("doc_id"),
         simhash64Md5(hashes63(tokenNgramStrings(col("text"), n))).as("sh"))
       .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
-    val keyed = sigs
-      .select(col("doc_id"), col("sh"), explode(contiguousBlocks(col("sh"), blocks)).as("blk"))
-      .select(col("doc_id").as("id"), col("sh").as("phash"),
-        (col("blk.bi").cast("long") * (1L << width) + col("blk.bv")).as("bv"))
-    Dedup.saltedBucketPairs(keyed, maxHamming, hotThreshold)
+    Dedup.saltedBucketPairs(
+        sigs.select(col("doc_id").as("id"), col("sh").as("phash"),
+          contiguousBlocks(col("sh"), maxHamming + 1).as("keys")),
+        maxHamming, hotThreshold)
       .toDF("id_a", "id_b")
       .join(sigs.toDF("id_a", "sh_a"), "id_a")
       .join(sigs.toDF("id_b", "sh_b"), "id_b")
@@ -245,7 +243,7 @@ object Md5Channels {
       // (walk hot-path re-read + both confirm joins re-consume it)
       .localCheckpoint()
     val cand = Dedup.saltedAllPairs(
-        sigs.select(idNum(col("image_id")).as("id"), col("bands")), hotThreshold)
+        sigs.select(idNum(col("image_id")).as("id"), col("bands").as("keys")), hotThreshold)
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"))
     confirmTokens(cand, sigs.select(col("image_id"), col("phash"), col("toks")), ht, tau)
   }
@@ -257,19 +255,15 @@ object Md5Channels {
   def imgSimhashDupPairs(corpus: DataFrame, ht: Int = 3, tau: Double = 0.5,
       simhashBlocks: Int = 4, hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
     import Dedup.{idNum, idStr}
-    val width = 64 / simhashBlocks
     val sigs = corpus.select(col("image_id"), col("phash"),
       tokenNgramStrings(col("caption"), 1).as("toks"))
       .withColumn("sh", simhash64Md5(hashes63(col("toks"))))
       .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
     // the walk Hamming-filters on the PHASH (mirroring Dedup.candidatesSimhash)
-    // while bucketing on the md5-simhash blocks; `bi·2^width + bv` is injective
-    val keyed = sigs
-      .select(col("image_id"), col("phash"),
-        explode(contiguousBlocks(col("sh"), simhashBlocks)).as("blk"))
-      .select(idNum(col("image_id")).as("id"), col("phash"),
-        (col("blk.bi").cast("long") * (1L << width) + col("blk.bv")).as("bv"))
-    val cand = Dedup.saltedBucketPairs(keyed, ht, hotThreshold)
+    // while bucketing on the md5-simhash blocks
+    val cand = Dedup.saltedBucketPairs(
+        sigs.select(idNum(col("image_id")).as("id"), col("phash"),
+          contiguousBlocks(col("sh"), simhashBlocks).as("keys")), ht, hotThreshold)
       .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"))
     confirmTokens(cand, sigs.select(col("image_id"), col("phash"), col("toks")), ht, tau)
   }

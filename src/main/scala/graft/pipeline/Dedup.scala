@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import graft.hash.HashKernels
 import graft.spark.{functions => gf}
 
 /** The near-duplicate detection pipeline (SURVEY.md §3 "Our Spark
@@ -32,8 +33,13 @@ import graft.spark.{functions => gf}
   *  - candidate pairs are `distinct`-ed before the confirm join; the
   *    confirm shuffles the corpus side (id, phash, tok) ONCE, and that one
   *    exchange feeds both endpoint joins;
-  *  - bucket skew is handled EXPLICITLY by salt-and-replicate
-  *    ([[saltedBucketPairs]]) plus AQE skew-join as a backstop;
+  *  - every channel hands the walk one shape, `(id, phash, keys)` with
+  *    `keys` the row's bucket-key array ([[saltedBucketPairs]], Hamming
+  *    walks) or `(id, keys)` ([[saltedAllPairs]]); the walk explodes the
+  *    keys and sizes its one wide exchange from them;
+  *  - bucket skew is handled EXPLICITLY by salt-and-replicate (one
+  *    [[saltedSelfJoin]] serves the hot route of both walk modes) plus AQE
+  *    skew-join as a backstop;
   *  - the input scan prunes `bytes` (asserted in PipelineSpec).
   */
 object Dedup {
@@ -89,12 +95,16 @@ object Dedup {
     * executor count. Partition count never affects the output set (hash
     * partitioning by bv co-locates each bucket at any width, and everything
     * downstream is order-insensitive).
-    * `keyedRows < 0` (unknown) keeps the session default. */
-  private def walkPartitions(spark: org.apache.spark.sql.SparkSession,
-      keyedRows: Long): Int = {
-    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    if (keyedRows < 0) dflt
-    else math.min(100000L, math.max(dflt.toLong,
+    * The row count is the walk's own: the summed `keys` sizes of the frame
+    * it explodes, one aggregate job — a cached-block pass over the
+    * materialized frames most callers hand in, and a read of the pHash
+    * column for the raw corpus. A null key array explodes to nothing; its
+    * size reads -1 or null (by ANSI mode), so `greatest` counts it as 0. */
+  private[pipeline] def walkPartitions(frame: DataFrame): Int = {
+    val dflt = frame.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val keyedRows = frame.agg(coalesce(sum(greatest(size(col("keys")), lit(0))), lit(0L)))
+      .collect()(0).getLong(0)
+    math.min(100000L, math.max(dflt.toLong,
       (keyedRows + WalkRowsPerSortTask - 1) / WalkRowsPerSortTask)).toInt
   }
 
@@ -152,9 +162,22 @@ object Dedup {
     (hotBvs, deduped.where(col("id_a") =!= Long.MinValue))
   }
 
+  /** The walk's keyed rows `(id, phash, bv, extra...)`, one per element of
+    * the frame's `keys` array. explode_outer, not explode: an inner explode
+    * of the `keys` attribute makes Catalyst infer `size(keys) > 0 AND
+    * isnotnull(keys)` below it and push that through the caller's
+    * projection, where it evaluates the key kernel twice more per row
+    * (cross-operator subtrees get no CSE). The outer form infers nothing;
+    * the null bv it emits for an empty or null array is dropped here. */
+  private def explodeKeys(frame: DataFrame, phash: Column, extra: Column*): DataFrame =
+    frame.select(Seq(col("id"), phash, explode_outer(col("keys")).as("bv")) ++ extra: _*)
+      .where(col("bv").isNotNull)
+
   /** Hamming-filtered pair generation over an LSH-keyed frame
-    * `(id, phash, bv)`: every pair that shares a bucket and lies within
-    * `maxHamming` of each other on `phash`, deduped.
+    * `(id, phash, keys)`, `keys` the row's array of bucket keys: every pair
+    * that shares a bucket and lies within `maxHamming` of each other on
+    * `phash`, deduped. The walk explodes the keys itself and sizes its
+    * exchange from them ([[walkPartitions]]).
     *
     * One [[runWalk]] in the common case. Singleton runs (typically 90%+ of
     * banded rows) are skipped with ZERO allocation, and the raw cross
@@ -171,15 +194,15 @@ object Dedup {
     * interleaved-phash-class key) and walked again, collapsing false
     * collisions to ~output-size work; only genuine mega-duplicate clusters
     * (a phash class shared verbatim past the cap, output inherently O(n²)
-    * pairs) fall through to the terminal [[denseSaltedJoin]] fanned across
+    * pairs) fall through to the terminal [[saltedSelfJoin]] fanned across
     * [[SaltChunks]] tasks. All branches emit exactly the Hamming-filtered
     * per-bucket cross product — verified by SaltingSpec and the DuckDB
     * oracle gate. */
-  private[graft] def saltedBucketPairs(keyed: DataFrame, maxHamming: Int,
-      hotThreshold: Int = HammingHotCap, keyedRows: Long = -1L,
-      firstAgreeBlocks: Int = 0): DataFrame = {
+  private[graft] def saltedBucketPairs(frame: DataFrame, maxHamming: Int,
+      hotThreshold: Int = HammingHotCap, firstAgreeBlocks: Int = 0): DataFrame = {
     require(maxHamming < 64, "all-pairs generation runs through saltedAllPairs")
-    val walkParts = walkPartitions(keyed.sparkSession, keyedRows)
+    val keyed = explodeKeys(frame, col("phash"))
+    val walkParts = walkPartitions(frame)
     val (hotBvs, small) = runWalk(keyed, maxHamming, hotThreshold, walkParts, firstAgreeBlocks)
     if (hotBvs.isEmpty) return small
     // Hot path: bucket sizes for POPULAR band values grow ∝ corpus size, so
@@ -212,70 +235,65 @@ object Dedup {
     // cluster, whose OUTPUT is inherently O(n²) pairs; the work is
     // output-bound, not an avoidable cross product.
     val dense = refined.where(col("bv").isInCollection(denseBvs)).localCheckpoint()
-    small.union(small2).union(denseSaltedJoin(dense, maxHamming)).distinct().localCheckpoint()
+    small.union(small2)
+      .union(saltedSelfJoin(dense, "phash", (a, b, _) => bit_count(a.bitwiseXOR(b)) <= maxHamming))
+      .distinct().localCheckpoint()
   }
 
-  /** the terminal salt-and-replicate self-join over a (bv, id, phash) frame
-    * of pair-dense buckets: each bucket's full Hamming-filtered cross
-    * product, fanned across [[SaltChunks]] tasks (work is output-bound). */
-  private def denseSaltedJoin(dense: DataFrame, maxHamming: Int): DataFrame = {
-    val denseLeft = dense
-      .select(col("bv"), col("id").as("id_a"), col("phash").as("phash_a"),
-        pmod(col("id"), lit(SaltChunks.toLong)).as("salt"))
-    val denseRight = dense
-      .select(col("bv"), col("id").as("id_b"), col("phash").as("phash_b"),
-        explode(sequence(lit(0L), lit(SaltChunks.toLong - 1))).as("salt"))
+  /** The terminal salt-and-replicate self-join of both hot routes, over a
+    * checkpointed frame `(bv, id, <payload>)` of pair-dense buckets: every
+    * in-bucket pair whose payloads pass `keep(payload_a, payload_b, bv)`.
+    * The left side lands each row in its one salt chunk (`id` mod
+    * [[SaltChunks]]), the right side replicates each row into every chunk,
+    * so a bucket's cross product spreads over [[SaltChunks]] tasks (the
+    * work is output-bound) and each pair meets in exactly one of them. */
+  private def saltedSelfJoin(dense: DataFrame, payload: String,
+      keep: (Column, Column, Column) => Column): DataFrame = {
+    def side(s: String, salt: Column): DataFrame =
+      dense.select(col("bv"), col("id").as(s"id_$s"), col(payload).as(s"${payload}_$s"),
+        salt.as("salt"))
     // the dense self-join sides are the same order of magnitude — force a
     // shuffled hash join so Catalyst never tries to broadcast-build them
-    denseLeft.hint("shuffle_hash").join(denseRight, Seq("bv", "salt"))
+    side("a", pmod(col("id"), lit(SaltChunks.toLong))).hint("shuffle_hash")
+      .join(side("b", explode(sequence(lit(0L), lit(SaltChunks.toLong - 1)))), Seq("bv", "salt"))
       .where(col("id_a") < col("id_b") &&
-        bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= maxHamming)
+        keep(col(s"${payload}_a"), col(s"${payload}_b"), col("bv")))
       .select("id_a", "id_b")
   }
 
   /** Skew-hardened in-bucket ALL-PAIRS generation over a banded frame
-    * `(id, bands)`: every distinct pair that shares at least one band key.
+    * `(id, keys)`: every distinct pair that shares at least one band key.
     * The candidate stage of the banded-MinHash doc and md5-twin channels
     * (their confirm predicate lives downstream over token sets the walk
     * never sees). Band keys must mix the band index (MinHash.bandKeys,
     * Md5Channels.bandWalkKeys), so a bucket's key IS the shared band value.
     *
     * One [[runWalk]] whose Hamming predicate (`maxHamming` 64) passes every
-    * pair streams the cold buckets. A hot bucket — the boilerplate-text
-    * regime, where one band value's membership grows ∝ corpus size — is
-    * pair-dense by definition and there is no signature to refine it by, so
-    * it goes straight to a salt-and-replicate fan-out across [[SaltChunks]]
-    * tasks, the StreamingDedup.SaltChunks pattern. That fan-out dedups at
-    * the source: a pair sharing k band keys would otherwise leave ALL k of
-    * its hot buckets (b× the distinct-exchange volume for a mega-cluster hot
-    * in every band), so the join emits it only from the bucket of its FIRST
+    * pair streams the cold buckets; the walk explodes and sizes the keys as
+    * in [[saltedBucketPairs]]. A hot bucket — the boilerplate-text regime,
+    * where one band value's membership grows ∝ corpus size — is pair-dense
+    * by definition and there is no signature to refine it by, so it goes
+    * straight to the [[saltedSelfJoin]] fan-out. That fan-out dedups at the
+    * source: a pair sharing k band keys would otherwise leave ALL k of its
+    * hot buckets (b× the distinct-exchange volume for a mega-cluster hot in
+    * every band), so the join keeps it only in the bucket of its FIRST
     * agreeing band key. LOSSLESS: both members sit in that bucket — if it is
     * hot, its own dense join emits the pair; if cold, the streaming walk
-    * did. The walk's select prunes `bands` off the wide exchange, so only
+    * did. The walk's select prunes `keys` off the wide exchange, so only
     * the small dense re-read materializes the arrays. DocOpsSpec asserts the
     * pair set against brute force with the hot path forced. */
-  private[graft] def saltedAllPairs(banded: DataFrame,
-      hotThreshold: Int = AllPairsHotCap, keyedRows: Long = -1L): DataFrame = {
-    val keyed = banded.select(col("id"), lit(0L).as("phash"),
-      explode(col("bands")).as("bv"), col("bands"))
+  private[graft] def saltedAllPairs(frame: DataFrame,
+      hotThreshold: Int = AllPairsHotCap): DataFrame = {
+    val keyed = explodeKeys(frame, lit(0L).as("phash"), col("keys"))
     val (hotBvs, small) = runWalk(keyed, maxHamming = 64, hotThreshold,
-      walkPartitions(keyed.sparkSession, keyedRows), firstAgreeBlocks = 0)
+      walkPartitions(frame), firstAgreeBlocks = 0)
     if (hotBvs.isEmpty) return small
     val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
-    val left = dense
-      .select(col("bv"), col("id").as("id_a"), col("bands").as("bands_a"),
-        pmod(col("id"), lit(SaltChunks.toLong)).as("salt"))
-    val right = dense
-      .select(col("bv"), col("id").as("id_b"), col("bands").as("bands_b"),
-        explode(sequence(lit(0L), lit(SaltChunks.toLong - 1))).as("salt"))
-    val fanned = left.hint("shuffle_hash").join(right, Seq("bv", "salt"))
-      .where(col("id_a") < col("id_b") &&
-        gf.first_agree_key(col("bands_a"), col("bands_b")) === col("bv"))
-      .select("id_a", "id_b")
     // checkpoint: like every other branch, hand back a materialized pair
     // set, so a consumer that reads it more than once never re-executes the
     // dense join
-    small.union(fanned).distinct().localCheckpoint()
+    small.union(saltedSelfJoin(dense, "keys", (a, b, bv) => gf.first_agree_key(a, b) === bv))
+      .distinct().localCheckpoint()
   }
 
   /** primitive-field rows for the walk's encoder boundaries: scala Tuple3 is
@@ -310,11 +328,12 @@ object Dedup {
     * bv is in this partition (hash partitioned).
     *
     * Runs of ≥ [[BucketRunPairs.SubBucketMin]] members take a pigeonhole
-    * SUB-BUCKET pass instead of the O(n²) cursor walk: the 64 phash bits are
-    * partitioned into `maxHamming+1` interleaved classes, members are
-    * grouped by each class value, and only within-group pairs are compared
-    * (a pair within Hamming ≤ maxHamming must agree on ≥ 1 class — same
-    * pigeonhole as the block channel, applied recursively inside a bucket).
+    * SUB-BUCKET pass instead of the O(n²) cursor walk: members are grouped
+    * by each of the `maxHamming+1` interleaved phash class keys
+    * ([[graft.hash.HashKernels.classKey]]), and only within-group pairs are
+    * compared (a pair within Hamming ≤ maxHamming must agree on ≥ 1 class —
+    * same pigeonhole as the block channel, applied recursively inside a
+    * bucket).
     * Pairs are deduped by their FIRST agreeing class, so output equals the
     * full cross-product walk exactly (BucketRunPairsSpec). Large LSH buckets
     * are dominated by FALSE band collisions with near-random phashes, where
@@ -494,8 +513,8 @@ object Dedup {
     @inline private def firstAgreeBlockKey(pa: Long, pb: Long): Long = {
       var c = 0
       while (c < firstAgreeBlocks) {
-        val ka = BucketRunPairs.blockKey(pa, firstAgreeBlocks, c)
-        if (ka == BucketRunPairs.blockKey(pb, firstAgreeBlocks, c)) return ka
+        val ka = HashKernels.blockKey(pa, firstAgreeBlocks, c)
+        if (ka == HashKernels.blockKey(pb, firstAgreeBlocks, c)) return ka
         c += 1
       }
       Long.MinValue // unreachable for Hamming-passed pairs; never equals a bv tag
@@ -522,37 +541,15 @@ object Dedup {
       val classes = maxHamming + 1
       cSubRuns += 1
       cSubSorted += classes.toLong * n
-      // per-class per-member key: gather bits j ≡ c (mod classes). The
-      // shipped config (hammingThreshold 3 ⇒ 4 classes) takes the ~12-op
-      // perfect-unshuffle kernel; other class counts keep the per-bit loop.
+      // per-class per-member keys, class-major; class c's are filled on its
+      // own pass (the first-agree check reads only the classes before it)
       val keys = new Array[Long](classes * n)
-      var m = 0
-      if (classes == 4) {
-        import graft.hash.HashKernels.unzip4
-        while (m < n) {
-          val ph = phs(m)
-          keys(m) = unzip4(ph, 0)
-          keys(n + m) = unzip4(ph, 1)
-          keys(2 * n + m) = unzip4(ph, 2)
-          keys(3 * n + m) = unzip4(ph, 3)
-          m += 1
-        }
-      } else
-      while (m < n) {
-        val ph = phs(m)
-        var j = 0
-        while (j < 64) {
-          val c = j % classes
-          keys(c * n + m) |= ((ph >>> j) & 1L) << (j / classes)
-          j += 1
-        }
-        m += 1
-      }
       val packed = new Array[Long](n)
+      var m = 0
       var c = 0
       while (c < classes) {
         val off = c * n
-        // key-packing invariant: class keys occupy ceil(64/classes) bits, so
+        // key-packing invariant: class keys occupy 64/classes bits, so
         // for classes >= 2 a key fits 32 bits and `key << 20 | member` is an
         // EXACT sort key (member index <= cap = 2^20, enforced in the ctor).
         // classes == 1 (maxHamming = 0) would truncate the 64-bit key to 44
@@ -561,7 +558,12 @@ object Dedup {
         // the only class), and with a single class the walk is equivalent to
         // grouping by the full phash anyway.
         m = 0
-        while (m < n) { packed(m) = (keys(off + m) << 20) | m; m += 1 }
+        while (m < n) {
+          val k = HashKernels.classKey(phs(m), classes, c)
+          keys(off + m) = k
+          packed(m) = (k << 20) | m
+          m += 1
+        }
         val tSort = if (counters != null) System.nanoTime() else 0L
         java.util.Arrays.sort(packed)
         if (counters != null) cSubSortNs += System.nanoTime() - tSort
@@ -609,19 +611,6 @@ object Dedup {
   }
 
   private[graft] object BucketRunPairs {
-    /** single interleaved block key — must stay BIT-IDENTICAL to
-      * `Kernels.interleavedBlockKeys(phash, blocks)(i)` (the key generator
-      * of the block channels); equality is spec-gated in BucketRunPairsSpec. */
-    @inline def blockKey(phash: Long, blocks: Int, i: Int): Long =
-      if (blocks == 4) (i.toLong << 56) | graft.hash.HashKernels.unzip4(phash, i)
-      else {
-        val width = 64 / blocks
-        var v = 0L
-        var j = 0
-        while (j < width) { v |= ((phash >>> (j * blocks + i)) & 1L) << j; j += 1 }
-        (i.toLong << 56) | v
-      }
-
     /** run size at which the pigeonhole sub-bucket pass beats the O(n²)
       * cursor walk (sort cost ≈ classes·n·log n vs n²/2 comparisons). */
     val SubBucketMin = 64
@@ -637,14 +626,13 @@ object Dedup {
   /** exact-cover candidate pairs (numeric ids): same interleaved block key,
     * Hamming-filtered in the join stage. */
   def candidatesPhashBlocks(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val keyed = prepared(corpus)
-      .select(col("id"), col("phash"),
-        explode(gf.phash_block_keys(col("phash"), blocksFor(cfg))).as("bv"))
-    // keyedRows: cheap parquet count × blocks, sizing the walk exchange;
+    val blocks = blocksFor(cfg)
     // firstAgreeBlocks: keys derive from the carried phash, so the walk can
     // emit each pair only from its owning (first-agreeing) block bucket
-    saltedBucketPairs(keyed, cfg.hammingThreshold,
-      keyedRows = corpus.count() * blocksFor(cfg), firstAgreeBlocks = blocksFor(cfg))
+    saltedBucketPairs(
+      prepared(corpus).select(col("id"), col("phash"),
+        gf.phash_block_keys(col("phash"), blocks).as("keys")),
+      cfg.hammingThreshold, firstAgreeBlocks = blocks)
   }
 
   /** SimHash pigeonhole candidates (numeric ids): interleaved block keys
@@ -661,12 +649,10 @@ object Dedup {
     * ~ n/2^width — past ~10^6 rows use [[candidatesMinhash]] instead. */
   def candidatesSimhash(sigs: DataFrame, cfg: Config = defaultConfig,
       simhashBlocks: Int = 8): DataFrame = {
-    val keyed = sigs
-      .select(idNum(col("image_id")).as("id"), col("phash"),
-        explode(gf.phash_block_keys(col("simhash"), simhashBlocks)).as("bv"))
-    // keyedRows: callers hand a materialized sigs frame, so the count is cheap
-    saltedBucketPairs(keyed, cfg.hammingThreshold,
-      keyedRows = sigs.count() * simhashBlocks)
+    saltedBucketPairs(
+      sigs.select(idNum(col("image_id")).as("id"), col("phash"),
+        gf.phash_block_keys(col("simhash"), simhashBlocks).as("keys")),
+      cfg.hammingThreshold)
   }
 
   /** full simhash-channel dup-pair query (same confirm predicate). */
@@ -689,15 +675,14 @@ object Dedup {
     * keys are 256 B/row vs 1 KB/row for the 128-perm signature, so the
     * persisted snapshot (and its re-read on the hot-bucket path) moves 4×
     * fewer bytes — the bandwidth that dominates past ~8 local cores. */
-  def candidatesFromBands(sigs: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val keyed = sigs
-      .select(idNum(col("image_id")).as("id"), col("phash"), explode(col("bands")).as("bv"))
-    // keyedRows: every shipped caller (dupPairsMinhash, Bench.pipelineE2E,
-    // ResumablePipeline) hands a materialized sigs frame, so the count is a
-    // cheap cached-block pass, not a recompute of the signature stage
-    saltedBucketPairs(keyed, cfg.hammingThreshold,
-      keyedRows = sigs.count() * cfg.bands)
-  }
+  def candidatesFromBands(sigs: DataFrame, cfg: Config = defaultConfig): DataFrame =
+    // every shipped caller (dupPairsMinhash, Bench.pipelineE2E,
+    // ResumablePipeline) hands a materialized sigs frame, so the walk's
+    // sizing job is a cheap cached-block pass, not a recompute of the
+    // signature stage
+    saltedBucketPairs(
+      sigs.select(idNum(col("image_id")).as("id"), col("phash"), col("bands").as("keys")),
+      cfg.hammingThreshold)
 
   /** Both endpoints of every candidate pair joined to ONE side table
     * `(id, phash, payload)`: side columns come back suffixed `_a` / `_b`.

@@ -93,33 +93,15 @@ object Kernels {
   def lcsConfirm(a: UTF8String, b: UTF8String, frac: Double, minAbs: Int): Boolean =
     SuffixArrays.lcsConfirm(a.toString, b.toString, frac, minAbs)
 
-  /** interleaved pigeonhole block keys of a 64-bit hash: bit j of block i is
-    * source bit `j*blocks + i`, so correlated ADJACENT bits (neighboring DCT
-    * coefficients in a pHash) spread across different blocks — block values
-    * stay near-uniform and LSH buckets near-balanced. Any partition of the
-    * 64 bit positions into `blocks` classes preserves the exact-cover
-    * guarantee for Hamming ≤ blocks−1. Returns one packed value per block
-    * with the block index in the high byte. */
+  /** interleaved pigeonhole block keys of a 64-bit hash
+    * ([[graft.hash.HashKernels.blockKey]]): interleaving keeps block values
+    * near-uniform and LSH buckets near-balanced, and the blocks are an exact
+    * cover of Hamming ≤ blocks−1. One packed value per block, with the block
+    * index in the high byte. */
   def interleavedBlockKeys(phash: Long, blocks: Int): ArrayData = {
     val out = new Array[Long](blocks)
-    val width = 64 / blocks
     var i = 0
-    if (blocks == 4) { // shipped Hamming-3 config: perfect-unshuffle kernel
-      while (i < 4) {
-        out(i) = (i.toLong << 56) | graft.hash.HashKernels.unzip4(phash, i)
-        i += 1
-      }
-    } else
-    while (i < blocks) {
-      var v = 0L
-      var j = 0
-      while (j < width) {
-        v |= ((phash >>> (j * blocks + i)) & 1L) << j
-        j += 1
-      }
-      out(i) = (i.toLong << 56) | v
-      i += 1
-    }
+    while (i < blocks) { out(i) = graft.hash.HashKernels.blockKey(phash, blocks, i); i += 1 }
     longs(out)
   }
 

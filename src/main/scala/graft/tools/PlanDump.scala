@@ -45,7 +45,9 @@ object PlanDump {
         import org.apache.spark.sql.functions._
         import graft.spark.{functions => gf}
         corpus.select(expr("cast(substring(image_id, 5) as bigint)").as("id"), col("phash"),
-            explode(gf.phash_block_keys(col("phash"), 4)).as("bv"))
+            gf.phash_block_keys(col("phash"), 4).as("keys"))
+          .select(col("id"), col("phash"), explode_outer(col("keys")).as("bv"))
+          .where(col("bv").isNotNull)
           .repartition(col("bv"))
           .sortWithinPartitions(col("bv"))
       }),

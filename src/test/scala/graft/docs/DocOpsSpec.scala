@@ -102,12 +102,10 @@ class DocOpsSpec extends AnyFunSuite {
       s"vs brute: missing=${(brute -- salted).size} extra=${(salted -- brute).size}")
   }
 
-  test("first-agreeing-band dedup: candidate set identical, hot path forced") {
-    // mega-cluster hot in EVERY band plus churn members whose pairs
-    // first-agree at varying band indexes, plus cold clusters whose pairs
-    // the streaming walk (not the dense join) must still emit — the
-    // losslessness claim of the dedup-at-source join, gated against the
-    // brute-force set of pairs that share at least one band key
+  /** mega-cluster hot in EVERY band plus churn members whose pairs
+    * first-agree at varying band indexes, plus cold clusters whose pairs
+    * the streaming walk (not the dense join) must still emit */
+  private def firstAgreeDocs = {
     import spark.implicits._
     val boiler = "cookie policy banner text repeated on every page of the site forever"
     val hot = (0 until 120).map(i => (i.toLong, boiler))
@@ -117,9 +115,19 @@ class DocOpsSpec extends AnyFunSuite {
       val base = (0 until 14).map(_ => s"w${g.nextInt(5000)}").mkString(" ")
       Seq((300L + 2 * c, base), (301L + 2 * c, base + " zz"))
     }
-    val d = (hot ++ churn ++ cold).toDF("doc_id", "text")
-    val fa = DocOps.minhashCandidates(d, 3, hotThreshold = 16)
+    (hot ++ churn ++ cold).toDF("doc_id", "text")
+  }
+
+  private def forcedHotCandidates(d: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    DocOps.minhashCandidates(d, 3, hotThreshold = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  test("first-agreeing-band dedup: candidate set identical, hot path forced") {
+    // the losslessness claim of the dedup-at-source join, gated against the
+    // brute-force set of pairs that share at least one band key
+    import spark.implicits._
+    val d = firstAgreeDocs
+    val fa = forcedHotCandidates(d)
     // the channel's own band keys (minhashCandidates defaults), collected once
     val gf = graft.spark.functions
     val bands = d.select(col("doc_id"),
@@ -132,6 +140,12 @@ class DocOpsSpec extends AnyFunSuite {
     assert(brute.size > (120 * 119) / 2) // the hot fan-out really engaged
     assert(fa === brute,
       s"first-agree diff: missing=${(brute -- fa).size} extra=${(fa -- brute).size}")
+  }
+
+  test("forced-hot first-agree candidates: set independent of the shuffle-partition count") {
+    val (at4, at8) = graft.SessionConf.atPartitions4And8(spark)(forcedHotCandidates(firstAgreeDocs))
+    assert(at4.size > (120 * 119) / 2) // the hot fan-out really engaged
+    assert(at4 === at8, s"missing at 8=${(at4 -- at8).size} extra at 8=${(at8 -- at4).size}")
   }
 
   test("planted boilerplate hot bucket: simhash channel == brute force under salting") {

@@ -142,4 +142,21 @@ class HashKernelsSpec extends AnyFunSuite {
     for (x <- cases; c <- 0 until 4)
       assert(HashKernels.unzip4(x, c) === gather(x, c), f"x=$x%016x c=$c")
   }
+  test("classKey/blockKey == per-bit interleaved gather for 1-8 classes") {
+    // the block-key definition the channels bucket on: bit j of class c is
+    // source bit j*classes + c, j < 64/classes; block index in the high byte
+    def gather(x: Long, classes: Int, c: Int): Long = {
+      var v = 0L
+      var j = 0
+      while (j < 64 / classes) { v |= ((x >>> (j * classes + c)) & 1L) << j; j += 1 }
+      v
+    }
+    val rnd = new scala.util.Random(9)
+    val cases = Seq(0L, -1L, Long.MinValue, Long.MaxValue) ++ Seq.fill(200)(rnd.nextLong())
+    for (x <- cases; classes <- 1 to 8; c <- 0 until classes) {
+      assert(HashKernels.classKey(x, classes, c) === gather(x, classes, c),
+        f"x=$x%016x classes=$classes c=$c")
+      assert(HashKernels.blockKey(x, classes, c) === ((c.toLong << 56) | gather(x, classes, c)))
+    }
+  }
 }

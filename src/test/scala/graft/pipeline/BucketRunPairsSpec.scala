@@ -152,14 +152,6 @@ class BucketRunPairsSpec extends AnyFunSuite {
   }
 
   test("first-agree block dedup: exactly-once emission, set equals brute force (r6)") {
-    // blockKey must stay bit-identical to the key generator the channels use
-    val rnd0 = new scala.util.Random(99)
-    for (_ <- 0 until 200; blocks <- Seq(2, 4, 8)) {
-      val ph = rnd0.nextLong()
-      val want = graft.spark.expr.Kernels.interleavedBlockKeys(ph, blocks).toLongArray()
-      val got = Array.tabulate(blocks)(i => Dedup.BucketRunPairs.blockKey(ph, blocks, i))
-      assert(got.toSeq === want.toSeq, s"phash=$ph blocks=$blocks")
-    }
     // walk the REAL block-keyed layout (every row exploded to its `blocks`
     // bucket keys, hash-co-located per key): with firstAgreeBlocks on, the
     // multiset of emitted pairs must have NO duplicates and its set must
@@ -176,7 +168,7 @@ class BucketRunPairsSpec extends AnyFunSuite {
         val flips = rnd.nextInt(4)
         (0 until flips).foreach(_ => ph ^= 1L << rnd.nextInt(64))
         (0 until blocks).map { i =>
-          (Dedup.BucketRunPairs.blockKey(ph, blocks, i), id, ph)
+          (graft.hash.HashKernels.blockKey(ph, blocks, i), id, ph)
         }
       }.sortBy(_._1)
       def run(fab: Int) =
@@ -187,6 +179,27 @@ class BucketRunPairsSpec extends AnyFunSuite {
       val once = run(blocks)
       assert(once.distinct.size === once.size, s"trial=$trial: duplicate emissions")
       assert(once.toSet === run(0).toSet, s"trial=$trial: pair set changed")
+    }
+  }
+
+  test("sub-bucketed runs == brute force at every class count (maxHamming 0-7)") {
+    // class counts that do not divide 64 (3, 5, 6, 7) leave the top bits in
+    // no class: keys merge more, but a pair within maxHamming must still
+    // agree on a class, and must be emitted once
+    val rnd = new scala.util.Random(17)
+    for (maxHamming <- 0 to 7) {
+      val base = rnd.nextLong()
+      val rows = (1 to 150).map { i =>
+        val ph = if (i % 3 == 0) rnd.nextLong()
+          else (0 until rnd.nextInt(maxHamming + 3))
+            .foldLeft(base) { (h, _) =>
+              h ^ (1L << (if (rnd.nextBoolean()) 60 + rnd.nextInt(4) else rnd.nextInt(64)))
+            }
+        (1L, i.toLong, ph)
+      }
+      val got = walk(rows, maxHamming, 4096).toSeq
+      assert(got.distinct.size === got.size, s"maxHamming=$maxHamming: duplicate emissions")
+      assert(got.toSet === brute(rows, maxHamming, 4096), s"maxHamming=$maxHamming")
     }
   }
 

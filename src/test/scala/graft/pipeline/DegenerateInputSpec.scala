@@ -106,4 +106,20 @@ class DegenerateInputSpec extends AnyFunSuite {
       assert(DocOps.simhashDupPairs(d).count() === 0L)
     }
   }
+
+  test("minhash candidates skip docs with fewer than n tokens") {
+    // without the filter "", "a b" and "x" share the empty n-gram set's
+    // signature, so one bucket per band: 3 candidate pairs the confirm drops
+    val short = docs(Seq((1L, ""), (2L, "a b"), (3L, "x"), (4L, null),
+      (5L, "one two three four five")))
+    assert(DocOps.minhashCandidates(short).count() === 0L)
+    assert(DocOps.minhashDupPairs(short).count() === 0L)
+    // beside two identical real docs, the twin pair alone survives both stages
+    val withTwins = docs(Seq((1L, ""), (2L, "a b"), (3L, "x"),
+      (6L, "the quick brown fox jumps over it"), (7L, "the quick brown fox jumps over it")))
+    assert(DocOps.minhashCandidates(withTwins).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq === Seq((6L, 7L)))
+    assert(DocOps.minhashDupPairs(withTwins).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq === Seq((6L, 7L)))
+  }
 }

@@ -283,15 +283,30 @@ class PipelineSpec extends AnyFunSuite {
       .localCheckpoint()
     check("candidatesFromBands", Dedup.candidatesFromBands(banded), pq)
     // a hot-path frame: 60 rows share one phash, hot at threshold 16
+    val hot = hotCorpus
+    check("saltedBucketPairs (hot)", Dedup.saltedBucketPairs(hotKeyed, maxHamming = 3, hotThreshold = 16), hot)
+    if (failures.nonEmpty) fail(failures.mkString("\n"))
+  }
+
+  /** 60 rows share one phash (hot at walk threshold 16) beside 40 unique
+    * ones, read back from parquet. */
+  private lazy val hotCorpus = {
     import spark.implicits._
     val hotPath = java.nio.file.Files.createTempDirectory("confirmsidehot").toString
     ((0 until 60).map(i => (f"img_$i%010d", 0x1234567890abcdefL, s"caption $i")) ++
       (100 until 140).map(i => (f"img_$i%010d", 0x0f0f0f0f0f0f0f0fL ^ (i.toLong << 16), s"caption $i")))
       .toDF("image_id", "phash", "caption").write.mode("overwrite").parquet(hotPath)
-    val hot = spark.read.parquet(hotPath)
-    val keyed = Dedup.prepared(hot)
-      .select(col("id"), col("phash"), explode(gf.phash_block_keys(col("phash"), 4)).as("bv"))
-    check("saltedBucketPairs (hot)", Dedup.saltedBucketPairs(keyed, maxHamming = 3, hotThreshold = 16), hot)
-    if (failures.nonEmpty) fail(failures.mkString("\n"))
+    spark.read.parquet(hotPath)
+  }
+
+  private def hotKeyed = Dedup.prepared(hotCorpus)
+    .select(col("id"), col("phash"), gf.phash_block_keys(col("phash"), 4).as("keys"))
+
+  test("hot saltedBucketPairs frame: pair set independent of the shuffle-partition count") {
+    val (at4, at8) = graft.SessionConf.atPartitions4And8(spark)(
+      Dedup.saltedBucketPairs(hotKeyed, maxHamming = 3, hotThreshold = 16)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(at4.size >= 60 * 59 / 2)
+    assert(at4 === at8, s"missing at 8=${(at4 -- at8).size} extra at 8=${(at8 -- at4).size}")
   }
 }
