@@ -14,7 +14,9 @@ import graft.spark.{functions => gf}
   * index join (exact) or banded MinHash LSH (sub-quadratic candidate
   * generation); SimHash block keys give an exact-cover channel for
   * Hamming ≤ blocks−1. All joins shuffle on short keys; AQE skew-join
-  * handles hot shingles.
+  * handles hot shingles. The MinHash channel tokenizes each doc once: its
+  * confirm walks the gram sets of the walk's checkpointed frame, read
+  * through one side exchange that both endpoint joins share.
   */
 object DocOps {
 
@@ -118,16 +120,26 @@ object DocOps {
     * volume). The walk streams cold buckets from a tight loop and fans hot
     * buckets across salted tasks via salt-and-replicate — the same
     * machinery the image channel uses (planted-boilerplate case in
-    * DocOpsSpec mirrors SaltingSpec). */
+    * DocOpsSpec mirrors SaltingSpec).
+    *
+    * Each doc is tokenized ONCE: the confirm is the exact merge-walk jaccard
+    * over the gram sets the walk's frame already holds, not a per-pair
+    * re-tokenize of both texts. Both endpoints join to the one `(id, gs)`
+    * side under fresh candidate attributes
+    * ([[graft.pipeline.Dedup.freshCandidates]]), so the side is exchanged
+    * once and the second join reuses it. */
   def minhashDupPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
       hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
-    val cand = minhashCandidates(docs, n, numPerm, bands, rowsPerBand, hotThreshold)
-    val texts = docs.select(col("doc_id"), col("text"))
-    cand
-      .join(texts.toDF("id_a", "text_a"), "id_a")
-      .join(texts.toDF("id_b", "text_b"), "id_b")
-      .where(gf.ngram_jaccard(col("text_a"), col("text_b"), n) >= tau)
+    val (frame, cand) = minhashWalk(docs, n, numPerm, bands, rowsPerBand, hotThreshold)
+    val gs = frame.select(col("id"), col("gs"))
+    Dedup.freshCandidates(cand)
+      .join(gs.toDF("id_a", "gs_a"), "id_a")
+      .join(gs.toDF("id_b", "gs_b"), "id_b")
+      // coalesce: as in ngramDupPairsExact, no isnotnull filter is inferred
+      // into the side subtrees; row set unchanged, the frame's gram sets are
+      // never null
+      .where(coalesce(gf.exact_jaccard(col("gs_a"), col("gs_b")), lit(-1.0)) >= tau)
       .select("id_a", "id_b")
   }
 
@@ -135,22 +147,29 @@ object DocOps {
     * exposed for the docskew scale instrument (BENCH/SCALE.md). */
   private[graft] def minhashCandidates(docs: DataFrame, n: Int = 3,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
-      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
+    minhashWalk(docs, n, numPerm, bands, rowsPerBand, hotThreshold)._2
+
+  /** the channel's checkpointed frame `(id, gs, keys)` — the gram set and
+    * its band keys, one tokenize per doc — and the walk's candidate pairs
+    * `(id_a, id_b)` over it. */
+  private def minhashWalk(docs: DataFrame, n: Int, numPerm: Int, bands: Int,
+      rowsPerBand: Int, hotThreshold: Int): (DataFrame, DataFrame) = {
     // docs with fewer than `n` tokens have no n-gram: they would all share
     // the empty set's sentinel signature, hence one bucket per band, and
     // pair with each other only to fail the confirm (jaccard 0).
-    // The banded frame is materialized BEFORE the walk's explode: the hot
-    // path re-executes its input filtered to hot buckets, and with the
-    // signature inline that re-run would repeat the 128-perm stage over the
-    // full corpus (the Dedup.dupPairsMinhash lesson); the band-key arrays
-    // are also 4× smaller than the signature they replace, and the walk's
-    // sizing job reads them from the checkpoint
-    val banded = docs.where(hasNgrams(n)).select(col("doc_id").as("id"),
-      gf.band_keys(
-        gf.minhash_sig(gf.token_ngrams(col("text"), n), numPerm, 42L),
-        bands, rowsPerBand).as("keys"))
+    // The frame is materialized BEFORE the walk's explode: the hot path
+    // re-executes its input filtered to hot buckets, and with the signature
+    // inline that re-run would repeat the 128-perm stage over the full
+    // corpus (the Dedup.dupPairsMinhash lesson); the confirm reads the gram
+    // sets from it, and the walk's sizing job reads the band keys
+    val frame = docs.where(hasNgrams(n))
+      .select(col("doc_id").as("id"), gf.token_ngrams(col("text"), n).as("gs"))
+      .withColumn("keys",
+        gf.band_keys(gf.minhash_sig(col("gs"), numPerm, 42L), bands, rowsPerBand))
       .localCheckpoint()
-    Dedup.saltedAllPairs(banded, hotThreshold).toDF("id_a", "id_b")
+    (frame, Dedup.saltedAllPairs(frame.select(col("id"), col("keys")), hotThreshold)
+      .toDF("id_a", "id_b"))
   }
 
   /** SimHash near-dup pairs: 64-bit SimHash over token n-grams, pigeonhole

@@ -684,26 +684,32 @@ object Dedup {
       sigs.select(idNum(col("image_id")).as("id"), col("phash"), col("bands").as("keys")),
       cfg.hammingThreshold)
 
+  /** The candidate pairs under fresh attributes, for a confirm that joins
+    * both endpoints to ONE side table and wants the side read once.
+    *
+    * The two endpoint subtrees differ only in column names, which plan
+    * canonicalization erases, so AQE reuses the first side exchange for the
+    * second join. That needs both subtrees to carry the same filters, and
+    * constraint inference would plant the candidate frame's own predicates
+    * on the endpoint they name: the walk's marker filter
+    * `id_a =!= Long.MinValue` ([[runWalk]]) reaches side A alone, and a
+    * hot-path union (kept through `localCheckpoint`) plants a disjunction on
+    * it. The identity map hands the join fresh candidate attributes that
+    * carry no constraints, so each endpoint infers only its join key's
+    * `isnotnull` and both canonicalize identically whatever produced the
+    * candidates. */
+  private[graft] def freshCandidates(candidates: DataFrame): DataFrame =
+    candidates.map((r: Row) => r)(Encoders.row(candidates.schema))
+
   /** Both endpoints of every candidate pair joined to ONE side table
     * `(id, phash, payload)`: side columns come back suffixed `_a` / `_b`.
-    *
-    * The side is scanned, projected and shuffled ONCE: the two endpoint
-    * subtrees differ only in column names, which plan canonicalization
-    * erases, so AQE reuses the first side exchange for the second join.
-    * That needs both subtrees to carry the same filters, and constraint
-    * inference would plant the candidate frame's own predicates on the
-    * endpoint they name: the walk's marker filter `id_a =!= Long.MinValue`
-    * ([[runWalk]]) reaches side A alone, and a hot-path union (kept through
-    * `localCheckpoint`) plants a disjunction on it. The identity map hands
-    * the join fresh candidate attributes that carry no constraints, so each
-    * endpoint infers only its join key's `isnotnull` and both canonicalize
-    * identically whatever produced the candidates.
+    * The side is scanned, projected and shuffled ONCE ([[freshCandidates]]).
     *
     * shuffle_hash: broadcast builds are single-threaded driver work and
     * sort-merge would sort the fat payload arrays. */
   private def joinEndpoints(candidates: DataFrame, side: DataFrame): DataFrame = {
     def endpoint(s: String): DataFrame = side.toDF(side.columns.map(c => s"${c}_$s"): _*)
-    candidates.map((r: Row) => r)(Encoders.row(candidates.schema))
+    freshCandidates(candidates)
       .hint("shuffle_hash").join(endpoint("a"), "id_a")
       .hint("shuffle_hash").join(endpoint("b"), "id_b")
   }

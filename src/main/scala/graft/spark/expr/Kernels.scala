@@ -321,7 +321,7 @@ object Kernels {
   }
 
   /** one-pass md5-rank OMH blocks — the codegen'd fold of the built-ins
-    * formulation in [[graft.oracle.Md5Channels]] (dnaOmhBlocksBuiltins):
+    * formulation Md5ChannelsSpec gates it against:
     * per k-gram occurrence ONE digest h63(kmer:occ); per permutation p the
     * rank is h ^ seeds(p), the l unsigned-smallest (63-bit ⇒ signed order;
     * rank ties break on position, mirroring array_sort's struct order) win,

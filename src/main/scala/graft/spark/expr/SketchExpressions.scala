@@ -95,7 +95,7 @@ case class XorMinMinimaExpr(child: Expression, numPerm: Int)
 }
 
 /** One-pass md5-rank OMH blocks over the xor-permutation oracle seeds: the
-  * codegen'd fold of [[graft.oracle.Md5Channels]]'s built-ins formulation
+  * codegen'd fold of the OMH twin's built-ins formulation
   * (one digest per k-gram occurrence, m long-xor rankings, bottom-l per
   * permutation, position-ordered concat) — byte-identical output on the
   * callers' single-byte-char domain (Md5ChannelsSpec). The oracle SQL keeps

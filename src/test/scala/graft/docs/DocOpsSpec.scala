@@ -3,6 +3,7 @@ package graft.docs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.pipeline.Dedup
 
 class DocOpsSpec extends AnyFunSuite {
 
@@ -50,6 +51,81 @@ class DocOpsSpec extends AnyFunSuite {
     assert(exact.nonEmpty)
     assert(mh.subsetOf(exact))
     assert(mh.intersect(exact).size.toDouble / exact.size >= 0.99)
+  }
+
+  /** near-dup families on every tokenizer path: tabs and runs of spaces,
+    * non-ASCII text (the String fallback of `tokenNgramsBytes`), docs of
+    * exactly n = 3 tokens, a 40-doc boilerplate family (hot at threshold
+    * 16), null / empty / short docs, and doc ids that appear twice with
+    * different texts */
+  private def confirmDocs = {
+    import spark.implicits._
+    val ascii = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val uni = "héllo wörld ünïcode méh straße café naïve résumé jalapeño über alles gut"
+    val boiler = "terms of service apply to all users and all content on this site always"
+    def variants(base: String, from: Long): Seq[(Long, String)] = {
+      val w = base.split(" ")
+      Seq(base, w.mkString("\t"), w.mkString("   "), " " + base + "\t ",
+        base + " extra", (w.take(10) ++ Seq("one", "two", "three", "four")).mkString(" "),
+        (w.take(6) ++ w.drop(6).reverse).mkString(" ")).zipWithIndex
+        .map { case (t, i) => (from + i, t) }
+    }
+    val rows: Seq[(Long, String)] = variants(ascii, 0) ++ variants(uni, 100) ++
+      (0 until 40).map(i => (200L + i, if (i % 4 == 0) boiler + s" tail${i % 3}" else boiler)) ++
+      Seq((300L, "alpha beta gamma"), (301L, "alpha\tbeta  gamma"), (302L, "alpha beta gamma"),
+        (303L, "alpha beta delta"), (304L, "ünï cödé ßtr"), (305L, "ünï cödé ßtr"),
+        (400L, null), (401L, ""), (402L, "x"), (403L, "a b"), (404L, " \t "),
+        (500L, ascii), (500L, uni), (501L, "a b"), (501L, boiler))
+    rows.toDF("doc_id", "text")
+  }
+
+  test("minhash confirm over the frame's gram sets == per-pair ngram_jaccard over the texts") {
+    val gf = graft.spark.functions
+    val d = confirmDocs
+    val texts = d.select(col("doc_id"), col("text"))
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    for (hot <- Seq(Dedup.AllPairsHotCap, 16)) {
+      val cand = DocOps.minhashCandidates(d, 3, hotThreshold = hot)
+      // the reference: the per-pair re-tokenizing predicate over both texts
+      val reference = pairs(cand
+        .join(texts.toDF("id_a", "text_a"), "id_a")
+        .join(texts.toDF("id_b", "text_b"), "id_b")
+        .where(gf.ngram_jaccard(col("text_a"), col("text_b"), 3) >= 0.6)
+        .select("id_a", "id_b"))
+      val got = pairs(DocOps.minhashDupPairs(d, 3, 0.6, hotThreshold = hot))
+      assert(got === reference,
+        s"hotThreshold=$hot: missing=${reference.diff(got)} extra=${got.diff(reference)}")
+      // every family confirms pairs, and the predicate rejects candidates
+      for ((lo, hi) <- Seq((0L, 7L), (100L, 107L), (200L, 240L), (300L, 306L)))
+        assert(got.exists { case (a, b) => a >= lo && b < hi }, s"hotThreshold=$hot: none in [$lo, $hi)")
+      assert(got.exists(p => p._1 == 500L || p._2 == 500L))
+      assert(got.size < cand.count(), s"hotThreshold=$hot: the confirm rejected no candidate")
+    }
+  }
+
+  test("minhash confirm plan: no per-pair tokenize, one side exchange reused by both joins") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import graft.spark.expr.{NgramJaccard, TokenNgrams}
+    object Plans extends AdaptiveSparkPlanHelper
+    // a side exchange carries one endpoint's id; the candidate pairs carry both
+    def side(e: Exchange): Boolean =
+      e.output.count(a => a.name == "id_a" || a.name == "id_b") == 1
+    def check(df: DataFrame): Unit = {
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val tokenize = Plans.collect(plan) { case p => p }.flatMap(_.expressions)
+        .filter(_.exists { case _: NgramJaccard | _: TokenNgrams => true; case _ => false })
+      assert(tokenize.isEmpty, s"tokenizing expressions $tokenize in:\n$plan")
+      // a reused stage is a leaf, so it never counts as a live one
+      val live = Plans.collect(plan) { case e: Exchange if side(e) => e }.size
+      val reused = Plans.collect(plan) { case r: ReusedExchangeExec if side(r.child) => r }.size
+      assert((live, reused) === ((1, 1)), s"live side exchanges, reused ones in:\n$plan")
+    }
+    check(DocOps.minhashDupPairs(docs, 3, 0.6))
+    check(DocOps.minhashDupPairs(confirmDocs, 3, 0.6, hotThreshold = 16))
   }
 
   test("simhash pairs: brute-force equivalence of the block-join channel") {

@@ -24,7 +24,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
       val both = docs.select(
         col("doc_id"),
         Md5Channels.xorMinhashMinima(hs, numPerm).as("fold"),
-        Md5Channels.xorMinhashMinimaBuiltins(hs, numPerm).as("builtins"))
+        Md5Builtins.xorMinhashMinima(hs, numPerm).as("builtins"))
       val bad = both.where(not(col("fold") <=> col("builtins")))
       assert(bad.isEmpty, s"numPerm=$numPerm: ${bad.count()} mismatching rows")
       assert(both.count() > 400)
@@ -42,7 +42,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
     for (df <- Seq(shapes, nullShapes)) {
       val both = df.select(
         Md5Channels.xorMinhashMinima(col("hs"), 4).as("fold"),
-        Md5Channels.xorMinhashMinimaBuiltins(col("hs"), 4).as("builtins"))
+        Md5Builtins.xorMinhashMinima(col("hs"), 4).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty)
     }
   }
@@ -63,7 +63,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
       val dom = df.where(size(split(col("text"), " ")) >= n)
       val both = dom.select(
         Md5Channels.tokenNgramStrings(col("text"), n).as("fold"),
-        Md5Channels.tokenNgramStringsBuiltins(col("text"), n).as("builtins"))
+        Md5Builtins.tokenNgramStrings(col("text"), n).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty, s"n=$n")
     }
   }
@@ -82,7 +82,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
     for (df <- Seq(real, weird)) {
       val both = df.select(
         Md5Channels.hashes63(col("grams")).as("fold"),
-        Md5Channels.hashes63Builtins(col("grams")).as("builtins"))
+        Md5Builtins.hashes63(col("grams")).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty)
     }
   }
@@ -106,7 +106,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
     for (df <- Seq(real, shapes, nullShapes)) {
       val both = df.select(
         Md5Channels.simhash64Md5(col("hs")).as("fold"),
-        Md5Channels.simhash64Md5Builtins(col("hs")).as("builtins"))
+        Md5Builtins.simhash64Md5(col("hs")).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty)
     }
   }
@@ -183,7 +183,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
       val dom = df.where(length(col("seq")) >= k)
       val both = dom.select(
         graft.spark.functions.omh_md5_blocks(col("seq"), k, l, m).as("fold"),
-        Md5Channels.omhBlocksBuiltins(col("seq"), k, l, m).as("builtins"))
+        Md5Builtins.omhBlocks(col("seq"), k, l, m).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty,
         s"k=$k l=$l m=$m")
       assert(dom.count() > 0)
@@ -199,7 +199,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
         Md5Channels.hashes63(Md5Channels.tokenNgramStrings(col("text"), 3)), numPerm)
       val both = docs.where(size(split(col("text"), " ")) >= 3).select(
         Md5Channels.bandWalkKeys(minima, bands, r).as("fold"),
-        Md5Channels.bandWalkKeysBuiltins(minima, bands, r).as("builtins"))
+        Md5Builtins.bandWalkKeys(minima, bands, r).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty,
         s"numPerm=$numPerm bands=$bands r=$r")
     }
@@ -214,7 +214,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
       Md5Channels.bandKeysMd5(Md5Channels.xorMinhashMinima(hs, 32), 16, 2).as("bks"))
     val viaBuiltins = docs.where(size(split(col("text"), " ")) >= 3).select(
       col("doc_id"),
-      Md5Channels.bandKeysMd5(Md5Channels.xorMinhashMinimaBuiltins(hs, 32), 16, 2).as("bks"))
+      Md5Channels.bandKeysMd5(Md5Builtins.xorMinhashMinima(hs, 32), 16, 2).as("bks"))
     assert(viaFold.exceptAll(viaBuiltins).isEmpty)
     assert(viaBuiltins.exceptAll(viaFold).isEmpty)
   }
