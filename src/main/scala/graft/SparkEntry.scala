@@ -119,14 +119,15 @@ object SparkEntry {
         Dedup.clusters(Dedup.dupPairs(c), c.select("image_id"))).orderBy("part")
     }),
 
-    // image banded-MinHash channel, md5-derived variant (oracle-gated twin
-    // of dup_pairs_minhash: same operator shape, engine-reproducible hashes)
+    // image banded-MinHash channel, md5-derived variant: the oracle-gated
+    // twin of dup_pairs_minhash, a call of its channel core
+    // (Dedup.keyedDupPairs) with md5 band keys
     "dup_pairs_minhash_md5" -> ((s, dir) =>
       Md5Channels.imgMinhashDupPairsMd5(corpus(s, dir)).orderBy("id_a", "id_b")),
 
-    // image SimHash pigeonhole channel (md5-derived majority-vote simhash
-    // over caption tokens; candidates phash-Hamming-filtered like
-    // Dedup.candidatesSimhash; dup_pairs confirm predicate)
+    // image SimHash pigeonhole channel: Dedup.keyedDupPairs (the walk and
+    // dup_pairs confirm of Dedup.dupPairsSimhash) over contiguous blocks of
+    // the md5-derived majority-vote simhash of the caption tokens
     "dup_pairs_simhash" -> ((s, dir) =>
       Md5Channels.imgSimhashDupPairs(corpus(s, dir)).orderBy("id_a", "id_b")),
 
@@ -143,8 +144,9 @@ object SparkEntry {
     "doc_simhash_dup_pairs" -> ((s, dir) =>
       DocOps.simhashDupPairs(docs(s, dir), 3, 3).orderBy("id_a", "id_b")),
 
-    // oracle-gated md5 twins of the doc LSH channels (same operator shapes,
-    // every hash md5-derived so DuckDB reproduces candidates exactly)
+    // oracle-gated md5 twins of the doc LSH channels: calls of the channel
+    // cores (DocOps.minhashPairs / simhashPairs) with md5-derived leaf
+    // kernels, so DuckDB checks the product's filter, walk and confirm
     "doc_minhash_dup_pairs_md5" -> ((s, dir) =>
       Md5Channels.docMinhashDupPairsMd5(docs(s, dir), 3, 0.6).orderBy("id_a", "id_b")),
 
@@ -504,7 +506,7 @@ object SparkEntry {
       "doc_ngram_dup_pairs" -> docNgramPairsSql,
 
       // candidates join on the SAME combined 64-bit key the Spark walk
-      // buckets by (md5half of 'bi:bv' — Md5Channels.bandWalkKey), so even
+      // buckets by (md5half of 'bi:bv' — band_walk_keys), so even
       // 64-bit truncation-collision behavior is engine-identical
       "doc_minhash_dup_pairs_md5" ->
         s"""WITH $docGramsSql,

@@ -102,7 +102,7 @@ object DocOps {
       // index — without this Catalyst specializes each consumer's exchange
       // so the df-groupBy + prefix subplan is computed twice (ReuseExchange
       // never fires across the pruned copies; same lesson as
-      // Dedup.dupPairsMinhash)
+      // Dedup.keyedDupPairs)
       .localCheckpoint()
     (pref, gramSets)
   }
@@ -124,18 +124,38 @@ object DocOps {
     *
     * Each doc is tokenized ONCE: the confirm is the exact merge-walk jaccard
     * over the gram sets the walk's frame already holds, not a per-pair
-    * re-tokenize of both texts. Both endpoints join to the one `(id, gs)`
-    * side under fresh candidate attributes
-    * ([[graft.pipeline.Dedup.freshCandidates]]), so the side is exchanged
-    * once and the second join reuses it. */
+    * re-tokenize of both texts ([[minhashPairs]]). */
   def minhashDupPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
-      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
-    val (frame, cand) = minhashWalk(docs, n, numPerm, bands, rowsPerBand, hotThreshold)
-    val gs = frame.select(col("id"), col("gs"))
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
+    minhashPairs(docs, n, tau, gf.token_ngrams(col("text"), n),
+      minhashBandKeys(numPerm, bands, rowsPerBand), hotThreshold)
+
+  /** the minhash channel's candidate stage (distinct in-bucket pairs),
+    * exposed for the docskew scale instrument (BENCH/SCALE.md). */
+  private[graft] def minhashCandidates(docs: DataFrame, n: Int = 3,
+      numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
+    minhashWalk(docs, n, gf.token_ngrams(col("text"), n),
+      minhashBandKeys(numPerm, bands, rowsPerBand), hotThreshold)._2
+
+  /** the product hash family's band keys of a gram set. */
+  private def minhashBandKeys(numPerm: Int, bands: Int, rowsPerBand: Int): Column => Column =
+    gs => gf.band_keys(gf.minhash_sig(gs, numPerm, 42L), bands, rowsPerBand)
+
+  /** The doc MinHash channel in any hash family, shared by
+    * [[minhashDupPairs]] and its md5 twin: `gs` is a doc's sorted distinct
+    * gram-hash set (an expression over `text`) and `keys` its band keys.
+    * Both endpoints join to the one `(id, gs)` side under fresh candidate
+    * attributes ([[graft.pipeline.Dedup.freshCandidates]]), so the side is
+    * exchanged once and the second join reuses it. */
+  private[graft] def minhashPairs(docs: DataFrame, n: Int, tau: Double, gs: Column,
+      keys: Column => Column, hotThreshold: Int): DataFrame = {
+    val (frame, cand) = minhashWalk(docs, n, gs, keys, hotThreshold)
+    val sides = frame.select(col("id"), col("gs"))
     Dedup.freshCandidates(cand)
-      .join(gs.toDF("id_a", "gs_a"), "id_a")
-      .join(gs.toDF("id_b", "gs_b"), "id_b")
+      .join(sides.toDF("id_a", "gs_a"), "id_a")
+      .join(sides.toDF("id_b", "gs_b"), "id_b")
       // coalesce: as in ngramDupPairsExact, no isnotnull filter is inferred
       // into the side subtrees; row set unchanged, the frame's gram sets are
       // never null
@@ -143,30 +163,22 @@ object DocOps {
       .select("id_a", "id_b")
   }
 
-  /** the minhash channel's candidate stage (distinct in-bucket pairs),
-    * exposed for the docskew scale instrument (BENCH/SCALE.md). */
-  private[graft] def minhashCandidates(docs: DataFrame, n: Int = 3,
-      numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
-      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
-    minhashWalk(docs, n, numPerm, bands, rowsPerBand, hotThreshold)._2
-
   /** the channel's checkpointed frame `(id, gs, keys)` — the gram set and
     * its band keys, one tokenize per doc — and the walk's candidate pairs
     * `(id_a, id_b)` over it. */
-  private def minhashWalk(docs: DataFrame, n: Int, numPerm: Int, bands: Int,
-      rowsPerBand: Int, hotThreshold: Int): (DataFrame, DataFrame) = {
+  private def minhashWalk(docs: DataFrame, n: Int, gs: Column, keys: Column => Column,
+      hotThreshold: Int): (DataFrame, DataFrame) = {
     // docs with fewer than `n` tokens have no n-gram: they would all share
     // the empty set's sentinel signature, hence one bucket per band, and
     // pair with each other only to fail the confirm (jaccard 0).
     // The frame is materialized BEFORE the walk's explode: the hot path
     // re-executes its input filtered to hot buckets, and with the signature
-    // inline that re-run would repeat the 128-perm stage over the full
-    // corpus (the Dedup.dupPairsMinhash lesson); the confirm reads the gram
+    // inline that re-run would repeat the signature stage over the full
+    // corpus (the Dedup.keyedDupPairs lesson); the confirm reads the gram
     // sets from it, and the walk's sizing job reads the band keys
     val frame = docs.where(hasNgrams(n))
-      .select(col("doc_id").as("id"), gf.token_ngrams(col("text"), n).as("gs"))
-      .withColumn("keys",
-        gf.band_keys(gf.minhash_sig(col("gs"), numPerm, 42L), bands, rowsPerBand))
+      .select(col("doc_id").as("id"), gs.as("gs"))
+      .withColumn("keys", keys(col("gs")))
       .localCheckpoint()
     (frame, Dedup.saltedAllPairs(frame.select(col("id"), col("keys")), hotThreshold)
       .toDF("id_a", "id_b"))
@@ -176,20 +188,25 @@ object DocOps {
     * block keys (exact cover of Hamming ≤ blocks−1), Hamming filter. Docs
     * with fewer than `n` tokens have no n-gram, so they are dropped (as in
     * the exact and MinHash channels) instead of all sharing the empty-set
-    * simhash.
-    *
-    * Runs through the full [[graft.pipeline.Dedup.saltedBucketPairs]]
-    * machinery with the simhash as the walk's Hamming-filter signature —
-    * the doc-side twin of the image channel: one wide shuffle, in-walk
+    * simhash. */
+  def simhashDupPairs(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
+      hotThreshold: Int = Dedup.HammingHotCap): DataFrame =
+    simhashPairs(docs, n, gf.simhash64(gf.token_ngrams(col("text"), n)), maxHamming,
+      hotThreshold)
+
+  /** The doc SimHash channel in any hash family, shared by
+    * [[simhashDupPairs]] and its md5 twin: `sh` is a doc's 64-bit simhash
+    * (an expression over `text`). Runs through the full
+    * [[graft.pipeline.Dedup.saltedBucketPairs]] machinery with the simhash
+    * as the walk's Hamming-filter signature: one wide shuffle, in-walk
     * pigeonhole sub-bucketing for large FALSE-collision buckets, hot-bucket
     * refinement, terminal salting for genuine mega-clusters. Interleaved
-    * block keys replace the former contiguous ones — any partition of the
-    * 64 bit positions into `blocks` classes preserves the exact cover, so
-    * the Hamming-filtered output is identical. */
-  def simhashDupPairs(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
-      hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
-    val sigs = docs.where(hasNgrams(n)).select(col("doc_id"),
-      gf.simhash64(gf.token_ngrams(col("text"), n)).as("sh"))
+    * block keys are an exact cover like any partition of the 64 bit
+    * positions into `blocks` classes, so the output is every pair within
+    * Hamming `maxHamming`, whatever the block layout. */
+  private[graft] def simhashPairs(docs: DataFrame, n: Int, sh: Column, maxHamming: Int,
+      hotThreshold: Int): DataFrame = {
+    val sigs = docs.where(hasNgrams(n)).select(col("doc_id"), sh.as("sh"))
       .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
     val pairs = Dedup.saltedBucketPairs(
         sigs.select(col("doc_id").as("id"), col("sh").as("phash"),

@@ -2,19 +2,26 @@ package graft.oracle
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.docs.DocOps
 import graft.pipeline.Dedup
+import graft.spark.{functions => gf}
 
 /** Cross-engine-deterministic dedup channels: every per-element hash is
   * md5-derived (two 32-bit halves of the hex digest packed into an int64),
   * so an independent SQL engine (the DuckDB oracle) reproduces signatures,
-  * candidate sets, and estimator values bit-for-bit. These are full-fidelity
-  * counterparts of the fast murmur/fmix channels in [[graft.pipeline.Dedup]]
-  * / [[graft.docs.DocOps]] — same operator shapes (xor-permutation MinHash,
-  * majority-vote SimHash, pigeonhole block LSH, bottom-k estimators,
-  * HLL register math), exchanged-on-short-keys, built from codegen'd Spark
-  * built-ins (no UDFs) plus one codegen'd Catalyst kernel
-  * ([[graft.spark.expr.XorMinMinimaExpr]], byte-identical to its built-ins
-  * formulation by spec).
+  * candidate sets, and estimator values bit-for-bit.
+  *
+  * The four LSH twins (doc and image MinHash, doc and image SimHash) are
+  * calls of the product channel cores in [[graft.docs.DocOps]] and
+  * [[graft.pipeline.Dedup]] with md5 leaf kernels: the twin supplies the
+  * gram hashes, minima, band keys or simhash; the filter, walk, checkpoint
+  * and confirm are the product's own. So the oracle gate checks the
+  * product's hash-agnostic stages, not a restatement of them. The leaf
+  * kernels are codegen'd Catalyst expressions in [[graft.spark.functions]]
+  * (`token_ngram_strings`, `md5_hashes63`, `xor_min_minima`,
+  * `band_walk_keys`, `simhash_majority_ge64`), each byte-identical to its
+  * built-ins formulation (Md5ChannelsSpec) while the oracle SQL keeps the
+  * built-ins shape. The estimator, HLL and OMH twins are composed here.
   *
   * Determinism contract (mirrored in SparkEntry.oracleSql):
   *  - element hash h(s) = (int64)(md5(s)[0:8] hex) << 32 | (md5(s)[8:16] hex);
@@ -44,53 +51,10 @@ object Md5Channels {
   /** sign-masked 63-bit variant: signed order == unsigned order. */
   def md5half63(s: Column): Column = md5half(s).bitwiseAND(lit(Long.MaxValue))
 
-  /** xor-permutation seeds, computed with the same md5 construction the
-    * oracle uses (`h63('perm' || p)`) — JVM MD5 == SQL md5 by definition. */
-  def permSeeds(numPerm: Int): Array[Long] =
-    graft.spark.expr.Kernels.md5PermSeeds(numPerm)
-
-  /** distinct whitespace-token n-gram STRINGS (n=1 → token set). Codegen'd
-    * one-pass kernel; byte-identical to the built-ins formulation on the
-    * callers' domain (`size(split(text,' ')) >= n`) — gated in
-    * Md5ChannelsSpec. The oracle SQL keeps the explicit split/slice form. */
-  def tokenNgramStrings(text: Column, n: Int): Column =
-    graft.spark.functions.token_ngram_strings(text, n)
-
   /** distinct char k-shingle STRINGS. */
   def charShingleStrings(text: Column, k: Int): Column =
     array_distinct(transform(sequence(lit(1), length(text) - (k - 1)),
       i => substring(text, i, lit(k))))
-
-  /** 63-bit md5 hashes of a string-array column. Codegen'd one-pass kernel
-    * (JVM MD5 over each gram's UTF-8 bytes == the SQL md5-hex parse by
-    * definition), gated byte-identical against the built-ins formulation in
-    * Md5ChannelsSpec; the oracle SQL keeps the md5-hex form. */
-  def hashes63(grams: Column): Column = graft.spark.functions.md5_hashes63(grams)
-
-  /** xor-permutation MinHash slot minima (array of numPerm nonneg longs).
-    * Codegen'd one-pass fold (VERDICT r3 #8): the previous formulation built
-    * numPerm full `transform` passes (and intermediate arrays) per row; the
-    * [[graft.spark.expr.XorMinMinimaExpr]] kernel computes the same numPerm
-    * minima in ONE traversal of the hash array — byte-identical to the
-    * built-in formulation (Md5ChannelsSpec) and to the oracle SQL, which
-    * keeps the per-permutation MIN shape. */
-  def xorMinhashMinima(hs: Column, numPerm: Int): Column =
-    graft.spark.functions.xor_min_minima(hs, numPerm)
-
-  /** LSH band keys over the slot minima: md5 of the comma-joined decimal
-    * minima of each band of `r` consecutive slots. */
-  def bandKeysMd5(minima: Column, bands: Int, r: Int): Column =
-    array((0 until bands).map { b =>
-      md5(concat_ws(",", (0 until r).map(j =>
-        element_at(minima, b * r + j + 1).cast("string")): _*))
-    }: _*)
-
-  /** majority-vote 64-bit SimHash over md5 hashes (full-range hashes).
-    * Bit b set iff 2·|{h : bit b of h set}| >= |hs| (ties UP — mirrored in
-    * the oracle SQL). Codegen'd one-pass kernel, gated byte-identical
-    * against the 64-pass built-ins formulation in Md5ChannelsSpec. */
-  def simhash64Md5(hs: Column): Column =
-    graft.spark.functions.simhash_majority_ge64(hs)
 
   /** CONTIGUOUS pigeonhole block keys of a 64-bit sig: block i's value is
     * bits [i·width, (i+1)·width), keyed `i·2^width + value`, which is
@@ -108,128 +72,58 @@ object Md5Channels {
 
   // ---------------------------------------------------------------- channels
 
-  /** the full walk-key array (band order) via the one-pass codegen'd
-    * kernel [[graft.spark.expr.BandWalkKeysExpr]]: key i = md5half of
-    * `i || ':' || bandKeysMd5(i)`, mirrored VERBATIM in the oracle SQL, so
-    * both engines bucket on the identical 64-bit value. Byte-identical to
-    * the built-ins chain on the callers' domain (Md5ChannelsSpec).
-    * The built-ins forest (bands× md5+conv trees) tripped janino's 64 KB
-    * method limit, silently dropping the twins' projection stage out of
-    * whole-stage codegen. */
-  def bandWalkKeys(minima: Column, bands: Int, r: Int): Column =
-    graft.spark.functions.band_walk_keys(minima, bands, r)
+  /** md5 xor-permutation MinHash band walk keys of a 63-bit hash set:
+    * `numPerm` slot minima, `bands` × `r` banding, each key the md5half of
+    * `i || ':' || md5(band i's comma-joined minima)` — the combined 64-bit
+    * key the oracle SQL joins on. */
+  private def md5BandKeys(numPerm: Int, bands: Int, r: Int): Column => Column =
+    hs => gf.band_walk_keys(gf.xor_min_minima(hs, numPerm), bands, r)
 
-  /** doc near-dup pairs: md5 xor-perm MinHash (numPerm slots, bands×r
-    * banding), exact n-gram-jaccard confirm. Both candidate generation and
-    * confirm are engine-reproducible. Candidates run through the shared
-    * skew-hardened all-pairs walk ([[graft.pipeline.Dedup.saltedAllPairs]]),
-    * same as the fast channel — boilerplate-hot band buckets fan across
-    * salted tasks instead of materializing a skewed self-join partition. */
+  /** doc near-dup pairs, md5 family: [[graft.docs.DocOps.minhashPairs]] over
+    * the sorted distinct md5 hashes of the token n-gram strings, md5
+    * xor-perm MinHash band keys (numPerm slots, bands×r banding). Filter,
+    * walk and exact-jaccard confirm are the product channel's. */
   def docMinhashDupPairsMd5(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 32, bands: Int = 16, r: Int = 2,
-      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
-    val grams = tokenNgramStrings(col("text"), n)
-    // `bands` keeps band order: saltedAllPairs' hot fan-out owns each pair
-    // by its first agreeing band key
-    val sigs = docs
-      .where(size(split(col("text"), " ")) >= n)
-      .select(col("doc_id"), grams.as("grams"))
-      .select(col("doc_id"), col("grams"),
-        bandWalkKeys(xorMinhashMinima(hashes63(col("grams")), numPerm), bands, r)
-          .as("bands"))
-      // one computation of the md5 gram-hash + xor-min + band-key stage:
-      // the walk's hot path re-reads its input filtered to hot buckets, and
-      // both confirm joins re-read the gram sets (the Dedup.dupPairsMinhash
-      // lesson — un-checkpointed, the upstream runs 3-4×)
-      .localCheckpoint()
-    val cand = Dedup.saltedAllPairs(sigs.select(col("doc_id").as("id"), col("bands").as("keys")),
-      hotThreshold).toDF("id_a", "id_b")
-    val gsets = sigs.select(col("doc_id"), col("grams"))
-    cand
-      .join(gsets.toDF("id_a", "g_a"), "id_a")
-      .join(gsets.toDF("id_b", "g_b"), "id_b")
-      .withColumn("c", size(array_intersect(col("g_a"), col("g_b"))))
-      .withColumn("jaccard",
-        col("c").cast("double") / (size(col("g_a")) + size(col("g_b")) - col("c")))
-      .where(col("jaccard") >= tau)
-      .select("id_a", "id_b")
-  }
+      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
+    DocOps.minhashPairs(docs, n, tau,
+      array_sort(array_distinct(gf.md5_hashes63(gf.token_ngram_strings(col("text"), n)))),
+      md5BandKeys(numPerm, bands, r), hotThreshold)
 
-  /** doc near-dup pairs: md5 majority-vote SimHash, contiguous pigeonhole
-    * blocks (exact cover of Hamming ≤ blocks−1), Hamming filter. Runs
-    * through the full salted run-walk with the simhash as the Hamming
-    * signature, bucketed on the injective [[contiguousBlocks]] keys. */
+  /** doc near-dup pairs, md5 family: [[graft.docs.DocOps.simhashPairs]] over
+    * the majority-vote SimHash of the md5 gram hashes. The product's
+    * interleaved block keys are an exact cover, so the output is every pair
+    * within Hamming `maxHamming`, as the oracle's contiguous blocks give. */
   def docSimhashDupPairsMd5(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
-      hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
-    val sigs = docs
-      .where(size(split(col("text"), " ")) >= n)
-      .select(col("doc_id"),
-        simhash64Md5(hashes63(tokenNgramStrings(col("text"), n))).as("sh"))
-      .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
-    Dedup.saltedBucketPairs(
-        sigs.select(col("doc_id").as("id"), col("sh").as("phash"),
-          contiguousBlocks(col("sh"), maxHamming + 1).as("keys")),
-        maxHamming, hotThreshold)
-      .toDF("id_a", "id_b")
-      .join(sigs.toDF("id_a", "sh_a"), "id_a")
-      .join(sigs.toDF("id_b", "sh_b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
-  }
+      hotThreshold: Int = Dedup.HammingHotCap): DataFrame =
+    DocOps.simhashPairs(docs, n,
+      gf.simhash_majority_ge64(gf.md5_hashes63(gf.token_ngram_strings(col("text"), n))),
+      maxHamming, hotThreshold)
 
-  /** image banded-MinHash channel, md5 variant: xor-perm MinHash over the
-    * distinct caption token set; confirm = phash Hamming ≤ ht AND exact
-    * token jaccard ≥ tau (the dup_pairs predicate). */
+  /** the md5 63-bit hashes of a caption's distinct token strings. */
+  private val captionHashes: Column =
+    gf.md5_hashes63(gf.token_ngram_strings(col("caption"), 1))
+
+  /** image banded-MinHash channel, md5 family:
+    * [[graft.pipeline.Dedup.keyedDupPairs]] over the md5 xor-perm MinHash
+    * band keys of the caption token set; confirm = phash Hamming ≤ ht AND
+    * exact token jaccard ≥ tau (the dup_pairs predicate). */
   def imgMinhashDupPairsMd5(corpus: DataFrame, ht: Int = 3, tau: Double = 0.5,
       numPerm: Int = 32, bands: Int = 16, r: Int = 2,
-      hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame = {
-    import Dedup.{idNum, idStr}
-    // `bands` keeps band order: saltedAllPairs' hot fan-out owns each pair
-    // by its first agreeing band key
-    val sigs = corpus.select(col("image_id"), col("phash"),
-      tokenNgramStrings(col("caption"), 1).as("toks"))
-      .select(col("image_id"), col("phash"), col("toks"),
-        bandWalkKeys(xorMinhashMinima(hashes63(col("toks")), numPerm), bands, r)
-          .as("bands"))
-      // one computation of the md5 token-hash + xor-min + band-key stage
-      // (walk hot-path re-read + both confirm joins re-consume it)
-      .localCheckpoint()
-    val cand = Dedup.saltedAllPairs(
-        sigs.select(idNum(col("image_id")).as("id"), col("bands").as("keys")), hotThreshold)
-      .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"))
-    confirmTokens(cand, sigs.select(col("image_id"), col("phash"), col("toks")), ht, tau)
-  }
+      hotThreshold: Int = Dedup.HammingHotCap): DataFrame =
+    Dedup.keyedDupPairs(corpus, md5BandKeys(numPerm, bands, r)(captionHashes),
+      Dedup.Config(hammingThreshold = ht, tokenJaccard = tau), hotThreshold)
 
-  /** image SimHash channel, md5 variant: majority-vote SimHash over the
-    * distinct caption token set, contiguous blocks; candidates additionally
-    * Hamming-filtered on phash (mirrors Dedup.candidatesSimhash, which
-    * Hamming-filters inside the bucket walk); confirm = dup_pairs predicate. */
+  /** image SimHash channel, md5 family: [[graft.pipeline.Dedup.keyedDupPairs]]
+    * over contiguous blocks of the majority-vote SimHash of the caption
+    * token set, as the oracle SQL buckets. The walk Hamming-filters on the
+    * phash, not on the simhash, so no exact cover makes the block layout
+    * free: the candidate set depends on it. */
   def imgSimhashDupPairs(corpus: DataFrame, ht: Int = 3, tau: Double = 0.5,
-      simhashBlocks: Int = 4, hotThreshold: Int = Dedup.HammingHotCap): DataFrame = {
-    import Dedup.{idNum, idStr}
-    val sigs = corpus.select(col("image_id"), col("phash"),
-      tokenNgramStrings(col("caption"), 1).as("toks"))
-      .withColumn("sh", simhash64Md5(hashes63(col("toks"))))
-      .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
-    // the walk Hamming-filters on the PHASH (mirroring Dedup.candidatesSimhash)
-    // while bucketing on the md5-simhash blocks
-    val cand = Dedup.saltedBucketPairs(
-        sigs.select(idNum(col("image_id")).as("id"), col("phash"),
-          contiguousBlocks(col("sh"), simhashBlocks).as("keys")), ht, hotThreshold)
-      .select(idStr(col("id_a")).as("id_a"), idStr(col("id_b")).as("id_b"))
-    confirmTokens(cand, sigs.select(col("image_id"), col("phash"), col("toks")), ht, tau)
-  }
-
-  /** dup_pairs confirm predicate over (image_id, phash, toks). */
-  private def confirmTokens(cand: DataFrame, rows: DataFrame,
-      ht: Int, tau: Double): DataFrame =
-    cand
-      .join(rows.toDF("id_a", "ph_a", "t_a"), "id_a")
-      .join(rows.toDF("id_b", "ph_b", "t_b"), "id_b")
-      .where(bit_count(col("ph_a").bitwiseXOR(col("ph_b"))) <= ht)
-      .withColumn("c", size(array_intersect(col("t_a"), col("t_b"))))
-      .where(col("c").cast("double") / (size(col("t_a")) + size(col("t_b")) - col("c")) >= tau)
-      .select("id_a", "id_b")
+      simhashBlocks: Int = 4, hotThreshold: Int = Dedup.HammingHotCap): DataFrame =
+    Dedup.keyedDupPairs(corpus,
+      contiguousBlocks(gf.simhash_majority_ge64(captionHashes), simhashBlocks),
+      Dedup.Config(hammingThreshold = ht, tokenJaccard = tau), hotThreshold)
 
   // ------------------------------------------------------------- HLL (md5)
 
@@ -317,7 +211,7 @@ object Md5Channels {
     val seqc = translate(
       upper(concat(md5(col("text")), md5(concat(col("text"), lit("x"))))),
       "0123456789ABCDEF", "ACGTACGTACGTACGT")
-    def blocksOf(s: Column): Column = graft.spark.functions.omh_md5_blocks(s, k, l, m)
+    def blocksOf(s: Column): Column = gf.omh_md5_blocks(s, k, l, m)
     def simc(a: Column, b: Column): Column =
       aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
         lit(0), (acc, v) => acc + v).cast("double") / lit(m.toDouble)
@@ -351,7 +245,7 @@ object Md5Channels {
     * the one ln() call; engines' ln may differ in the last ulp). */
   def docSketchEstimatesMd5(docs: DataFrame, pairs: DataFrame,
       shingleK: Int = 8, s: Int = 128): DataFrame = {
-    val hs = hashes63(charShingleStrings(col("text"), shingleK))
+    val hs = gf.md5_hashes63(charShingleStrings(col("text"), shingleK))
     // hf = the FULL sorted distinct shingle-hash set; bk = its bottom-s
     // prefix. Carrying hf per pair lets the same oracle row expose the exact
     // per-pair set cardinalities (n_distinct_a/b, n_inter) beside the
@@ -444,14 +338,13 @@ object Md5Channels {
   private[graft] def docEstAccuracyDebug(docs: DataFrame, pairs: DataFrame,
       shingleK: Int = 8, cwsSketchSize: Int = 256, cwsBins: Int = 4096,
       np: Int = 12, wjBound: Double = 0.35, hllBound: Double = 0.05): DataFrame = {
-    import graft.spark.{functions => gf}
     val occHashes = transform(split(col("text"), " "), t => md5half63(t))
     val sk = docs
       .where(length(col("text")) >= shingleK)
       .select(col("doc_id"),
         gf.cws_sketch(occHashes, cwsSketchSize, cwsBins, 1L).as("cws"),
         gf.hll_init(gf.caption_shingles(col("text"), shingleK), np).as("hll"),
-        array_sort(array_distinct(hashes63(charShingleStrings(col("text"), shingleK))))
+        array_sort(array_distinct(gf.md5_hashes63(charShingleStrings(col("text"), shingleK))))
           .as("hf"))
     // token-frequency spectra (tok → occurrence count); the exact weighted
     // jaccard is assembled per pair via a full-outer join on (pair, tok) —

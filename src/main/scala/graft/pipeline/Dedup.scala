@@ -66,17 +66,18 @@ object Dedup {
       col("phash"),
       gf.token_ngrams(col("caption"), 1).as("tok"))
 
+  /** the signatures' feature set: pHash bit-grams plus caption shingles. */
+  private def features(cfg: Config): Column =
+    concat(gf.phash_bitgrams(col("phash")), gf.caption_shingles(col("caption"), cfg.shingleK))
+
   /** narrow per-row signature stage; input needs only (image_id, phash, caption). */
-  def signatures(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val features = gf.caption_shingles(col("caption"), cfg.shingleK)
-    val combined = concat(gf.phash_bitgrams(col("phash")), features)
+  def signatures(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =
     corpus
       .select(col("image_id"), col("phash"), col("caption"))
-      .withColumn("features", combined)
+      .withColumn("features", features(cfg))
       .withColumn("minhash", gf.minhash_sig(col("features"), cfg.numPerm, cfg.seed))
       .withColumn("simhash", gf.simhash64(col("features")))
       .drop("features")
-  }
 
   /** number of pigeonhole blocks for the configured Hamming threshold. */
   def blocksFor(cfg: Config): Int = cfg.hammingThreshold + 1
@@ -263,10 +264,10 @@ object Dedup {
 
   /** Skew-hardened in-bucket ALL-PAIRS generation over a banded frame
     * `(id, keys)`: every distinct pair that shares at least one band key.
-    * The candidate stage of the banded-MinHash doc and md5-twin channels
-    * (their confirm predicate lives downstream over token sets the walk
-    * never sees). Band keys must mix the band index (MinHash.bandKeys,
-    * Md5Channels.bandWalkKeys), so a bucket's key IS the shared band value.
+    * The candidate stage of the doc MinHash channel, in both hash families
+    * (its confirm predicate lives downstream over gram sets the walk never
+    * sees). Band keys must mix the band index (MinHash.bandKeys,
+    * `band_walk_keys`), so a bucket's key IS the shared band value.
     *
     * One [[runWalk]] whose Hamming predicate (`maxHamming` 64) passes every
     * pair streams the cold buckets; the walk explodes and sizes the keys as
@@ -648,20 +649,13 @@ object Dedup {
     * shrinks with block count (8 blocks ⇒ 8-bit keys), so bucket sizes grow
     * ~ n/2^width — past ~10^6 rows use [[candidatesMinhash]] instead. */
   def candidatesSimhash(sigs: DataFrame, cfg: Config = defaultConfig,
-      simhashBlocks: Int = 8): DataFrame = {
-    saltedBucketPairs(
-      sigs.select(idNum(col("image_id")).as("id"), col("phash"),
-        gf.phash_block_keys(col("simhash"), simhashBlocks).as("keys")),
+      simhashBlocks: Int = 8): DataFrame =
+    keyedCandidates(sigs, gf.phash_block_keys(col("simhash"), simhashBlocks),
       cfg.hammingThreshold)
-  }
 
   /** full simhash-channel dup-pair query (same confirm predicate). */
-  def dupPairsSimhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val sigs = signatures(corpus, cfg)
-      .select(col("image_id"), col("phash"), col("simhash"))
-      .localCheckpoint()
-    confirm(candidatesSimhash(sigs, cfg), corpus, cfg).select("id_a", "id_b")
-  }
+  def dupPairsSimhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =
+    keyedDupPairs(corpus, gf.phash_block_keys(gf.simhash64(features(cfg)), 8), cfg)
 
   /** banded MinHash LSH candidates (numeric ids, probabilistic channel);
     * Hamming pre-filter applies the same confirm predicate early. */
@@ -680,9 +674,32 @@ object Dedup {
     // ResumablePipeline) hands a materialized sigs frame, so the walk's
     // sizing job is a cheap cached-block pass, not a recompute of the
     // signature stage
+    keyedCandidates(sigs, col("bands"), cfg.hammingThreshold)
+
+  /** The image channels' walk: every pair of `sigs(image_id, phash, ...)`
+    * rows that shares a `keys` bucket and lies within `maxHamming` on the
+    * pHash (numeric ids). */
+  private def keyedCandidates(sigs: DataFrame, keys: Column, maxHamming: Int,
+      hotThreshold: Int = HammingHotCap): DataFrame =
     saltedBucketPairs(
-      sigs.select(idNum(col("image_id")).as("id"), col("phash"), col("bands").as("keys")),
-      cfg.hammingThreshold)
+      sigs.select(idNum(col("image_id")).as("id"), col("phash"), keys.as("keys")),
+      maxHamming, hotThreshold)
+
+  /** One image LSH channel in any hash family: `keys` (an expression over
+    * the corpus columns) is checkpointed beside `(image_id, phash)`, walked
+    * with the pHash Hamming filter and confirmed ([[confirm]]). The md5
+    * twins ([[graft.oracle.Md5Channels]]) pass md5-family keys, so the
+    * DuckDB oracle checks this walk and confirm, not a copy of them.
+    * Checkpointed FIRST: the walk's hot path re-executes its input filtered
+    * to hot buckets, and with the keys inline that re-run repeats the
+    * signature stage over the full corpus (65-70 s vs 19 s for the 128-perm
+    * MinHash at the 4.25M-row corpus, local[32]). */
+  private[graft] def keyedDupPairs(corpus: DataFrame, keys: Column, cfg: Config,
+      hotThreshold: Int = HammingHotCap): DataFrame = {
+    val keyed = corpus.select(col("image_id"), col("phash"), keys.as("keys")).localCheckpoint()
+    confirm(keyedCandidates(keyed, col("keys"), cfg.hammingThreshold, hotThreshold), corpus, cfg)
+      .select("id_a", "id_b")
+  }
 
   /** The candidate pairs under fresh attributes, for a confirm that joins
     * both endpoints to ONE side table and wants the side read once.
@@ -763,20 +780,12 @@ object Dedup {
   def dupPairs(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =
     confirm(candidatesPhashBlocks(corpus, cfg), corpus, cfg).select("id_a", "id_b")
 
-  /** full minhash-channel dup-pair query. The signature projection is
-    * materialized FIRST: the salted-bucket hot path re-executes its input
-    * frame filtered to hot buckets, and with signatures inline that re-run
-    * repeats the entire 128-perm signature stage over the full corpus —
-    * measured 65-70 s vs 19 s at the 4.25M-row corpus (a dev probe, since
-    * removed; local[32]). One localCheckpoint of (id, phash, minhash) turns
-    * the re-run into a cached-block filter and also cuts the walk's lineage. */
-  def dupPairsMinhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame = {
-    val banded = signatures(corpus, cfg)
-      .select(col("image_id"), col("phash"),
-        gf.band_keys(col("minhash"), cfg.bands, cfg.rowsPerBand).as("bands"))
-      .localCheckpoint()
-    confirm(candidatesFromBands(banded, cfg), corpus, cfg).select("id_a", "id_b")
-  }
+  /** full minhash-channel dup-pair query ([[keyedDupPairs]] over the
+    * 128-perm MinHash band keys). */
+  def dupPairsMinhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =
+    keyedDupPairs(corpus,
+      gf.band_keys(gf.minhash_sig(features(cfg), cfg.numPerm, cfg.seed), cfg.bands, cfg.rowsPerBand),
+      cfg)
 
   /** connected components over the edge list (the distributed union-find of
     * SURVEY.md §4.2): min-label propagation WITH per-round pointer jumping

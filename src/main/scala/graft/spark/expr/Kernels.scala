@@ -231,7 +231,7 @@ object Kernels {
   private val HexDigits = "0123456789abcdef".toCharArray
 
   /** one-pass LSH band walk keys — the codegen'd fold of the built-ins
-    * chain `bandKeysMd5 ∘ bandWalkKey` in [[graft.oracle.Md5Channels]]:
+    * chain `bandKeysMd5 ∘ bandWalkKey` (Md5ChannelsSpec):
     * per band b, content = that band's r slot minima as decimal strings
     * joined by ',' (concat_ws semantics: null slots skipped, no doubled
     * separator), bk = lowercase md5 hex of content, key =
@@ -287,10 +287,10 @@ object Kernels {
     * `array_distinct(transform(sequence(...), i => concat_ws(" ",
     * slice(split(text, " "), i, n))))`. Split mirrors SQL `split(text, ' ')`
     * (Java regex, limit −1: consecutive spaces yield empty tokens, trailing
-    * empties kept); n = 1 is the distinct token set. Domain: callers filter
-    * `size(split(text,' ')) >= n` first (the built-ins form is itself
-    * undefined below it — `sequence(1, k<1)` descends into a slice error);
-    * below-domain input returns an empty array. */
+    * empties kept); n = 1 is the distinct token set. The built-ins form is
+    * undefined below `size(split(text,' ')) >= n` (`sequence(1, k<1)`
+    * descends into a slice error); there this kernel returns an empty
+    * array. */
   def tokenNgramStringsDistinct(text: UTF8String, n: Int): ArrayData = {
     val toks = text.toString.split(" ", -1)
     if (toks.length < n) return new GenericArrayData(new Array[Any](0))

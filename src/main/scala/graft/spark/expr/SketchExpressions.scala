@@ -74,9 +74,9 @@ case class MinHashSigExpr(child: Expression, numPerm: Int, seed: Long)
 }
 
 /** One-pass xor-permutation MinHash minima over the md5-derived oracle
-  * seeds: the codegen'd fold of [[graft.oracle.Md5Channels.xorMinhashMinima]]'s
-  * numPerm `array_min(transform(...))` passes — byte-identical output
-  * (Md5ChannelsSpec), one traversal instead of numPerm array materializations.
+  * seeds: the codegen'd fold of the numPerm `array_min(transform(...))`
+  * built-ins passes — byte-identical output (Md5ChannelsSpec), one
+  * traversal instead of numPerm array materializations.
   * The oracle SQL keeps the per-permutation MIN formulation; only the Spark
   * side folds. */
 case class XorMinMinimaExpr(child: Expression, numPerm: Int)
@@ -115,8 +115,10 @@ case class OmhXorBlocksExpr(child: Expression, k: Int, l: Int, m: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** One-pass LSH band walk keys over xor-permutation minima: the codegen'd
-  * fold of [[graft.oracle.Md5Channels]]'s `bandKeysMd5 ∘ bandWalkKey`
+/** One-pass LSH band walk keys over xor-permutation minima: key i = md5half
+  * of `i || ':' || md5(band i's comma-joined decimal minima)`, mirrored
+  * VERBATIM in the oracle SQL, so both engines bucket on the identical
+  * 64-bit value. The codegen'd fold of the `bandKeysMd5 ∘ bandWalkKey`
   * built-ins chain (two digests per band) — byte-identical output on the
   * callers' domain (minima length ≥ bands·r; gated in Md5ChannelsSpec).
   * The oracle SQL keeps the explicit md5-hex band-key formulation; only
@@ -203,7 +205,9 @@ case class BandKeysExpr(child: Expression, bands: Int, rows: Int)
 /** Element-wise md5-derived 63-bit hashes of a string array — the codegen'd
   * fold of the oracle twins' `transform(grams, md5half63)` built-ins chain
   * (md5 → two hex substrings → conv → shift/or per element), byte-identical
-  * by construction (Md5ChannelsSpec): the hex parse IS digest bytes 0-7. */
+  * by construction (Md5ChannelsSpec): JVM MD5 over each gram's UTF-8 bytes
+  * is SQL md5, and the hex parse IS digest bytes 0-7. The oracle SQL keeps
+  * the md5-hex form. */
 case class Md5Hashes63Expr(child: Expression)
     extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
@@ -217,8 +221,9 @@ case class Md5Hashes63Expr(child: Expression)
 
 /** Distinct whitespace-token n-gram STRINGS (first-occurrence order) — the
   * codegen'd fold of the oracle twins' split/sequence/slice/concat_ws/
-  * array_distinct built-ins chain, byte-identical on the callers' domain
-  * (`size(split(text,' ')) >= n`, Md5ChannelsSpec). */
+  * array_distinct built-ins chain, byte-identical on the built-ins' domain
+  * (`size(split(text,' ')) >= n`, Md5ChannelsSpec); empty below it. The
+  * oracle SQL keeps the explicit split/slice form. */
 case class TokenNgramStringsExpr(child: Expression, n: Int)
     extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -230,9 +235,10 @@ case class TokenNgramStringsExpr(child: Expression, n: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Ties-up majority-vote 64-bit SimHash (bit b set iff 2·ones(b) ≥ n) — the
-  * md5 oracle twins' rule, folded from 64 `size(filter(...))` passes into
-  * one traversal (byte-identical, Md5ChannelsSpec). */
+/** Ties-up majority-vote 64-bit SimHash (bit b set iff 2·ones(b) ≥ n,
+  * mirrored in the oracle SQL) — the md5 oracle twins' rule, folded from 64
+  * `size(filter(...))` passes into one traversal (byte-identical,
+  * Md5ChannelsSpec). */
 case class SimHashGe64Expr(child: Expression)
     extends UnaryExpression with KernelCall {
   override def dataType: DataType = LongType

@@ -108,7 +108,8 @@ class DocOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-    import graft.spark.expr.{NgramJaccard, TokenNgrams}
+    import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
+    import graft.spark.expr.{NgramJaccard, TokenNgramStringsExpr, TokenNgrams}
     object Plans extends AdaptiveSparkPlanHelper
     // a side exchange carries one endpoint's id; the candidate pairs carry both
     def side(e: Exchange): Boolean =
@@ -117,7 +118,10 @@ class DocOpsSpec extends AnyFunSuite {
       df.collect()
       val plan = df.queryExecution.executedPlan
       val tokenize = Plans.collect(plan) { case p => p }.flatMap(_.expressions)
-        .filter(_.exists { case _: NgramJaccard | _: TokenNgrams => true; case _ => false })
+        .filter(_.exists {
+          case _: NgramJaccard | _: TokenNgrams | _: TokenNgramStringsExpr | _: ArrayIntersect => true
+          case _ => false
+        })
       assert(tokenize.isEmpty, s"tokenizing expressions $tokenize in:\n$plan")
       // a reused stage is a leaf, so it never counts as a live one
       val live = Plans.collect(plan) { case e: Exchange if side(e) => e }.size
@@ -126,6 +130,8 @@ class DocOpsSpec extends AnyFunSuite {
     }
     check(DocOps.minhashDupPairs(docs, 3, 0.6))
     check(DocOps.minhashDupPairs(confirmDocs, 3, 0.6, hotThreshold = 16))
+    // the md5 twin runs the same confirm over its md5 gram-hash sets
+    check(graft.oracle.Md5Channels.docMinhashDupPairsMd5(docs, 3, 0.6))
   }
 
   test("simhash pairs: brute-force equivalence of the block-join channel") {
@@ -261,6 +267,29 @@ class DocOpsSpec extends AnyFunSuite {
       === pairs(mh.docMinhashDupPairsMd5(d, hotThreshold = 1 << 12)))
     assert(pairs(mh.docSimhashDupPairsMd5(d, hotThreshold = 32))
       === pairs(mh.docSimhashDupPairsMd5(d, hotThreshold = 1 << 20)))
+    // the image twins on a planted hot caption: 100 images share it, half
+    // on one pHash (a class that stays hot after refinement, so the salted
+    // self-join runs), half on 1-2-bit variants of it or on far pHashes
+    val caption = "a red bicycle leaning on a white brick wall in the morning sun"
+    val base = 0x5a5a3c3c0f0f6699L
+    val hotImgs = (0 until 100).map { i =>
+      val ph = if (i < 50) base
+        else if (i < 80) base ^ (1L << (i % 64)) ^ (1L << ((i * 7) % 64))
+        else g.nextLong()
+      (f"img_$i%010d", ph, caption)
+    }
+    val coldImgs = (200 until 240).map(i =>
+      (f"img_$i%010d", g.nextLong(), (0 until 12).map(_ => s"w${g.nextInt(5000)}").mkString(" ")))
+    val imgs = (hotImgs ++ coldImgs).toDF("image_id", "phash", "caption")
+    def idPairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
+    for ((name, twin) <- Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+        "minhash" -> (h => mh.imgMinhashDupPairsMd5(imgs, hotThreshold = h)),
+        "simhash" -> (h => mh.imgSimhashDupPairs(imgs, hotThreshold = h)))) {
+      val salted = idPairs(twin(32))
+      assert(salted.size >= 50 * 49 / 2, s"$name: the hot caption's pairs are missing")
+      assert(salted === idPairs(twin(1 << 20)), name)
+    }
   }
 
   test("language id: detects natural-language samples, und for noise") {

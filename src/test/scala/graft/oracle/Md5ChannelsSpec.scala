@@ -3,6 +3,7 @@ package graft.oracle
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.spark.{functions => gf}
 
 class Md5ChannelsSpec extends AnyFunSuite {
 
@@ -20,10 +21,10 @@ class Md5ChannelsSpec extends AnyFunSuite {
       .where(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"), col("text"))
     for (numPerm <- Seq(1, 32)) {
-      val hs = Md5Channels.hashes63(Md5Channels.tokenNgramStrings(col("text"), 3))
+      val hs = gf.md5_hashes63(gf.token_ngram_strings(col("text"), 3))
       val both = docs.select(
         col("doc_id"),
-        Md5Channels.xorMinhashMinima(hs, numPerm).as("fold"),
+        gf.xor_min_minima(hs, numPerm).as("fold"),
         Md5Builtins.xorMinhashMinima(hs, numPerm).as("builtins"))
       val bad = both.where(not(col("fold") <=> col("builtins")))
       assert(bad.isEmpty, s"numPerm=$numPerm: ${bad.count()} mismatching rows")
@@ -41,7 +42,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
       Seq(None, Some(Long.MaxValue))).toDF("hs")
     for (df <- Seq(shapes, nullShapes)) {
       val both = df.select(
-        Md5Channels.xorMinhashMinima(col("hs"), 4).as("fold"),
+        gf.xor_min_minima(col("hs"), 4).as("fold"),
         Md5Builtins.xorMinhashMinima(col("hs"), 4).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty)
     }
@@ -62,7 +63,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
     for (df <- Seq(real, weird); n <- Seq(1, 2, 3)) {
       val dom = df.where(size(split(col("text"), " ")) >= n)
       val both = dom.select(
-        Md5Channels.tokenNgramStrings(col("text"), n).as("fold"),
+        gf.token_ngram_strings(col("text"), n).as("fold"),
         Md5Builtins.tokenNgramStrings(col("text"), n).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty, s"n=$n")
     }
@@ -75,13 +76,13 @@ class Md5ChannelsSpec extends AnyFunSuite {
     // UTF-8 (the kernel must digest the same UTF-8 bytes SQL md5 sees),
     // whitespace-only, a long gram
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(Md5Channels.tokenNgramStrings(col("text"), 3).as("grams"))
+      .select(gf.token_ngram_strings(col("text"), 3).as("grams"))
     val weird = Seq(
       Seq("", "héllo wörld", "ünïcode ßtr", "日本語 テスト", "a" * 500, "  ", "né"),
       Seq.empty[String]).toDF("grams")
     for (df <- Seq(real, weird)) {
       val both = df.select(
-        Md5Channels.hashes63(col("grams")).as("fold"),
+        gf.md5_hashes63(col("grams")).as("fold"),
         Md5Builtins.hashes63(col("grams")).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty)
     }
@@ -91,8 +92,8 @@ class Md5ChannelsSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(Md5Channels.hashes63(
-        Md5Channels.tokenNgramStrings(col("text"), 3)).as("hs"))
+      .select(gf.md5_hashes63(
+        gf.token_ngram_strings(col("text"), 3)).as("hs"))
     // degenerate shapes: empty (all 64 bits set under ties-up), singleton,
     // exact tie (two hashes differing in every bit), sign-bit stress, and
     // NULL SLOTS (`size(filter(...))` drops nulls from the bit counts while
@@ -105,7 +106,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
       Seq(None, Some(0L), Some(-1L))).toDF("hs")
     for (df <- Seq(real, shapes, nullShapes)) {
       val both = df.select(
-        Md5Channels.simhash64Md5(col("hs")).as("fold"),
+        gf.simhash_majority_ge64(col("hs")).as("fold"),
         Md5Builtins.simhash64Md5(col("hs")).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty)
     }
@@ -182,7 +183,7 @@ class Md5ChannelsSpec extends AnyFunSuite {
     for (df <- Seq(acgt, weird); (k, l, m) <- Seq((4, 2, 16), (2, 3, 8))) {
       val dom = df.where(length(col("seq")) >= k)
       val both = dom.select(
-        graft.spark.functions.omh_md5_blocks(col("seq"), k, l, m).as("fold"),
+        gf.omh_md5_blocks(col("seq"), k, l, m).as("fold"),
         Md5Builtins.omhBlocks(col("seq"), k, l, m).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty,
         s"k=$k l=$l m=$m")
@@ -195,10 +196,10 @@ class Md5ChannelsSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     // callers' domain: minima arrays of exactly bands*r nonneg 63-bit longs
     for ((numPerm, bands, r) <- Seq((32, 16, 2), (8, 2, 4))) {
-      val minima = Md5Channels.xorMinhashMinima(
-        Md5Channels.hashes63(Md5Channels.tokenNgramStrings(col("text"), 3)), numPerm)
+      val minima = gf.xor_min_minima(
+        gf.md5_hashes63(gf.token_ngram_strings(col("text"), 3)), numPerm)
       val both = docs.where(size(split(col("text"), " ")) >= 3).select(
-        Md5Channels.bandWalkKeys(minima, bands, r).as("fold"),
+        gf.band_walk_keys(minima, bands, r).as("fold"),
         Md5Builtins.bandWalkKeys(minima, bands, r).as("builtins"))
       assert(both.where(not(col("fold") <=> col("builtins"))).isEmpty,
         s"numPerm=$numPerm bands=$bands r=$r")
@@ -208,13 +209,13 @@ class Md5ChannelsSpec extends AnyFunSuite {
   test("kernel survives whole-stage codegen in the full band-key pipeline") {
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val hs = Md5Channels.hashes63(Md5Channels.tokenNgramStrings(col("text"), 3))
+    val hs = gf.md5_hashes63(gf.token_ngram_strings(col("text"), 3))
     val viaFold = docs.where(size(split(col("text"), " ")) >= 3).select(
       col("doc_id"),
-      Md5Channels.bandKeysMd5(Md5Channels.xorMinhashMinima(hs, 32), 16, 2).as("bks"))
+      Md5Builtins.bandKeysMd5(gf.xor_min_minima(hs, 32), 16, 2).as("bks"))
     val viaBuiltins = docs.where(size(split(col("text"), " ")) >= 3).select(
       col("doc_id"),
-      Md5Channels.bandKeysMd5(Md5Builtins.xorMinhashMinima(hs, 32), 16, 2).as("bks"))
+      Md5Builtins.bandKeysMd5(Md5Builtins.xorMinhashMinima(hs, 32), 16, 2).as("bks"))
     assert(viaFold.exceptAll(viaBuiltins).isEmpty)
     assert(viaBuiltins.exceptAll(viaFold).isEmpty)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.data.SyntheticImages
 import graft.docs.DocOps
+import graft.oracle.Md5Channels
 import graft.spark.{functions => gf}
 
 /** Empty, single-row, null/empty-caption and exact-twin inputs through the
@@ -65,31 +66,36 @@ class DegenerateInputSpec extends AnyFunSuite {
     } finally sigs.unpersist()
   }
 
-  /** pair counts of the four image pair queries beside the north-star chain. */
+  /** pair counts of the six image pair queries (the last two the md5
+    * twins) beside the north-star chain. */
   private def channels(corpus: DataFrame): Seq[Long] = Seq(
     pairCount(Dedup.dupPairs(corpus)),
     pairCount(Dedup.dupPairsMinhash(corpus)),
     pairCount(Dedup.dupPairsSimhash(corpus)),
-    pairCount(Dedup.confirmSubstring(Dedup.candidatesPhashBlocks(corpus), corpus)))
+    pairCount(Dedup.confirmSubstring(Dedup.candidatesPhashBlocks(corpus), corpus)),
+    pairCount(Md5Channels.imgMinhashDupPairsMd5(corpus)),
+    pairCount(Md5Channels.imgSimhashDupPairs(corpus)))
 
   test("empty corpus: no pairs, no cluster rows") {
     assert(northStar(empty) === ((0L, 0L, 0L)))
-    assert(channels(empty) === Seq(0L, 0L, 0L, 0L))
+    assert(channels(empty) === Seq.fill(6)(0L))
   }
 
   test("single-row corpus: one cluster row, no pairs") {
     assert(northStar(single) === ((0L, 1L, 1L)))
-    assert(channels(single) === Seq(0L, 0L, 0L, 0L))
+    assert(channels(single) === Seq.fill(6)(0L))
   }
 
   test("null and empty captions on one pHash: no pairs") {
     assert(northStar(blankCaptions) === ((0L, 4L, 4L)))
-    assert(channels(blankCaptions) === Seq(0L, 0L, 0L, 0L))
+    // the md5 twins too: the two empty captions share every md5 key, and
+    // the shared confirm's jaccard of two empty token sets is 0
+    assert(channels(blankCaptions) === Seq.fill(6)(0L))
   }
 
   test("two identical rows: exactly one pair in every channel") {
     assert(northStar(twins) === ((1L, 2L, 2L)))
-    assert(channels(twins) === Seq(1L, 1L, 1L, 1L))
+    assert(channels(twins) === Seq.fill(6)(1L))
     val clusterIds = Dedup.clusters(Dedup.dupPairs(twins), twins.select("image_id"))
       .select("cluster_id").distinct().collect().map(_.getString(0))
     assert(clusterIds.toSeq === Seq("img_0000000001"))
