@@ -128,7 +128,7 @@ object DocOps {
   def minhashDupPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
       hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
-    minhashPairs(docs, n, tau, gf.token_ngrams(col("text"), n),
+    minhashPairs(docs, tau, gf.token_ngrams(col("text"), n),
       minhashBandKeys(numPerm, bands, rowsPerBand), hotThreshold)
 
   /** the minhash channel's candidate stage (distinct in-bucket pairs),
@@ -136,7 +136,7 @@ object DocOps {
   private[graft] def minhashCandidates(docs: DataFrame, n: Int = 3,
       numPerm: Int = 128, bands: Int = 64, rowsPerBand: Int = 2,
       hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
-    minhashWalk(docs, n, gf.token_ngrams(col("text"), n),
+    minhashWalk(docs, gf.token_ngrams(col("text"), n),
       minhashBandKeys(numPerm, bands, rowsPerBand), hotThreshold)._2
 
   /** the product hash family's band keys of a gram set. */
@@ -149,9 +149,9 @@ object DocOps {
     * Both endpoints join to the one `(id, gs)` side under fresh candidate
     * attributes ([[graft.pipeline.Dedup.freshCandidates]]), so the side is
     * exchanged once and the second join reuses it. */
-  private[graft] def minhashPairs(docs: DataFrame, n: Int, tau: Double, gs: Column,
+  private[graft] def minhashPairs(docs: DataFrame, tau: Double, gs: Column,
       keys: Column => Column, hotThreshold: Int): DataFrame = {
-    val (frame, cand) = minhashWalk(docs, n, gs, keys, hotThreshold)
+    val (frame, cand) = minhashWalk(docs, gs, keys, hotThreshold)
     val sides = frame.select(col("id"), col("gs"))
     Dedup.freshCandidates(cand)
       .join(sides.toDF("id_a", "gs_a"), "id_a")
@@ -166,23 +166,29 @@ object DocOps {
   /** the channel's checkpointed frame `(id, gs, keys)` — the gram set and
     * its band keys, one tokenize per doc — and the walk's candidate pairs
     * `(id_a, id_b)` over it. */
-  private def minhashWalk(docs: DataFrame, n: Int, gs: Column, keys: Column => Column,
+  private def minhashWalk(docs: DataFrame, gs: Column, keys: Column => Column,
       hotThreshold: Int): (DataFrame, DataFrame) = {
-    // docs with fewer than `n` tokens have no n-gram: they would all share
-    // the empty set's sentinel signature, hence one bucket per band, and
-    // pair with each other only to fail the confirm (jaccard 0).
     // The frame is materialized BEFORE the walk's explode: the hot path
     // re-executes its input filtered to hot buckets, and with the signature
     // inline that re-run would repeat the signature stage over the full
     // corpus (the Dedup.keyedDupPairs lesson); the confirm reads the gram
     // sets from it, and the walk's sizing job reads the band keys
-    val frame = docs.where(hasNgrams(n))
-      .select(col("doc_id").as("id"), gs.as("gs"))
-      .withColumn("keys", keys(col("gs")))
-      .localCheckpoint()
+    val frame = withGrams(docs.select(col("doc_id").as("id"), gs.as("gs"))
+      .withColumn("keys", keys(col("gs"))), size(col("gs")))
     (frame, Dedup.saltedAllPairs(frame.select(col("id"), col("keys")), hotThreshold)
       .toDF("id_a", "id_b"))
   }
+
+  /** `rows` checkpointed, then only those with a gram (`grams`, the row's
+    * gram count, > 0). A doc with fewer than `n` tokens has no n-gram: such
+    * docs would all share the empty set's signature and pair with each
+    * other. Each hash family counts tokens with its own tokenizer (`\s+`
+    * runs for `token_ngrams`, single spaces for the md5 family's
+    * `token_ngram_strings`), so a channel tests the gram set it hashes, not
+    * a token count. After the checkpoint, so Catalyst cannot push the
+    * predicate below the projection and tokenize each doc twice. */
+  private def withGrams(rows: DataFrame, grams: Column): DataFrame =
+    rows.localCheckpoint().where(grams > 0)
 
   /** SimHash near-dup pairs: 64-bit SimHash over token n-grams, pigeonhole
     * block keys (exact cover of Hamming ≤ blocks−1), Hamming filter. Docs
@@ -191,23 +197,27 @@ object DocOps {
     * simhash. */
   def simhashDupPairs(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
       hotThreshold: Int = Dedup.HammingHotCap): DataFrame =
-    simhashPairs(docs, n, gf.simhash64(gf.token_ngrams(col("text"), n)), maxHamming,
+    simhashPairs(docs, gf.token_ngrams(col("text"), n), gf.simhash64, maxHamming,
       hotThreshold)
 
   /** The doc SimHash channel in any hash family, shared by
-    * [[simhashDupPairs]] and its md5 twin: `sh` is a doc's 64-bit simhash
-    * (an expression over `text`). Runs through the full
-    * [[graft.pipeline.Dedup.saltedBucketPairs]] machinery with the simhash
-    * as the walk's Hamming-filter signature: one wide shuffle, in-walk
-    * pigeonhole sub-bucketing for large FALSE-collision buckets, hot-bucket
-    * refinement, terminal salting for genuine mega-clusters. Interleaved
-    * block keys are an exact cover like any partition of the 64 bit
-    * positions into `blocks` classes, so the output is every pair within
+    * [[simhashDupPairs]] and its md5 twin: `gs` is a doc's gram-hash set (an
+    * expression over `text`) and `sig` its 64-bit simhash. Runs through the
+    * full [[graft.pipeline.Dedup.saltedBucketPairs]] machinery with the
+    * simhash as the walk's Hamming-filter signature: one wide shuffle,
+    * in-walk pigeonhole sub-bucketing for large FALSE-collision buckets,
+    * hot-bucket refinement, terminal salting for genuine mega-clusters.
+    * Interleaved block keys are an exact cover like any partition of the 64
+    * bit positions into `blocks` classes, so the output is every pair within
     * Hamming `maxHamming`, whatever the block layout. */
-  private[graft] def simhashPairs(docs: DataFrame, n: Int, sh: Column, maxHamming: Int,
-      hotThreshold: Int): DataFrame = {
-    val sigs = docs.where(hasNgrams(n)).select(col("doc_id"), sh.as("sh"))
-      .localCheckpoint() // the walk's hot path re-reads its input filtered to hot buckets
+  private[graft] def simhashPairs(docs: DataFrame, gs: Column, sig: Column => Column,
+      maxHamming: Int, hotThreshold: Int): DataFrame = {
+    // checkpointed: the walk's hot path re-reads its input filtered to hot
+    // buckets; the checkpoint keeps the gram count, not the set
+    val sigs = withGrams(docs.select(col("doc_id"), gs.as("gs"))
+        .select(col("doc_id"), sig(col("gs")).as("sh"), size(col("gs")).as("grams")),
+        col("grams"))
+      .select(col("doc_id"), col("sh"))
     val pairs = Dedup.saltedBucketPairs(
         sigs.select(col("doc_id").as("id"), col("sh").as("phash"),
           gf.phash_block_keys(col("sh"), maxHamming + 1).as("keys")),

@@ -6,10 +6,10 @@ import graft.docs.DocOps
 import graft.pipeline.Dedup
 import graft.spark.{functions => gf}
 
-/** Cross-engine-deterministic dedup channels: every per-element hash is
-  * md5-derived (two 32-bit halves of the hex digest packed into an int64),
-  * so an independent SQL engine (the DuckDB oracle) reproduces signatures,
-  * candidate sets, and estimator values bit-for-bit.
+/** Cross-engine-deterministic dedup channels: every hash that picks a
+  * signature, a candidate key or an estimator value is md5-derived (two
+  * 32-bit halves of the hex digest packed into an int64), so an independent
+  * SQL engine (the DuckDB oracle) reproduces them bit-for-bit.
   *
   * The four LSH twins (doc and image MinHash, doc and image SimHash) are
   * calls of the product channel cores in [[graft.docs.DocOps]] and
@@ -22,6 +22,13 @@ import graft.spark.{functions => gf}
   * `band_walk_keys`, `simhash_majority_ge64`), each byte-identical to its
   * built-ins formulation (Md5ChannelsSpec) while the oracle SQL keeps the
   * built-ins shape. The estimator, HLL and OMH twins are composed here.
+  *
+  * The image twins' confirm is the product's [[graft.pipeline.Dedup.confirm]]:
+  * exact jaccard over `token_ngrams(caption, 1)`, murmur hashes of `\s+`
+  * tokens. So only their candidate keys are md5-reproducible, and their
+  * pairs equal the oracle SQL's (string tokens of `split(caption, ' ')`) on
+  * non-empty captions whose tokens are separated by single spaces; on an
+  * empty caption or a run, edge or non-space whitespace they may differ.
   *
   * Determinism contract (mirrored in SparkEntry.oracleSql):
   *  - element hash h(s) = (int64)(md5(s)[0:8] hex) << 32 | (md5(s)[8:16] hex);
@@ -82,23 +89,25 @@ object Md5Channels {
   /** doc near-dup pairs, md5 family: [[graft.docs.DocOps.minhashPairs]] over
     * the sorted distinct md5 hashes of the token n-gram strings, md5
     * xor-perm MinHash band keys (numPerm slots, bands×r banding). Filter,
-    * walk and exact-jaccard confirm are the product channel's. */
+    * walk and exact-jaccard confirm are the product channel's; the filter
+    * keeps the docs with a non-empty gram set, which for single-space
+    * tokens is the oracle's `size(split(text, ' ')) >= n`. */
   def docMinhashDupPairsMd5(docs: DataFrame, n: Int = 3, tau: Double = 0.6,
       numPerm: Int = 32, bands: Int = 16, r: Int = 2,
       hotThreshold: Int = Dedup.AllPairsHotCap): DataFrame =
-    DocOps.minhashPairs(docs, n, tau,
+    DocOps.minhashPairs(docs, tau,
       array_sort(array_distinct(gf.md5_hashes63(gf.token_ngram_strings(col("text"), n)))),
       md5BandKeys(numPerm, bands, r), hotThreshold)
 
   /** doc near-dup pairs, md5 family: [[graft.docs.DocOps.simhashPairs]] over
     * the majority-vote SimHash of the md5 gram hashes. The product's
     * interleaved block keys are an exact cover, so the output is every pair
-    * within Hamming `maxHamming`, as the oracle's contiguous blocks give. */
+    * within Hamming `maxHamming`, as the oracle's contiguous blocks give.
+    * The filter is the MinHash twin's: docs with a non-empty gram set. */
   def docSimhashDupPairsMd5(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
       hotThreshold: Int = Dedup.HammingHotCap): DataFrame =
-    DocOps.simhashPairs(docs, n,
-      gf.simhash_majority_ge64(gf.md5_hashes63(gf.token_ngram_strings(col("text"), n))),
-      maxHamming, hotThreshold)
+    DocOps.simhashPairs(docs, gf.md5_hashes63(gf.token_ngram_strings(col("text"), n)),
+      gf.simhash_majority_ge64, maxHamming, hotThreshold)
 
   /** the md5 63-bit hashes of a caption's distinct token strings. */
   private val captionHashes: Column =

@@ -354,7 +354,7 @@ object Dedup {
     * emits the pair there, and if it is hot the refinement pass (which runs
     * with firstAgreeBlocks = 0) emits it. 0 disables the check (banded LSH
     * keys are hashes of band slices, not derivable from `phash`;
-    * candidatesSimhash keys derive from simhash while `phash` carries the
+    * dupPairsSimhash keys derive from simhash while `phash` carries the
     * pHash). */
   private[graft] final class BucketRunPairs(
       rows: Iterator[BandedRow], maxHamming: Int, hotThreshold: Int,
@@ -636,24 +636,19 @@ object Dedup {
       cfg.hammingThreshold, firstAgreeBlocks = blocks)
   }
 
-  /** SimHash pigeonhole candidates (numeric ids): interleaved block keys
-    * over the 64-bit SimHash signature — exact cover of simhash-Hamming ≤
-    * blocks−1; same one-shuffle run-walk + hot-bucket salting.
+  /** full simhash-channel dup-pair query ([[keyedDupPairs]] over 8
+    * interleaved block keys of the 64-bit caption SimHash; same confirm
+    * predicate). The walk Hamming-filters on the pHash; the block keys are
+    * an exact cover of simhash-Hamming ≤ 7.
     *
     * This channel fits the NEAR-IDENTICAL regime only (e.g. boilerplate
     * docs, doc_simhash_dup_pairs): ~10% caption churn moves enough
     * weighted bit votes that dup-pair simhash Hamming is wide on the image
     * corpus (measured p50=11, p99=20 by a dev probe, since removed), so
-    * recall there is 0.85 at blocks=8 vs ≥0.99 for the banded-MinHash
+    * recall there is 0.85 at 8 blocks vs ≥0.99 for the banded-MinHash
     * channel, which remains the general-similarity path. Block width
     * shrinks with block count (8 blocks ⇒ 8-bit keys), so bucket sizes grow
-    * ~ n/2^width — past ~10^6 rows use [[candidatesMinhash]] instead. */
-  def candidatesSimhash(sigs: DataFrame, cfg: Config = defaultConfig,
-      simhashBlocks: Int = 8): DataFrame =
-    keyedCandidates(sigs, gf.phash_block_keys(col("simhash"), simhashBlocks),
-      cfg.hammingThreshold)
-
-  /** full simhash-channel dup-pair query (same confirm predicate). */
+    * ~ n/2^width — past ~10^6 rows use [[dupPairsMinhash]] instead. */
   def dupPairsSimhash(corpus: DataFrame, cfg: Config = defaultConfig): DataFrame =
     keyedDupPairs(corpus, gf.phash_block_keys(gf.simhash64(features(cfg)), 8), cfg)
 

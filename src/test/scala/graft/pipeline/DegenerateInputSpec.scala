@@ -113,6 +113,23 @@ class DegenerateInputSpec extends AnyFunSuite {
     }
   }
 
+  test("doc channels filter with their own family's tokenizer") {
+    // the product splits on whitespace runs, the md5 twins (like the oracle
+    // SQL's `len(string_split(text, ' ')) >= 3`) on single spaces: a
+    // tab-joined doc is 3-4 product tokens but 1 md5-family token, "x y " 2
+    // product tokens but 3 md5-family tokens ("x", "y", "")
+    val d = docs(Seq((1L, "a\tb\tc\td"), (2L, "x\ty\tz\tw"),
+      (3L, "x y "), (4L, "x y "), (5L, "p\tq\tr"), (6L, "p\tq\tr")))
+    def ids(df: DataFrame): Seq[(Long, Long)] =
+      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(ids(DocOps.minhashDupPairs(d)) === Seq((5L, 6L)))
+    assert(ids(DocOps.simhashDupPairs(d)) === Seq((5L, 6L)))
+    // the md5 family: the tab docs have no 3-gram, so they neither share the
+    // empty set's simhash nor reach the walk; the trailing-space docs do
+    assert(ids(Md5Channels.docMinhashDupPairsMd5(d)) === Seq((3L, 4L)))
+    assert(ids(Md5Channels.docSimhashDupPairsMd5(d)) === Seq((3L, 4L)))
+  }
+
   test("minhash candidates skip docs with fewer than n tokens") {
     // without the filter "", "a b" and "x" share the empty n-gram set's
     // signature, so one bucket per band: 3 candidate pairs the confirm drops
