@@ -3,7 +3,7 @@ package graft.ckpt
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.spark.{functions => gf}
+import graft.pipeline.Dedup
 
 /** "Iceberg-lite" snapshot store (SURVEY.md §7.4 item 1: the Iceberg runtime
   * is unavailable offline, so the required contract — atomic snapshot
@@ -44,15 +44,16 @@ final class SnapshotStore(val root: String, val configHash: String) {
     val spark = df.sparkSession
     df.write.mode("overwrite").parquet(dataDir(stage))
     val written = spark.read.parquet(dataDir(stage))
-    val lineage = written
-      .groupBy(spark_partition_id().as("part"))
-      .agg(count(lit(1)).as("rows"),
-        round(gf.hll_card(gf.hll_agg(xxhash64(col(keyCol)), 12)), 1).as("distinct_keys_est"))
-      .orderBy("part")
+    // one map-only job reads the stage back: each partition folds its own
+    // row count and HLL sketch, and the row count is their sum
+    val parts = Dedup.partitionSketches(written, col(keyCol), 12)
+      .select(col("part"), col("rows"), round(col("est"), 1))
       .collect()
+      .sortBy(_.getInt(0))
+    val lineage = parts
       .map(r => s"""{"part":${r.getInt(0)},"rows":${r.getLong(1)},"distinct_keys_est":${r.getDouble(2)}}""")
       .mkString("[", ",", "]")
-    val total = written.count()
+    val total = parts.map(_.getLong(1)).sum
     val manifest =
       s"""{"stage":"$stage","parent":${parent.map(p => s""""$p"""").getOrElse("null")},
          |"config_hash":"$configHash","row_count":$total,
@@ -90,8 +91,6 @@ object SnapshotStore {
   * stage and recomputes only what's missing, reading inputs from the last
   * snapshot. */
 object ResumablePipeline {
-  import graft.pipeline.Dedup
-
   def run(spark: SparkSession, corpus: DataFrame, root: String,
       cfg: Dedup.Config = Dedup.defaultConfig): DataFrame = {
     val store = new SnapshotStore(root, SnapshotStore.hashConfig(cfg))

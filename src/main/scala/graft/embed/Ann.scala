@@ -105,7 +105,10 @@ object Ann {
     // dominant cost and must not pay the interpreted zip_with/aggregate path
     val base = emb.select(col("vec_id"), vecD(col("embedding")).as("v"))
       .withColumn("norm", sqrt(gf.vec_dot(col("v"), col("v"))))
-    val n = base.count()
+    // the row count only tests for emptiness and sets the seed stride: a
+    // one-stage RDD count that reads no column, not a SQL count's
+    // partial→final exchange
+    val n = emb.select().queryExecution.toRdd.count()
     // no vectors means no centroid to seed (assign would build greatest()
     // over zero arguments); brute force over the empty table is the same
     // empty (query_id, neighbor_id, rank, sim) result

@@ -1,8 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.hash.HashKernels
+import graft.sketch.Hll
+import graft.spark.expr.Kernels
 import graft.spark.{functions => gf}
 
 /** The near-duplicate detection pipeline (SURVEY.md §3 "Our Spark
@@ -97,14 +100,17 @@ object Dedup {
     * partitioning by bv co-locates each bucket at any width, and everything
     * downstream is order-insensitive).
     * The row count is the walk's own: the summed `keys` sizes of the frame
-    * it explodes, one aggregate job — a cached-block pass over the
-    * materialized frames most callers hand in, and a read of the pHash
-    * column for the raw corpus. A null key array explodes to nothing; its
-    * size reads -1 or null (by ANSI mode), so `greatest` counts it as 0. */
+    * it explodes — a cached-block pass over the materialized frames most
+    * callers hand in, and a read of the pHash column for the raw corpus.
+    * It is a number only the driver reads, so it runs as ONE map-only job
+    * (an RDD fold over the frame's rows): a SQL `sum` would plan a
+    * partial→final exchange, a second stage and an AQE re-plan around it. A
+    * null key array explodes to nothing; its size reads -1 or null (by ANSI
+    * mode), so `greatest` counts it as 0. */
   private[pipeline] def walkPartitions(frame: DataFrame): Int = {
     val dflt = frame.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val keyedRows = frame.agg(coalesce(sum(greatest(size(col("keys")), lit(0))), lit(0L)))
-      .collect()(0).getLong(0)
+    val keyedRows = frame.select(greatest(size(col("keys")), lit(0)))
+      .queryExecution.toRdd.map(_.getInt(0).toLong).fold(0L)(_ + _)
     math.min(100000L, math.max(dflt.toLong,
       (keyedRows + WalkRowsPerSortTask - 1) / WalkRowsPerSortTask)).toInt
   }
@@ -803,17 +809,32 @@ object Dedup {
     * fast path) — the measurement surface of tools.ScaleBench's `cc` leg. */
   private[graft] def clustersInstrumented(edges: DataFrame, vertices: DataFrame,
       maxIter: Int = 50, localThreshold: Long = clustersLocalThreshold()): (DataFrame, Int) = {
-    val e = edges.select(idNum(col("id_a")).as("src"), idNum(col("id_b")).as("dst"))
-      .localCheckpoint()
-    // the dup subgraph is usually tiny relative to the corpus: size the
-    // per-round shuffles to the EDGE count, not the session default, so the
-    // latency-bound propagation rounds don't drown in task overhead
-    val nEdges = e.count()
-    if (nEdges <= localThreshold) return (clustersLocal(e, vertices), 0)
-    val (labels, rounds) = propagateLabels(e, maxIter,
-      math.max(2, math.min(
-        vertices.sparkSession.sparkContext.defaultParallelism,
-        (nEdges / 250000L).toInt + 1)))
+    // each partition's numeric edges packed ONCE into a primitive chunk
+    // [src0,dst0,src1,dst1,…] and cached by the one job that also returns
+    // the chunk sizes: that job is the edge count, and the driver path
+    // collects the same chunks, so no separate count job runs
+    val packed = edges.select(idNum(col("id_a")), idNum(col("id_b")))
+      .queryExecution.toRdd
+      .mapPartitions { it =>
+        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+        while (it.hasNext) { val r = it.next(); buf += r.getLong(0); buf += r.getLong(1) }
+        Iterator.single(buf.result())
+      }
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (labels, rounds) = try {
+      // the dup subgraph is usually tiny relative to the corpus: size the
+      // per-round shuffles to the EDGE count, not the session default, so
+      // the latency-bound propagation rounds don't drown in task overhead
+      val nEdges = packed.map(_.length / 2L).fold(0L)(_ + _)
+      if (nEdges <= localThreshold) return (clustersLocal(packed.collect(), vertices), 0)
+      val spark = vertices.sparkSession
+      import spark.implicits._
+      propagateLabels(
+        packed.flatMap(ch => Iterator.range(0, ch.length, 2).map(i => (ch(i), ch(i + 1))))
+          .toDF("src", "dst"),
+        maxIter,
+        math.max(2, math.min(spark.sparkContext.defaultParallelism, (nEdges / 250000L).toInt + 1)))
+    } finally packed.unpersist(blocking = false)
     val verts = vertices.select(idNum(col("image_id")).as("vid"))
     val all = verts.join(labels, Seq("vid"), "left")
       .select(col("vid"), coalesce(col("label"), col("vid")).as("label"))
@@ -899,37 +920,46 @@ object Dedup {
     * whose working set stays under 1/8 of `maxHeapBytes`, floored at the
     * field-proven 20M (safe even on small driver heaps). A 24 GB driver
     * admits ~47M edges (the 42.5M-row corpus confirms ~37M — it rides the
-    * fast path); a 64 GB driver ~125M; past that the distributed
-    * label-propagation loop takes over. */
-  def clustersLocalThreshold(maxHeapBytes: Long = Runtime.getRuntime.maxMemory()): Long =
+    * fast path); past that the distributed label-propagation loop takes
+    * over.
+    *
+    * The collect also has to fit `spark.driver.maxResultSize`
+    * (`maxResultBytes`, 1 GiB by default; 0 means unlimited): at 16 B per
+    * edge, an admitted edge set past it would abort the job instead of
+    * taking the distributed loop. So a positive cap also bounds admission,
+    * floor included, less 1/64 for the task results' own headers: the 1 GiB
+    * default admits ~66M edges, below the ~125M a 64 GB heap alone would. */
+  def clustersLocalThreshold(maxHeapBytes: Long = Runtime.getRuntime.maxMemory(),
+      maxResultBytes: Long = driverMaxResultSize()): Long = {
     // upper cap: the local path packs 2 longs/edge into ONE JVM array
     // (vids), so edge sets past ~2^30 can't be indexed by Int no matter the
     // heap — a ≥ ~550 GB driver must take the distributed loop, not an
     // Int-wrapped allocation
-    math.min(1000000000L, math.max(20000000L, maxHeapBytes / 8 / 64))
+    val byHeap = math.min(1000000000L, math.max(20000000L, maxHeapBytes / 8 / 64))
+    if (maxResultBytes > 0) math.min(byHeap, maxResultBytes / 16 / 64 * 63) else byHeap
+  }
+
+  /** the session's `spark.driver.maxResultSize` in bytes (Spark's 1 GiB
+    * default when no session is up). */
+  private def driverMaxResultSize(): Long =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(1L << 30)(_.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g"))
 
   /** Hybrid fast path: when the duplicate subgraph fits on the driver (edge
     * lists are 16 bytes/edge; 20M edges ≈ 320 MB), collect ONLY the edges,
     * run in-memory union-find, and broadcast the labels back — O(E α(E))
     * with zero per-round scheduling latency. Singletons (the bulk of the
     * corpus) never leave the executors. The distributed label-propagation
-    * loop above remains the path for edge sets past the threshold. */
-  private def clustersLocal(e: DataFrame, vertices: DataFrame): DataFrame = {
+    * loop above remains the path for edge sets past the threshold.
+    *
+    * `chunks` are the collected per-partition PACKED long arrays
+    * [src0,dst0,src1,dst1,…]: one boxed object per PARTITION on the wire
+    * instead of a (Long,Long) tuple per edge — the transient tuple boxing
+    * (~48 B/edge) used to dominate the driver's peak footprint and forced
+    * the admission cap below what the flat union-find arrays need. */
+  private def clustersLocal(chunks: Array[Array[Long]], vertices: DataFrame): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    // collect the edges as per-partition PACKED long arrays
-    // [src0,dst0,src1,dst1,…]: one boxed object per PARTITION on the wire
-    // instead of a (Long,Long) tuple per edge — the transient tuple boxing
-    // (~48 B/edge) used to dominate the driver's peak footprint and forced
-    // the admission cap below what the flat union-find arrays need
-    val chunks: Array[Array[Long]] = e.select(col("src"), col("dst"))
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-        while (it.hasNext) { val p = it.next(); buf += p._1; buf += p._2 }
-        Iterator.single(buf.result())
-      }
-      .collect()
     val totalLongs = chunks.iterator.map(_.length.toLong).sum
     // Long math until proven Int-safe: a silent .toInt here would wrap for
     // edge sets past 2^30 and build a wrong vid table (the admission
@@ -1020,12 +1050,33 @@ object Dedup {
 
   /** per-partition HLL lineage metric: distinct-cluster cardinality estimate
     * per shuffle partition of the cluster assignment (north_star). */
-  def partitionMetrics(clustered: DataFrame, np: Int = 12): DataFrame = {
-    clustered
-      .withColumn("part", spark_partition_id())
-      .groupBy(col("part"))
-      .agg(
-        count(lit(1)).as("rows"),
-        gf.hll_card(gf.hll_agg(xxhash64(col("cluster_id")), np)).as("distinct_clusters_est"))
+  def partitionMetrics(clustered: DataFrame, np: Int = 12): DataFrame =
+    partitionSketches(clustered, col("cluster_id"), np)
+      .toDF("part", "rows", "distinct_clusters_est")
+
+  /** `(part, rows, est)` for each non-empty partition of `frame`: its
+    * `spark_partition_id`, row count and the HLL estimate (`np` precision)
+    * of its distinct `key` values. HLL registers are mergeable sketches, so
+    * each partition builds its own where its rows already are: one fold per
+    * partition in the frame's own stage, no exchange. Values equal the
+    * `groupBy(spark_partition_id()).agg(count, hll_card(hll_agg(...)))`
+    * aggregate (PipelineSpec, SnapshotSpec), whose exchange would ship one
+    * register blob per partition only to regroup rows that already share
+    * one. */
+  private[graft] def partitionSketches(frame: DataFrame, key: Column, np: Int): DataFrame = {
+    val spark = frame.sparkSession
+    import spark.implicits._
+    frame.select(spark_partition_id(), xxhash64(key)).as[(Int, Long)]
+      .mapPartitions { it =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val regs = Hll.init(np)
+          var part = 0
+          var rows = 0L
+          it.foreach { case (p, h) => part = p; rows += 1; Hll.add(regs, h, np) }
+          Iterator.single((part, rows, Kernels.hllCard(regs)))
+        }
+      }
+      .toDF("part", "rows", "est")
   }
 }

@@ -36,6 +36,30 @@ class SnapshotSpec extends AnyFunSuite {
     }
   }
 
+  test("manifest lineage and row_count equal the groupBy(spark_partition_id()) formulation") {
+    import org.apache.spark.sql.functions._
+    import graft.spark.{functions => gf}
+    val store = new SnapshotStore(tmp(), SnapshotStore.hashConfig(Dedup.defaultConfig))
+    for ((stage, df, key) <- Seq(
+        ("signatures", Dedup.signatures(corpus), "image_id"),
+        ("edges", Dedup.dupPairs(corpus).repartition(3), "id_a"))) {
+      val written = store.commit(df, stage, None, key)
+      val lineage = written
+        .groupBy(spark_partition_id().as("part"))
+        .agg(count(lit(1)).as("rows"),
+          round(gf.hll_card(gf.hll_agg(xxhash64(col(key)), 12)), 1).as("distinct_keys_est"))
+        .orderBy("part")
+        .collect()
+      assert(lineage.length > 1, s"$stage: one partition exercises no per-partition fold")
+      val parts = lineage
+        .map(r => s"""{"part":${r.getInt(0)},"rows":${r.getLong(1)},"distinct_keys_est":${r.getDouble(2)}}""")
+        .mkString("[", ",", "]")
+      val m = store.manifestJson(stage).get
+      assert(m.contains(s""""row_count":${written.count()},"""), m)
+      assert(m.endsWith(s""""partitions":$parts}"""), m)
+    }
+  }
+
   test("kill-after-edges resume: identical final clusters, stages reused") {
     val rootA = tmp()
     val storeA = new SnapshotStore(rootA, SnapshotStore.hashConfig(Dedup.defaultConfig))

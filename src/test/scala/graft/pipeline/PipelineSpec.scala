@@ -97,17 +97,31 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("clustersLocalThreshold: floored at 20M edges, scales with driver heap") {
-    // small heaps keep the field-proven floor
-    assert(Dedup.clustersLocalThreshold(1L << 30) === 20000000L)
-    assert(Dedup.clustersLocalThreshold(8L << 30) === 20000000L)
+    // heap rule alone (maxResultSize 0 = unlimited): small heaps keep the
+    // field-proven floor
+    assert(Dedup.clustersLocalThreshold(1L << 30, 0L) === 20000000L)
+    assert(Dedup.clustersLocalThreshold(8L << 30, 0L) === 20000000L)
     // big heaps admit proportionally more (1/8 heap at ~64 B/edge —
     // packed-primitive collect, see clustersLocal)
-    val at64g = Dedup.clustersLocalThreshold(64L << 30)
+    val at64g = Dedup.clustersLocalThreshold(64L << 30, 0L)
     assert(at64g === (64L << 30) / 8 / 64)
     assert(at64g > 20000000L)
-    assert(Dedup.clustersLocalThreshold(256L << 30) === (256L << 30) / 8 / 64)
-    // default reads the live heap and is always at least the floor
-    assert(Dedup.clustersLocalThreshold() >= 20000000L)
+    assert(Dedup.clustersLocalThreshold(256L << 30, 0L) === (256L << 30) / 8 / 64)
+    // the collected 16 B/edge must fit spark.driver.maxResultSize: Spark's
+    // 1 GiB default caps a 64 GB heap's 134M edges below 2^26 ...
+    val oneGiB = 1L << 30
+    val capped = Dedup.clustersLocalThreshold(64L << 30, oneGiB)
+    assert(capped === oneGiB / 16 / 64 * 63)
+    assert(capped < (1L << 26) && capped * 16 < oneGiB)
+    // ... a cap under 320 MB takes the admission below the 20M floor ...
+    val small = Dedup.clustersLocalThreshold(1L << 30, 256L << 20)
+    assert(small < 20000000L && small * 16 < (256L << 20))
+    // ... and a cap past the heap rule leaves it alone
+    assert(Dedup.clustersLocalThreshold(64L << 30, 64L << 30) === at64g)
+    // defaults read the live heap and the session's maxResultSize (1 GiB
+    // here): at least the floor, and within the result cap
+    val live = Dedup.clustersLocalThreshold()
+    assert(live >= 20000000L && live * 16 < oneGiB)
   }
 
   test("spark aggregate merge laws: sig_merge / minhash_merge / hll union") {
@@ -215,33 +229,81 @@ class PipelineSpec extends AnyFunSuite {
     assert(withLcs.forall(r => r.getAs[Int]("lcs") > 0))
   }
 
-  test("confirm and confirmSubstring build their plans without starting a Spark job") {
+  /** `body`'s result and the stage count of each Spark job it starts, in
+    * start order. The listener is fenced by a sentinel job: events arrive
+    * in post order, so once the sentinel's start is seen, every job `body`
+    * started has been seen too. */
+  private def jobsOf[T](body: => T): (T, Seq[Int]) = {
+    import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
-    val cands = Dedup.candidatesPhashBlocks(corpus) // eager: its jobs run before the window
-    val group = "confirm-build"
-    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val group = "jobs-under-test"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobGroups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("") -> e.stageInfos.size)
     }
+    def sentinelSeen = started.asScala.exists(_._1 == "sentinel")
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "building confirm plans")
-      try {
-        Dedup.confirm(cands, corpus)
-        Dedup.confirmSubstring(cands, corpus)
-      } finally sc.clearJobGroup()
-      // listener events arrive in post order: once the sentinel job's start
-      // is seen, every job the builds above started has been seen too
+      sc.setJobGroup(group, "jobs under test")
+      val result = try body finally sc.clearJobGroup()
       sc.setJobGroup("sentinel", "listener fence")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!jobGroups.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobGroups.contains("sentinel"), "listener never saw the sentinel job")
-      assert(!jobGroups.contains(group), "building a confirm plan started a Spark job")
+      while (!sentinelSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinelSeen, "listener never saw the sentinel job")
+      (result, started.asScala.collect { case (`group`, stages) => stages }.toSeq)
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("confirm and confirmSubstring build their plans without starting a Spark job") {
+    val cands = Dedup.candidatesPhashBlocks(corpus) // eager: its jobs run before the window
+    val (_, jobs) = jobsOf {
+      Dedup.confirm(cands, corpus)
+      Dedup.confirmSubstring(cands, corpus)
+    }
+    assert(jobs.isEmpty, s"building a confirm plan started ${jobs.size} Spark jobs")
+  }
+
+  test("driver-side scalars run as one map-only job: walk sizing, the clusters edge count") {
+    // an exchange-free frame: 4,000 rows × 3 keys
+    val frame = spark.range(0L, 4000L, 1L, 4).select(col("id"), lit(0L).as("phash"),
+      array(lit(1L), lit(2L), lit(3L)).as("keys"))
+    assert(jobsOf(Dedup.walkPartitions(frame)) === ((4, Seq(1))))
+    // the driver path: one job packs, caches and sizes the edge chunks,
+    // one collects them; no count job runs between
+    val edges = Dedup.dupPairs(corpus).localCheckpoint()
+    val vertices = corpus.select("image_id")
+    val (clustered, jobs) = jobsOf(Dedup.clusters(edges, vertices))
+    assert(jobs === Seq(1, 1))
+    assert(clustered.collect().toSet ===
+      Dedup.clusters(edges, vertices, localThreshold = 0L).collect().toSet)
+  }
+
+  test("partitionMetrics == the groupBy(spark_partition_id()) formulation, with no exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // five partitions, the third one empty; 400 rows in 58 clusters
+    val clustered = spark.sparkContext.parallelize(0 until 400, 5)
+      .mapPartitionsWithIndex((i, it) => if (i == 2) Iterator.empty else it)
+      .map(i => (f"img_$i%010d", f"img_${i / 7}%010d"))
+      .toDF("image_id", "cluster_id")
+    val bySql = clustered.withColumn("part", spark_partition_id())
+      .groupBy(col("part"))
+      .agg(count(lit(1)).as("rows"),
+        gf.hll_card(gf.hll_agg(xxhash64(col("cluster_id")), 12)).as("distinct_clusters_est"))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    val metrics = Dedup.partitionMetrics(clustered)
+    assert(metrics.columns.toSeq === Seq("part", "rows", "distinct_clusters_est"))
+    val (rows, jobs) = jobsOf(metrics.collect())
+    assert(jobs === Seq(1))
+    val byFold = rows.map(r => r.getInt(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    assert(byFold.keySet === Set(0, 1, 3, 4))
+    assert(byFold === bySql)
+    val exchanges = metrics.queryExecution.executedPlan.collect { case e: Exchange => e }
+    assert(exchanges.isEmpty, metrics.queryExecution.executedPlan.toString)
   }
 
   test("confirm and confirmSubstring shuffle the corpus side once, reused by both joins") {
