@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
 import graft.hash.HashKernels
 import graft.sketch.Hll
@@ -855,6 +856,7 @@ object Dedup {
     * logarithmic bound; the component minimum is a fixpoint of both steps. */
   private[graft] def propagateLabels(e: DataFrame, maxIter: Int, parts: Int): (DataFrame, Int) = {
     val sc = e.sparkSession.sparkContext
+    val beforeSym = sc.getPersistentRDDs.keySet.toSet
     val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(parts, col("src")).localCheckpoint()
     val beforeInit = sc.getPersistentRDDs.keySet.toSet
@@ -899,12 +901,12 @@ object Dedup {
       // (RDD ids are monotonic) — keep it, release the rest.
       val newIds = sc.getPersistentRDDs.keySet.toSet -- beforeIds
       val keepId = if (newIds.isEmpty) -1 else newIds.max
-      val dead = (newIds - keepId) ++ prevRoundIds
-      sc.getPersistentRDDs.filter { case (id, _) => dead(id) }
-        .values.foreach(_.unpersist(blocking = false))
+      ((newIds - keepId) ++ prevRoundIds).foreach(Bridge.unpersistRDD(sc, _))
       prevRoundIds = if (keepId >= 0) Set(keepId) else Set.empty
       iter += 1
     }
+    // the labels' own checkpoint cut their lineage to the edge checkpoint
+    (beforeInit -- beforeSym).foreach(Bridge.unpersistRDD(sc, _))
     if (!converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIter rounds — " +

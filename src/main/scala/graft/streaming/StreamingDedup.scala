@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.Dedup
 import graft.spark.{functions => gf}
+import graft.util.Fs
 
 /** Incremental (streaming) near-duplicate detection.
   *
@@ -14,12 +15,25 @@ import graft.spark.{functions => gf}
   *
   *  - `readStream` source → the same narrow signature stage as batch
   *    (sketches are row-local, so batch/stream parity is free);
-  *  - `foreachBatch`: each micro-batch's band keys are joined against the
-  *    accumulated index parquet (new-vs-old) AND self-joined (new-vs-new),
-  *    confirmed exactly, appended to a `dup_pairs` sink, then the batch's
-  *    keys are appended to the index — the incremental form of the batch
-  *    LSH join (new data only ever joins the index, never the full history
-  *    re-shuffles).
+  *  - `foreachBatch`: the micro-batch's fresh rows `(image_id, phash,
+  *    caption, keys)`, `keys` their MinHash band keys, plus the index rows
+  *    that share at least one band key with them, run through the batch
+  *    channel's own walk and confirm ([[Dedup.keyedDupPairs]]); the pairs
+  *    with at least one fresh endpoint go to a `dup_pairs` sink, then the
+  *    fresh rows are appended to the index. Every pair surfaces in the
+  *    batch that brings its second member, so the sink's union equals the
+  *    batch MinHash channel's pair set over the whole stream.
+  *
+  * The index is a flat parquet dir, one row per image and one file per
+  * micro-batch, kept at ≤ [[CompactAfterFiles]] files by a size-tiered
+  * merge ([[compactIndex]]). A batch reads it in full: a micro-batch's
+  * ~25 rows × 32 bands (~800 keys) hash into nearly every slot of any
+  * key-partitioned layout (≈245 of 256 buckets), so partition pruning
+  * would not cut the read, while each partition would cost a file per
+  * append and its own compaction. StreamBench measures the per-batch wall
+  * against the growing index (BENCH/STREAM.md: 220 micro-batches of ~127
+  * rows on a 4-core host, p50 1.03 s per batch, last-30/first-30 wall
+  * ratio 0.90 while the index grows to 8.3 MB in 8 files).
   *
   * State lives in parquet (restart-safe together with the checkpointLocation
   * offsets), keeping the pattern identical to what an Iceberg-backed index
@@ -27,116 +41,93 @@ import graft.spark.{functions => gf}
   * at-least-once, so each sink states its replay contract explicitly: the
   * `dup_pairs` sink is EXACTLY-once (each micro-batch overwrites its own
   * batchId-keyed partition, so a crash-replayed batch rewrites rather than
-  * re-appends); the index append is at-least-once by design — replay
-  * duplicates are healed by compaction's (id, bv) dedup and can only
-  * re-produce already-distinct pairs, never new ones.
+  * re-appends); the index append is at-least-once by design — a replayed
+  * append leaves an image's row twice, which the per-batch read and
+  * compaction both collapse on `image_id`, so it never changes a pair.
   */
 object StreamingDedup {
 
-  /** number of band-key hash buckets the persistent index is partitioned
-    * by: each micro-batch reads ONLY the index partitions its own band keys
-    * hash into (parquet partition pruning), so the per-batch join cost
-    * scales with the batch's bucket coverage, not the total index size. A
-    * small batch touches few buckets; 256 keeps partition dirs coarse
-    * enough that a full-coverage batch still reads 256 files, not 10^5. */
-  val IndexBuckets = 256
-
-  /** per-band-value salt fan-out of the confirm joins: the index side is
-    * split into this many sub-keys (salt = pmod(id)), the micro-batch side
-    * replicated to all of them, so one hot band value occupies SaltChunks
-    * tasks instead of one. */
-  val SaltChunks = 8
-
-  /** per-bucket file-count compaction threshold: once a bucket directory
-    * accumulates more than this many parquet files, its smallest ⌈n/2⌉
-    * files are merged into one (size-tiered — see [[compactBucket]]).
-    * Without this, long-running ingest appends one file per micro-batch
-    * forever, and every later batch that touches the bucket pays
-    * ever-growing listing + open cost. */
+  /** index file-count compaction threshold: once the index directory holds
+    * more than this many parquet files, its smallest ⌈n/2⌉ files are merged
+    * into one (size-tiered — see [[compactIndex]]). Without this,
+    * long-running ingest appends one file per micro-batch forever, and
+    * every later batch pays ever-growing listing + open cost. */
   val CompactAfterFiles = 8
 
-  private def bucketDataFiles(dir: java.io.File): Array[java.io.File] =
+  private def dataFiles(dir: java.io.File): Array[java.io.File] =
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
         !f.getName.startsWith(".") && !f.getName.startsWith("_"))
 
-  // depth-first, symlink-safe recursive delete (File.delete refuses
-  // non-empty dirs — a crash mid-write leaves nested `_temporary/...`
-  // trees in the tmp dir); shared with Bench's tmpfs sweep
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.util.Fs.deleteRecursively(f)
-
   /** delete a data file TOGETHER with the `.name.crc` sibling the local
     * Hadoop ChecksumFileSystem committed next to it — File.delete bypasses
     * Hadoop, and an orphaned .crc per compacted input would otherwise grow
-    * the bucket listing forever (the exact cost compaction bounds). */
+    * the index listing forever (the exact cost compaction bounds). */
   private def deleteWithCrc(f: java.io.File): Boolean = {
     val ok = f.delete()
     if (ok) new java.io.File(f.getParentFile, s".${f.getName}.crc").delete(): Unit
     ok
   }
 
-  /** sweep tmp dirs orphaned by a crash mid-compaction. Called ONCE per
-    * batch from the single-writer foreachBatch thread, BEFORE the bucket
-    * compaction pool starts: any `.compact-*` dir present then is stale
-    * (its moved-in files, if any, are already part of its bucket), and no
-    * live sibling compaction exists yet to race with. */
+  /** sweep tmp dirs orphaned by a crash mid-compaction. Called from the
+    * single-writer foreachBatch thread BEFORE that batch's compaction: any
+    * `.compact-*` dir present then is stale (its moved-in files, if any,
+    * are already part of the index), and no live compaction exists to race
+    * with. */
   private def sweepStaleCompactionDirs(indexDir: String): Unit =
     Option(new java.io.File(indexDir).listFiles())
       .getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(".compact-"))
-      .foreach(deleteRecursively)
+      // recursive: a crash mid-write leaves nested `_temporary/...` trees
+      .foreach(Fs.deleteRecursively)
 
-  /** merge one over-threshold bucket's SMALLEST ⌈n/2⌉ files into one —
-    * size-tiered, not a full-bucket rewrite. The original policy rewrote
-    * the whole bucket to one file each time it crossed the threshold, so a
-    * bucket's entire accumulated data was re-read and re-written every
-    * compaction — O(N²/K) total write amplification, measured by
-    * StreamBench as a per-batch wall that tracks index size. Merging the
-    * smallest half keeps the file count ≤ CompactAfterFiles while a row's
-    * file roughly doubles each time it participates, so each row is
-    * rewritten O(log N) times over an unbounded ingest.
+  /** merge the index's SMALLEST ⌈n/2⌉ files into one once it holds more
+    * than [[CompactAfterFiles]] — size-tiered, not a full rewrite. Rewriting
+    * the whole index to one file each time it crossed the threshold would
+    * re-read and re-write all accumulated data every compaction — O(N²/K)
+    * total write amplification. Merging the smallest half keeps the file
+    * count ≤ CompactAfterFiles while a row's file roughly doubles each time
+    * it participates, so each row is rewritten O(log N) times over an
+    * unbounded ingest. One job per compaction.
     *
     * Crash-safe WITHOUT a manifest, by write-then-delete ordering: the
-    * merged file is fully written and moved into the bucket directory
+    * merged file is fully written and moved into the index directory
     * BEFORE any input file is deleted, so a crash at any point leaves the
-    * bucket's row multiset a SUPERSET of the true data. Duplicate index
-    * rows are harmless to the pair output (each batch's confirm ends in
-    * `distinct()`, and ids are unique per row so a duplicated index row can
-    * only re-produce the same pair); LOST rows would silently drop pairs —
-    * hence this ordering rather than an in-place overwrite. foreachBatch is
-    * a single serial writer; concurrent calls for DISTINCT buckets touch
-    * disjoint dirs and unique tmp paths. */
-  private def compactBucket(spark: SparkSession, indexDir: String, bucket: Int): Unit = {
-    val dir = new java.io.File(indexDir, s"bucket=$bucket")
-    val all = bucketDataFiles(dir)
+    * index's row multiset a SUPERSET of the true data. Duplicate index rows
+    * are harmless to the pair output (each batch collapses the index rows
+    * it reads on `image_id`); LOST rows would silently drop pairs — hence
+    * this ordering rather than an in-place overwrite. foreachBatch is a
+    * single serial writer and runs this inline, so no compaction outlives
+    * its batch. */
+  private def compactIndex(spark: SparkSession, indexDir: String): Unit = {
+    val dir = new java.io.File(indexDir)
+    val all = dataFiles(dir)
     if (all.length <= CompactAfterFiles) return
     // smallest ⌈n/2⌉ files (ties by name for determinism)
     val olds = all.sortBy(f => (f.length(), f.getName))
       .take((all.length + 1) / 2)
-    val tmp = new java.io.File(indexDir,
-      s".compact-bucket-$bucket-${java.util.UUID.randomUUID()}")
+    val tmp = new java.io.File(indexDir, s".compact-${java.util.UUID.randomUUID()}")
     // read exactly the listed merge set (never the moved-in result).
-    // dropDuplicates on the natural key (one index row per id per band
-    // value): if an earlier pass's input-file delete failed, its rows exist
-    // both in that stuck file and in the merged file — deduping here keeps
-    // duplication from COMPOUNDING (a duplicate pair collapses whenever its
-    // two holders land in the same merge set, which smallest-half selection
+    // dropDuplicates on the natural key (one index row per image): if an
+    // earlier pass's input-file delete failed, or a replayed batch appended
+    // its file twice, the rows exist in two files — deduping here keeps
+    // duplication from COMPOUNDING (a duplicate collapses whenever its two
+    // holders land in the same merge set, which smallest-half selection
     // eventually forces), while the write-then-delete ordering still
     // guarantees rows are never lost.
     spark.read.parquet(olds.map(_.getPath).toIndexedSeq: _*)
-      .dropDuplicates("id", "bv")
+      .dropDuplicates("image_id")
       .coalesce(1).write.parquet(tmp.getPath)
     Option(tmp.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).foreach { p =>
       // move the DATA file first, the .crc sibling second: a crash between
       // the two moves then leaves the orphan .crc in tmp, where the
-      // `.compact-*` sweep at next entry removes it. (The old crc-first
-      // order stranded the .crc in the bucket dir — a place no sweep ever
-      // touches — whenever the crash hit between the moves.) A data file
-      // briefly lacking its .crc is safe: ChecksumFileSystem skips
-      // verification when the sibling is absent, and the defensive orphan
-      // sweep below clears any .crc that still loses its data file.
+      // `.compact-*` sweep at next entry removes it. (A crc-first order
+      // would strand the .crc in the index dir — a place no sweep touches —
+      // whenever the crash hit between the moves.) A data file briefly
+      // lacking its .crc is safe: ChecksumFileSystem skips verification
+      // when the sibling is absent, and the defensive orphan sweep below
+      // clears any .crc that still loses its data file.
       java.nio.file.Files.move(p.toPath,
         new java.io.File(dir, p.getName).toPath,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
@@ -146,7 +137,7 @@ object StreamingDedup {
         java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
     }
     // defensive sweep: remove any `.name.crc` whose data file is gone
-    // (e.g. left by a crash under the pre-fix move order) so the bucket
+    // (e.g. left by a crash under a crc-first move order) so the index
     // listing — the exact cost compaction bounds — cannot grow stale
     // checksum entries forever
     Option(dir.listFiles()).getOrElse(Array.empty)
@@ -156,13 +147,26 @@ object StreamingDedup {
       .foreach(_.delete(): Unit)
     // eager per-file delete (no short-circuit): a failure leaves that file's
     // rows duplicated until a later compaction both dedups and deletes it —
-    // bounded, logged, and harmless to pair output (confirm ends in distinct)
+    // bounded, logged, and harmless to pair output (reads dedup on image_id)
     val failed = olds.filterNot(deleteWithCrc)
     if (failed.nonEmpty) System.err.println(
-      s"[streaming-dedup] bucket=$bucket: ${failed.length} input file(s) " +
+      s"[streaming-dedup] ${failed.length} index file(s) " +
         "could not be deleted after compaction; rows stay duplicated until " +
         "a later compaction pass dedups and removes them")
-    deleteRecursively(tmp)
+    Fs.deleteRecursively(tmp)
+  }
+
+  /** The index moved from `bucket=N` partition dirs (one row per image and
+    * band) to flat files (one row per image). A checkpoint resumed over the
+    * old layout would read partition dirs beside flat files, so `start`
+    * refuses it instead of mixing the two. */
+  private def requireFlatIndex(indexDir: String): Unit = {
+    val buckets = Option(new java.io.File(indexDir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+    if (buckets.nonEmpty) throw new IllegalStateException(
+      s"index $indexDir has the bucket=N partitioned layout (${buckets.length} bucket " +
+        "dirs, one row per image and band) of an older StreamingDedup; this version " +
+        "reads a flat index of one row per image. Start the stream on a new outDir.")
   }
 
   /** The pairs sink changed layout from flat appended files to `batch=N`
@@ -185,7 +189,7 @@ object StreamingDedup {
     * layout migration. */
   private def migrateLegacyFlatPairs(pairsDir: String): Boolean = {
     val dir = new java.io.File(pairsDir)
-    val flat = bucketDataFiles(dir)
+    val flat = dataFiles(dir)
     if (flat.isEmpty) return new java.io.File(dir, "batch=-1").isDirectory
     val legacy = new java.io.File(dir, "batch=-1")
     legacy.mkdirs()
@@ -206,8 +210,7 @@ object StreamingDedup {
 
   /** run the incremental pipeline over a parquet-backed stream.
     * Returns the started query; results accumulate under `outDir/dup_pairs`,
-    * the LSH index under `outDir/index` (hash-partitioned by band-key
-    * bucket). */
+    * the LSH index under `outDir/index` (flat, one row per image). */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       cfg: Dedup.Config = Dedup.defaultConfig): org.apache.spark.sql.streaming.StreamingQuery = {
     val schema = spark.read.parquet(sourceDir).schema
@@ -217,6 +220,7 @@ object StreamingDedup {
 
     val indexDir = s"$outDir/index"
     val pairsDir = s"$outDir/dup_pairs"
+    requireFlatIndex(indexDir)
     val hasLegacyPairs = migrateLegacyFlatPairs(pairsDir)
     // r6: the batch=-1 legacy pair set is FROZEN once migrated, but the
     // exactly-once anti-join below consumed it per micro-batch — an
@@ -233,137 +237,57 @@ object StreamingDedup {
     stream.writeStream
       .option("checkpointLocation", s"$outDir/checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sigs = Dedup.signatures(batch, cfg)
-        val keyed = sigs.select(
-            expr("cast(substring(image_id, 5) as bigint)").as("id"),
-            col("phash"),
-            explode(gf.band_keys(col("minhash"), cfg.bands, cfg.rowsPerBand)).as("bv"),
-            col("caption"))
-          .withColumn("tok", gf.token_ngrams(col("caption"), 1))
-          .withColumn("bucket", pmod(col("bv"), lit(IndexBuckets.toLong)).cast("int"))
-          .drop("caption")
+        val fresh = Dedup.signatures(batch, cfg)
+          .select(col("image_id"), col("phash"), col("caption"),
+            gf.band_keys(col("minhash"), cfg.bands, cfg.rowsPerBand).as("keys"))
           .localCheckpoint()
-
-        val haveIndex = new java.io.File(indexDir, "_SUCCESS").exists()
-        // the batch's bucket set (bounded: <= IndexBuckets values) — pushed
-        // as a PARTITION filter on the index read, and the compaction scope
-        // after the append (only touched buckets can have grown)
-        val batchBuckets = keyed.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        // the index read then lists and scans only colliding bucket
-        // directories instead of re-shuffling the whole accumulated index
-        // every micro-batch
-        val oldIndex =
-          if (!haveIndex) null
-          else spark.read.parquet(indexDir)
-            .where(col("bucket").isInCollection(batchBuckets))
-
-        // pair order must be normalized with least/greatest: a NEW row's id
-        // can be on either side of an OLD row's id, so `id_a < id_b` on the
-        // raw join would drop most cross-batch pairs.
-        //
-        // SALTED (parity with the batch channel's salt-and-replicate): the
-        // right side — the populated index, or the batch itself in the
-        // new-vs-new self-join — carries salt = pmod(id, SaltChunks) as an
-        // extra join key; the LEFT side (always the micro-batch, bounded by
-        // maxFilesPerTrigger) is replicated to every salt. A giant duplicate
-        // cluster sharing one band value then fans across SaltChunks tasks
-        // instead of serializing one, at the bounded cost of SaltChunks×
-        // the small batch side. Each pair still collides exactly once per
-        // band value (at the right row's own salt), so the pair set is
-        // unchanged (StreamingDedupSpec planted-hot-cluster case).
-        def confirmPairs(a: DataFrame, b: DataFrame): DataFrame =
-          a.toDF("bv", "ia", "phash_a", "tok_a")
-            .withColumn("salt", explode(sequence(lit(0L), lit(SaltChunks - 1L))))
-            .join(b.toDF("bv", "ib", "phash_b", "tok_b")
-              .withColumn("salt", pmod(col("ib"), lit(SaltChunks.toLong))),
-              Seq("bv", "salt"))
-            .where(col("ia") =!= col("ib") &&
-              bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= cfg.hammingThreshold)
-            .where(gf.exact_jaccard(col("tok_a"), col("tok_b")) >= cfg.tokenJaccard)
-            .select(least(col("ia"), col("ib")).as("id_a"),
-              greatest(col("ia"), col("ib")).as("id_b"))
-            .distinct()
-
-        val cols = keyed.select("bv", "id", "phash", "tok")
-        val newNew = confirmPairs(cols, cols)
-        val pairs =
-          if (oldIndex != null)
-            newNew.union(confirmPairs(cols, oldIndex.select("bv", "id", "phash", "tok")))
-              .distinct()
-          else newNew
+        val freshIds = fresh.select("image_id").collect().map(_.getString(0))
+        // the walk's input: the fresh rows plus every index row sharing a
+        // band key with one (no other index row can pair with a fresh one).
+        // One row per image: a replayed batch's rows sit in the index too,
+        // and a replayed append leaves an index row twice.
+        val side =
+          if (!new java.io.File(indexDir, "_SUCCESS").exists()) fresh
+          else {
+            val freshKeys = fresh.select(explode(col("keys")).as("bv")).distinct()
+            val index = spark.read.parquet(indexDir)
+            fresh.unionByName(index
+                .select(col("*"), explode(col("keys")).as("bv"))
+                .join(broadcast(freshKeys), Seq("bv"), "left_semi")
+                .drop("bv"))
+              .dropDuplicates("image_id")
+              .localCheckpoint()
+          }
+        // old-old pairs were emitted by the batch that brought their second
+        // member
+        val pairs = Dedup.keyedDupPairs(side, col("keys"), cfg)
+          .where(col("id_a").isInCollection(freshIds) || col("id_b").isInCollection(freshIds))
         // IDEMPOTENT pairs sink: foreachBatch is at-least-once — a crash
         // between this write and the streaming checkpoint's offset commit
         // replays the whole micro-batch, and a plain append would then
         // duplicate its pair rows PERMANENTLY (nothing downstream dedups
         // the sink). Keying the output directory on batchId and overwriting
         // makes the replay rewrite its own partition instead: exactly-once
-        // pairs. (The index append below stays at-least-once by design —
-        // its duplicates are healed by compaction's (id, bv) dedup and can
-        // only re-produce already-distinct pairs.) Readers of the sink see
-        // `batch` as an extra trailing partition column.
-        val pairsOut = pairs
-          .select(format_string("img_%010d", col("id_a")).as("id_a"),
-            format_string("img_%010d", col("id_b")).as("id_b"))
+        // pairs. (The index append below stays at-least-once by design.)
+        // Readers of the sink see `batch` as an extra trailing partition
+        // column.
+        //
         // layout-migration exactly-once: a checkpoint resumed from the old
         // flat layout may replay the tail batch whose pairs already sit
         // under batch=-1 — anti-join them out. Safe because a pair is
         // emitted by exactly one batch in the normal flow (see
         // migrateLegacyFlatPairs), so nothing legitimately new is dropped.
         val dedupedOut =
-          if (legacyPairs == null) pairsOut
-          else pairsOut.join(legacyPairs, Seq("id_a", "id_b"), "left_anti")
+          if (legacyPairs == null) pairs
+          else pairs.join(legacyPairs, Seq("id_a", "id_b"), "left_anti")
         dedupedOut.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
-        // append this batch to the index partitioned by band-key bucket
-        // (read-before-overwrite is unsafe; the index is append-only like an
-        // Iceberg append commit, and the bucket dirs are its hash partition
-        // spec). Repartition by bucket FIRST: without it every write task
-        // opens a file in every bucket it holds rows for — up to
-        // tasks×buckets files per batch, which pushed every bucket past the
-        // compaction threshold every batch and turned compaction into a
-        // full-index rewrite per batch (StreamBench measured ~24 s/batch on
-        // 580-row batches). One file per touched bucket per batch restores
-        // the intended cadence: a bucket compacts every ~CompactAfterFiles
-        // batches, not every batch.
-        keyed.select("bucket", "bv", "id", "phash", "tok")
-          .repartition(col("bucket"))
-          .write.mode("append").partitionBy("bucket").parquet(indexDir)
-        // size-triggered compaction of the buckets this batch grew: keeps
-        // per-bucket file count bounded over an unbounded ingest. Stale
-        // `.compact-*` tmp dirs are swept ONCE here — before the pool below
-        // exists — so the sweep can never race a live sibling compaction.
+        // append the fresh rows as ONE index file (read-before-overwrite is
+        // unsafe; the index is append-only like an Iceberg append commit),
+        // then merge files past the threshold. Stale `.compact-*` tmp dirs
+        // are swept first, while no compaction is live.
+        fresh.coalesce(1).write.mode("append").parquet(indexDir)
         sweepStaleCompactionDirs(indexDir)
-        // compactions of DISTINCT buckets touch disjoint dirs and tmp paths:
-        // run them through a small fixed pool so a batch that matures many
-        // buckets pays ~⌈due/8⌉ compaction rounds of wall, not their sum
-        val due = batchBuckets.filter(b =>
-          bucketDataFiles(new java.io.File(indexDir, s"bucket=$b")).length > CompactAfterFiles)
-        if (due.nonEmpty) {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(8, due.length))
-          try {
-            val futures = due.map(b => pool.submit(new Runnable {
-              override def run(): Unit = compactBucket(spark, indexDir, b)
-            }))
-            futures.foreach(_.get())
-          } finally {
-            // MUST fully drain before leaving the batch, including on
-            // failure: a compaction thread outliving a failed foreachBatch
-            // would break the single-serial-writer invariant — the
-            // restarted batch's sweep would delete the orphan's live
-            // `.compact-*` tmp dir mid-move. shutdownNow interrupts queued
-            // + running tasks; awaitTermination bounds the drain, and an
-            // incomplete drain FAILS the batch loudly (r6, advisor finding):
-            // proceeding with a live compaction thread would silently void
-            // the invariant the next batch's `.compact-*` sweep relies on.
-            pool.shutdownNow()
-            if (!pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES))
-              throw new IllegalStateException(
-                "compaction pool did not terminate within 5 min — failing the " +
-                  "batch rather than leaving a live compaction thread behind")
-          }
-        }
-        ()
+        compactIndex(spark, indexDir)
       }
       .start()
   }

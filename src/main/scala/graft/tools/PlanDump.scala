@@ -84,9 +84,11 @@ object PlanDump {
       md.append(fmt(df).trim.take(6000))
       md.append("\n```\n")
     }
-    Files.createDirectories(Paths.get("/root/repo/docs"))
-    Files.writeString(Paths.get("/root/repo/docs/PLANS.md"), md.toString)
-    println("PLANDUMP wrote /root/repo/docs/PLANS.md")
+    // relative: the checkout the tool runs in (sbt forks in the project root)
+    val out = Paths.get("docs", "PLANS.md").toAbsolutePath
+    Files.createDirectories(out.getParent)
+    Files.writeString(out, md.toString)
+    println(s"PLANDUMP wrote $out")
     spark.stop()
   }
 }

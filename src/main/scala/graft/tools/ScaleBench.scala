@@ -69,13 +69,15 @@ object ScaleBench {
     var mark = 0
     def beginSection(): Unit = mark = out.length
     def endSection(name: String): Unit = {
-      val dir = Paths.get("/root/repo/BENCH/scale_sections")
+      // relative: the checkout the tool runs in (sbt and scale_run.sh both
+      // start it in the project root)
+      val dir = Paths.get("BENCH", "scale_sections")
       Files.createDirectories(dir)
       Files.writeString(dir.resolve(s"$name.md"), out.substring(mark))
       val body = Seq("linearity", "workload", "docskew", "docscale", "cc", "decode", "ann", "protocol")
         .map(m => dir.resolve(s"$m.md")).filter(Files.exists(_))
         .map(Files.readString).mkString
-      Files.writeString(Paths.get("/root/repo/BENCH/SCALE.md"), header + body)
+      Files.writeString(Paths.get("BENCH", "SCALE.md"), header + body)
     }
 
     // warmup: JIT the generated code paths on the smallest corpus
@@ -393,7 +395,7 @@ object ScaleBench {
       // one k per JVM supported (second arg; default all three) — same
       // fd-cap rationale as the cc leg; per-k results persist in a jsonl
       val wantKs = if (args.length > 1) Seq(args(1).toInt) else Seq(1, 3, 10)
-      val dResultsFile = Paths.get("/root/repo/BENCH/scale_sections/.docscale_results.jsonl")
+      val dResultsFile = Paths.get("BENCH", "scale_sections", ".docscale_results.jsonl")
       val dMeasured = wantKs.map { k =>
         // megaMembers fixed at 1000 (vs docskew's 3000): TRUE within-cluster
         // pairs are quadratic in member count by definition of the output, so
@@ -643,7 +645,7 @@ object ScaleBench {
       // cap mid-shuffle — per-sf results persist in a jsonl and the section
       // is regenerated from every recorded sf, so split runs compose
       val wantSfs = if (args.length > 1) Seq(args(1)) else Seq("sf0.1", "sf1")
-      val resultsFile = Paths.get("/root/repo/BENCH/scale_sections/.cc_results.jsonl")
+      val resultsFile = Paths.get("BENCH", "scale_sections", ".cc_results.jsonl")
       val measured = wantSfs.map { sf =>
         // edge build is NOT part of the CC measurement: materialize the
         // pipeline's confirmed edge set once per sf (tmpfs; swept on rerun).
@@ -761,6 +763,6 @@ object ScaleBench {
       println(cs.map(c => f"""{"scale":"cc","sf":"${c.sf}","rows":${c.rows},"edges":${c.edges},"rounds":${c.rounds},"dist_wall_sec":${c.distWall}%.2f,"local_wall_sec":${c.localWall}%.2f,"mismatches":${c.mismatches}}""").mkString("[", ",", "]"))
     }
 
-    System.err.println("[scale] wrote /root/repo/BENCH/SCALE.md")
+    System.err.println(s"[scale] wrote ${Paths.get("BENCH", "SCALE.md").toAbsolutePath}")
   }
 }

@@ -96,7 +96,8 @@ object TwinCost {
       |rc-aware max scoring at m=16 vs the fast channel's m=64); the
       |residual overhead is the md5 digest per gram vs murmur/fmix.
       |""".stripMargin
-    Files.createDirectories(Paths.get("/root/repo/BENCH"))
-    Files.writeString(Paths.get("/root/repo/BENCH/TWINCOST.md"), out.toString)
+    // relative: the checkout the tool runs in (sbt forks in the project root)
+    Files.createDirectories(Paths.get("BENCH"))
+    Files.writeString(Paths.get("BENCH", "TWINCOST.md"), out.toString)
   }
 }

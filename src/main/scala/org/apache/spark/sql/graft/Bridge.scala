@@ -20,4 +20,12 @@ object Bridge {
       reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry)
       : org.apache.spark.sql.catalyst.analysis.FunctionRegistry =
     ext.registerFunctions(reg)
+
+  /** `SparkContext.unpersistRDD` is `private[spark]`: it drops an RDD's
+    * blocks and its persistent-RDD entry by id. `RDD.unpersist` does the
+    * same but warns once per call that a locally checkpointed RDD cannot be
+    * recomputed, which a loop freeing its own dead checkpoints hits every
+    * round. */
+  def unpersistRDD(sc: org.apache.spark.SparkContext, rddId: Int): Unit =
+    sc.unpersistRDD(rddId, blocking = false)
 }

@@ -42,8 +42,13 @@ class ClustersSpec extends AnyFunSuite {
       .map { case (a, b) => (f"img_$a%010d", f"img_$b%010d") }
       .toDF("id_a", "id_b")
     val vertices = (0 until 800).map(i => f"img_$i%010d").toDF("image_id")
-    val dist = Dedup.clusters(edges, vertices, localThreshold = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val distFrame = Dedup.clusters(edges, vertices, localThreshold = 0)
+    // the loop frees every checkpoint it made except the labels it returns
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.size <= 1, s"the label loop left ${left.size} persisted RDDs behind")
+    val dist = distFrame.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val local = Dedup.clusters(edges, vertices, localThreshold = Long.MaxValue)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(dist === local)
