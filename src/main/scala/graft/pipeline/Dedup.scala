@@ -147,7 +147,7 @@ object Dedup {
     * detection needs no extra pass; the caller re-reads its input only in
     * the hot case, filtered to hot buckets. */
   private def runWalk(kf: DataFrame, maxHamming: Int, hotThreshold: Int,
-      walkParts: Int, firstAgreeBlocks: Int): (Array[Long], DataFrame) = {
+      walkParts: Int, firstAgreeBlocks: Int, probes: Array[Long]): (Array[Long], DataFrame) = {
     val spark = kf.sparkSession
     import spark.implicits._
     // marker count travels back on an accumulator (populated by the eager
@@ -160,7 +160,7 @@ object Dedup {
       .sortWithinPartitions(col("bv"))
       .as[BandedRow]
       .mapPartitions(it => new BucketRunPairs(it, maxHamming, hotThreshold,
-        markers = markers, firstAgreeBlocks = firstAgreeBlocks))
+        markers = markers, firstAgreeBlocks = firstAgreeBlocks, probes = probes))
       .toDF("id_a", "id_b")
       .distinct()
       .localCheckpoint()
@@ -205,13 +205,21 @@ object Dedup {
     * pairs) fall through to the terminal [[saltedSelfJoin]] fanned across
     * [[SaltChunks]] tasks. All branches emit exactly the Hamming-filtered
     * per-bucket cross product — verified by SaltingSpec and the DuckDB
-    * oracle gate. */
+    * oracle gate.
+    *
+    * `probes` (sorted numeric ids, null for all pairs): only pairs with at
+    * least one endpoint among them are wanted, as when new rows are matched
+    * against an index. Every walk then compares only such pairs
+    * ([[BucketRunPairs]]), so a bucket of H indexed members and f probes
+    * costs f·H checks, not (H+f)²/2; the terminal self-join's output is
+    * filtered to them. */
   private[graft] def saltedBucketPairs(frame: DataFrame, maxHamming: Int,
-      hotThreshold: Int = HammingHotCap, firstAgreeBlocks: Int = 0): DataFrame = {
+      hotThreshold: Int = HammingHotCap, firstAgreeBlocks: Int = 0,
+      probes: Array[Long] = null): DataFrame = {
     require(maxHamming < 64, "all-pairs generation runs through saltedAllPairs")
     val keyed = explodeKeys(frame, col("phash"))
     val walkParts = walkPartitions(frame)
-    val (hotBvs, small) = runWalk(keyed, maxHamming, hotThreshold, walkParts, firstAgreeBlocks)
+    val (hotBvs, small) = runWalk(keyed, maxHamming, hotThreshold, walkParts, firstAgreeBlocks, probes)
     if (hotBvs.isEmpty) return small
     // Hot path: bucket sizes for POPULAR band values grow ∝ corpus size, so
     // any raw per-bucket cross product is quadratic in N (measured at sf1:
@@ -236,15 +244,17 @@ object Dedup {
     // refinement pass: bucket keys are xxhash64(obv, ck) — NOT block keys —
     // so the first-agree ownership check must stay off here (it is also the
     // pass that re-emits pairs whose owning bucket was hot)
-    val (denseBvs, small2) = runWalk(refined, maxHamming, hotThreshold, walkParts, 0)
+    val (denseBvs, small2) = runWalk(refined, maxHamming, hotThreshold, walkParts, 0, probes)
     if (denseBvs.isEmpty) return small.union(small2).distinct().localCheckpoint()
     // Terminal path: a refined bucket only stays hot when >hotThreshold
     // members share a phash class verbatim — a genuine mega-duplicate
     // cluster, whose OUTPUT is inherently O(n²) pairs; the work is
     // output-bound, not an avoidable cross product.
     val dense = refined.where(col("bv").isInCollection(denseBvs)).localCheckpoint()
+    val densePairs = saltedSelfJoin(dense, "phash", (a, b, _) => bit_count(a.bitwiseXOR(b)) <= maxHamming)
     small.union(small2)
-      .union(saltedSelfJoin(dense, "phash", (a, b, _) => bit_count(a.bitwiseXOR(b)) <= maxHamming))
+      .union(if (probes == null) densePairs
+        else densePairs.where(col("id_a").isInCollection(probes) || col("id_b").isInCollection(probes)))
       .distinct().localCheckpoint()
   }
 
@@ -294,7 +304,7 @@ object Dedup {
       hotThreshold: Int = AllPairsHotCap): DataFrame = {
     val keyed = explodeKeys(frame, lit(0L).as("phash"), col("keys"))
     val (hotBvs, small) = runWalk(keyed, maxHamming = 64, hotThreshold,
-      walkPartitions(frame), firstAgreeBlocks = 0)
+      walkPartitions(frame), firstAgreeBlocks = 0, probes = null)
     if (hotBvs.isEmpty) return small
     val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
     // checkpoint: like every other branch, hand back a materialized pair
@@ -362,13 +372,21 @@ object Dedup {
     * with firstAgreeBlocks = 0) emits it. 0 disables the check (banded LSH
     * keys are hashes of band slices, not derivable from `phash`;
     * dupPairsSimhash keys derive from simhash while `phash` carries the
-    * pHash). */
+    * pHash).
+    *
+    * `probes` (sorted ids; null = every member): only pairs with at least
+    * one probe endpoint are compared. Each buffered run moves its probe
+    * members to the front, so the pairs (i, j), i < j, with i among the
+    * leading `lead` members are exactly the wanted ones; both the cursor
+    * walk and the sub-bucket groups (sorted by member index within a key)
+    * stop their outer loop at `lead`. A run without probes is skipped. */
   private[graft] final class BucketRunPairs(
       rows: Iterator[BandedRow], maxHamming: Int, hotThreshold: Int,
       maxBufferedPairs: Int = BucketRunPairs.MaxBufferedPairs,
       markers: org.apache.spark.util.LongAccumulator = null,
       counters: WalkCounters = null,
-      firstAgreeBlocks: Int = 0)
+      firstAgreeBlocks: Int = 0,
+      probes: Array[Long] = null)
       extends Iterator[PairRow] {
     import BucketRunPairs.SubBucketMin
     // the sub-bucket pass packs the member index into 20 bits of its sort key
@@ -385,6 +403,7 @@ object Dedup {
     private var bufN = 0
     private var bufI = 0
     private var n = 0 // buffered run length
+    private var lead = 0 // leading members whose pairs are compared (n without probes)
     private var a = 0 // pair cursor over the buffered run
     private var b = 1
     // one-row lookahead: the first row of the next run
@@ -445,7 +464,26 @@ object Dedup {
           ids(n) = r.id; phs(n) = r.phash; n += 1
         }
       }
-      if (overflow) { n = 0; markerBv = bv; 1 } else 0
+      if (overflow) { n = 0; markerBv = bv; 1 }
+      else {
+        lead = if (probes == null) n else leadProbes()
+        0
+      }
+    }
+
+    /** move the run's probe members to the front; returns their count. */
+    private def leadProbes(): Int = {
+      var k = 0
+      var m = 0
+      while (m < n) {
+        if (java.util.Arrays.binarySearch(probes, ids(m)) >= 0) {
+          val ti = ids(k); ids(k) = ids(m); ids(m) = ti
+          val tp = phs(k); phs(k) = phs(m); phs(m) = tp
+          k += 1
+        }
+        m += 1
+      }
+      k
     }
 
     private def advance(): Unit = {
@@ -463,7 +501,7 @@ object Dedup {
           bufB = new Array[Long](BucketRunPairs.InitialPairBuf)
           bufN = 0; bufI = 0
         }
-        while (a < n - 1) {
+        while (a < n - 1 && a < lead) {
           val pa = phs(a)
           while (b < n) {
             val j = b
@@ -495,7 +533,8 @@ object Dedup {
             if (markers != null) markers.add(1)
             nextPair = PairRow(Long.MinValue, markerBv); return
           case _  =>
-            if (n >= SubBucketMin && maxHamming + 1 <= 8) {
+            if (lead == 0) n = 0 // no probe member: nothing to compare
+            else if (n >= SubBucketMin && maxHamming + 1 <= 8) {
               val runBv = curBv
               if (!subBucketRun()) {
                 // PAIR-dense run (a true giant duplicate cluster): buffering
@@ -581,8 +620,9 @@ object Dedup {
           var hi = lo + 1
           val key = packed(lo) >>> 20
           while (hi < n && (packed(hi) >>> 20) == key) hi += 1
+          // members sort by index within a key, so the group's probes lead
           var i1 = lo
-          while (i1 < hi - 1) {
+          while (i1 < hi - 1 && (packed(i1) & 0xFFFFF) < lead) {
             val ma = (packed(i1) & 0xFFFFF).toInt
             val pa = phs(ma)
             var i2 = i1 + 1
@@ -682,10 +722,10 @@ object Dedup {
     * rows that shares a `keys` bucket and lies within `maxHamming` on the
     * pHash (numeric ids). */
   private def keyedCandidates(sigs: DataFrame, keys: Column, maxHamming: Int,
-      hotThreshold: Int = HammingHotCap): DataFrame =
+      hotThreshold: Int = HammingHotCap, probes: Array[Long] = null): DataFrame =
     saltedBucketPairs(
       sigs.select(idNum(col("image_id")).as("id"), col("phash"), keys.as("keys")),
-      maxHamming, hotThreshold)
+      maxHamming, hotThreshold, probes = probes)
 
   /** One image LSH channel in any hash family: `keys` (an expression over
     * the corpus columns) is checkpointed beside `(image_id, phash)`, walked
@@ -695,11 +735,15 @@ object Dedup {
     * Checkpointed FIRST: the walk's hot path re-executes its input filtered
     * to hot buckets, and with the keys inline that re-run repeats the
     * signature stage over the full corpus (65-70 s vs 19 s for the 128-perm
-    * MinHash at the 4.25M-row corpus, local[32]). */
+    * MinHash at the 4.25M-row corpus, local[32]). `probes` (sorted
+    * [[idNum]] ids, null for all pairs) keeps only the pairs with an
+    * endpoint among them, from the walk on ([[saltedBucketPairs]]), so the
+    * confirm never sees another pair. */
   private[graft] def keyedDupPairs(corpus: DataFrame, keys: Column, cfg: Config,
-      hotThreshold: Int = HammingHotCap): DataFrame = {
+      hotThreshold: Int = HammingHotCap, probes: Array[Long] = null): DataFrame = {
     val keyed = corpus.select(col("image_id"), col("phash"), keys.as("keys")).localCheckpoint()
-    confirm(keyedCandidates(keyed, col("keys"), cfg.hammingThreshold, hotThreshold), corpus, cfg)
+    confirm(keyedCandidates(keyed, col("keys"), cfg.hammingThreshold, hotThreshold, probes),
+      corpus, cfg)
       .select("id_a", "id_b")
   }
 

@@ -18,11 +18,14 @@ import graft.util.Fs
   *  - `foreachBatch`: the micro-batch's fresh rows `(image_id, phash,
   *    caption, keys)`, `keys` their MinHash band keys, plus the index rows
   *    that share at least one band key with them, run through the batch
-  *    channel's own walk and confirm ([[Dedup.keyedDupPairs]]); the pairs
-  *    with at least one fresh endpoint go to a `dup_pairs` sink, then the
-  *    fresh rows are appended to the index. Every pair surfaces in the
-  *    batch that brings its second member, so the sink's union equals the
-  *    batch MinHash channel's pair set over the whole stream.
+  *    channel's own walk and confirm ([[Dedup.keyedDupPairs]]), with the
+  *    fresh ids as its probes: the walk compares only pairs with at least
+  *    one fresh endpoint, so an indexed duplicate cluster of H members
+  *    costs a batch f·H checks for its f fresh members, not H²/2. Those
+  *    pairs go to a `dup_pairs` sink, then the fresh rows are appended to
+  *    the index. Every pair surfaces in the batch that brings its second
+  *    member, so the sink's union equals the batch MinHash channel's pair
+  *    set over the whole stream.
   *
   * The index is a flat parquet dir, one row per image and one file per
   * micro-batch, kept at ≤ [[CompactAfterFiles]] files by a size-tiered
@@ -32,8 +35,8 @@ import graft.util.Fs
   * would not cut the read, while each partition would cost a file per
   * append and its own compaction. StreamBench measures the per-batch wall
   * against the growing index (BENCH/STREAM.md: 220 micro-batches of ~127
-  * rows on a 4-core host, p50 1.03 s per batch, last-30/first-30 wall
-  * ratio 0.90 while the index grows to 8.3 MB in 8 files).
+  * rows on a 4-core host, p50 1.39 s per batch, last-30/first-30 wall
+  * ratio 1.17 while the index grows to 8.3 MB in 8 files).
   *
   * State lives in parquet (restart-safe together with the checkpointLocation
   * offsets), keeping the pattern identical to what an Iceberg-backed index
@@ -42,8 +45,9 @@ import graft.util.Fs
   * `dup_pairs` sink is EXACTLY-once (each micro-batch overwrites its own
   * batchId-keyed partition, so a crash-replayed batch rewrites rather than
   * re-appends); the index append is at-least-once by design — a replayed
-  * append leaves an image's row twice, which the per-batch read and
-  * compaction both collapse on `image_id`, so it never changes a pair.
+  * append, or an image the source repeats within a batch, leaves an
+  * image's row twice, which the per-batch read and compaction both
+  * collapse on `image_id`, so it never changes a pair.
   */
 object StreamingDedup {
 
@@ -213,6 +217,7 @@ object StreamingDedup {
     * the LSH index under `outDir/index` (flat, one row per image). */
   def start(spark: SparkSession, sourceDir: String, outDir: String,
       cfg: Dedup.Config = Dedup.defaultConfig): org.apache.spark.sql.streaming.StreamingQuery = {
+    import spark.implicits._
     val schema = spark.read.parquet(sourceDir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "4")
@@ -241,27 +246,26 @@ object StreamingDedup {
           .select(col("image_id"), col("phash"), col("caption"),
             gf.band_keys(col("minhash"), cfg.bands, cfg.rowsPerBand).as("keys"))
           .localCheckpoint()
-        val freshIds = fresh.select("image_id").collect().map(_.getString(0))
         // the walk's input: the fresh rows plus every index row sharing a
         // band key with one (no other index row can pair with a fresh one).
-        // One row per image: a replayed batch's rows sit in the index too,
-        // and a replayed append leaves an index row twice.
-        val side =
+        // One row per image, in the first batch too: a batch may carry an
+        // image twice, a replayed batch's rows sit in the index too, and a
+        // replayed append leaves an index row twice.
+        val side = (
           if (!new java.io.File(indexDir, "_SUCCESS").exists()) fresh
           else {
             val freshKeys = fresh.select(explode(col("keys")).as("bv")).distinct()
-            val index = spark.read.parquet(indexDir)
-            fresh.unionByName(index
-                .select(col("*"), explode(col("keys")).as("bv"))
-                .join(broadcast(freshKeys), Seq("bv"), "left_semi")
-                .drop("bv"))
-              .dropDuplicates("image_id")
-              .localCheckpoint()
-          }
-        // old-old pairs were emitted by the batch that brought their second
-        // member
-        val pairs = Dedup.keyedDupPairs(side, col("keys"), cfg)
-          .where(col("id_a").isInCollection(freshIds) || col("id_b").isInCollection(freshIds))
+            fresh.unionByName(spark.read.parquet(indexDir)
+              .select(col("*"), explode(col("keys")).as("bv"))
+              .join(broadcast(freshKeys), Seq("bv"), "left_semi")
+              .drop("bv"))
+          }).dropDuplicates("image_id").localCheckpoint()
+        // only pairs with a fresh endpoint, from the walk on: old-old pairs
+        // were emitted by the batch that brought their second member, and
+        // an indexed duplicate cluster of H members would cost H²/2 of them
+        val probes = fresh.select(Dedup.idNum(col("image_id")).as("id"))
+          .where(col("id").isNotNull).as[Long].collect().sorted
+        val pairs = Dedup.keyedDupPairs(side, col("keys"), cfg, probes = probes)
         // IDEMPOTENT pairs sink: foreachBatch is at-least-once — a crash
         // between this write and the streaming checkpoint's offset commit
         // replays the whole micro-batch, and a plain append would then

@@ -121,8 +121,9 @@ object StreamBench {
     md ++= "micro-batch: signature stage, a broadcast band-key semi-join that picks\n"
     md ++= "the index rows able to pair with the batch (full read of the flat index,\n"
     md ++= "one row per image), the batch MinHash channel's walk and confirm\n"
-    md ++= "(Dedup.keyedDupPairs) over batch + picked rows, exactly-once pairs sink,\n"
-    md ++= "one index file appended, size-tiered merge of the index files.\n\n"
+    md ++= "(Dedup.keyedDupPairs) over batch + picked rows, comparing only pairs\n"
+    md ++= "with a batch endpoint, exactly-once pairs sink, one index file\n"
+    md ++= "appended, size-tiered merge of the index files.\n\n"
     md ++= f"Input: $nRows rows / ${bs.size} non-empty micro-batches (maxFilesPerTrigger=4,\n"
     md ++= f"10%% family overlap between consecutive batches so cross-batch dup pairs\n"
     md ++= f"exist throughout). Total wall ${totalWall}%.1f s (${nRows / totalWall}%.0f rows/s\n"

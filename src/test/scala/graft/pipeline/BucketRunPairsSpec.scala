@@ -203,6 +203,48 @@ class BucketRunPairsSpec extends AnyFunSuite {
     }
   }
 
+  test("probes: exactly the brute-force pairs with a probe endpoint, each once") {
+    // runs on both sides of SubBucketMin take the cursor walk and the
+    // sub-bucket pass; probes sit anywhere in a run, some runs hold none
+    val rnd = new scala.util.Random(19)
+    for (trial <- 0 until 20) {
+      var id = 0L
+      val rows = (0 until 5).flatMap { r =>
+        val runLen = 1 + rnd.nextInt(2 * Dedup.BucketRunPairs.SubBucketMin)
+        val base = rnd.nextLong()
+        (0 until runLen).map { _ =>
+          id += 1
+          val ph = if (rnd.nextInt(4) == 0) rnd.nextLong()
+            else base ^ (1L << rnd.nextInt(64)) ^ (1L << rnd.nextInt(64))
+          (r.toLong, id, ph)
+        }
+      }
+      val probes = rows.map(_._2).filter(_ => rnd.nextInt(10) == 0).toArray.sorted
+      val got = new Dedup.BucketRunPairs(rows.iterator.map(r => Dedup.BandedRow(r._1, r._2, r._3)),
+        3, 4096, probes = probes).map(p => (p.id_a, p.id_b)).toSeq
+      val want = brute(rows, 3, 4096)
+        .filter { case (a, b) => probes.contains(a) || probes.contains(b) }
+      assert(got.distinct.size === got.size, s"trial=$trial: duplicate emissions")
+      assert(got.toSet === want, s"trial=$trial probes=${probes.length}")
+    }
+  }
+
+  test("probes: one probe in a run of H identical members costs O(H) checks") {
+    // an indexed duplicate cluster met by one new member: all H+1 share
+    // every class key, so an unrestricted pass compares ~(H+1)²/2 pairs
+    // per class
+    val h = 3000
+    val rows = (1L to h.toLong + 1).map(i => Dedup.BandedRow(0L, i, 0x0F0F0F0F12345678L))
+    def acc = new org.apache.spark.util.LongAccumulator
+    val ctrs = new Dedup.WalkCounters(acc, acc, acc, acc, acc, acc, acc, acc)
+    val got = new Dedup.BucketRunPairs(rows.iterator, 3, 1 << 20, counters = ctrs,
+      probes = Array(1500L)).map(p => (p.id_a, p.id_b)).toSet
+    assert(got === rows.map(_.id).filter(_ != 1500L)
+      .map(i => (math.min(i, 1500L), math.max(i, 1500L))).toSet)
+    val checks = ctrs.subChecks.value + ctrs.cursorChecks.value
+    assert(checks <= 4L * (h + 1), s"$checks pair checks for one probe in ${h + 1} members")
+  }
+
   test("empty input and all-singleton input emit nothing") {
     assert(walk(Nil, 3, 8).isEmpty)
     val singles = (1L to 5L).map(i => (i, i, 0L))

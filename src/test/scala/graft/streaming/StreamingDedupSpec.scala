@@ -155,8 +155,11 @@ class StreamingDedupSpec extends AnyFunSuite {
     // each phase is a separate run of the stream over the files present, so
     // the twins land in two different micro-batches; the null- and
     // empty-caption rows share the twins' pHash (and the two empty ones
-    // every band key) but must pair with nothing
-    val first = Seq(row(1L, s.caption), row(2L, null), row(3L, ""))
+    // every band key) but must pair with nothing. The first batch, which
+    // finds no index, carries one twin twice: it must pair with neither
+    // itself nor the other twin twice.
+    val twin = row(1L, s.caption)
+    val first = Seq(twin, twin, row(2L, null), row(3L, ""))
     val second = Seq(row(4L, s.caption), row(5L, null), row(6L, ""))
     val srcDir = tmp("stream-twin-src")
     val outDir = tmp("stream-twin-out")
@@ -165,9 +168,10 @@ class StreamingDedupSpec extends AnyFunSuite {
     second.toDF().coalesce(1).write.mode("append").parquet(srcDir)
     runStream(srcDir, outDir)
 
-    val batch = batchPairs((first ++ second).toDF())
+    val batch = batchPairs((first.tail ++ second).toDF())
     assert(batch === Set(("img_0000000001", "img_0000000004")))
     assert(streamed(outDir) === batch)
+    sinkHasNoDuplicates(outDir)
     // emitted by the second micro-batch, the one that brought the second twin
     assert(pairSet(spark.read.parquet(s"$outDir/dup_pairs").where(col("batch") === 1)) === batch)
   }
