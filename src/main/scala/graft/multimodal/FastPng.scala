@@ -41,7 +41,8 @@ final class FastPng {
       t == 0x624b4744 /* bKGD */ || t == 0x73424954 /* sBIT */
 
   /** decode, or null when the stream is outside the supported fast-path
-    * layout (caller falls back to ImageIO). */
+    * layout or its IDAT data does not inflate (caller falls back to
+    * ImageIO). */
   def decode(b: Array[Byte]): Decoded = {
     if (b == null || b.length < 45) return null
     // signature
@@ -77,7 +78,10 @@ final class FastPng {
       if (typ == 0x49444154) { // IDAT
         inflater.setInput(b, off + 8, len)
         while (!inflater.needsInput() && !inflater.finished() && total < rawLen) {
-          val k = inflater.inflate(raw, total, rawLen - total)
+          // a corrupt deflate stream is ImageIO's to report, like any
+          // other stream outside the fast path
+          val k = try inflater.inflate(raw, total, rawLen - total)
+            catch { case _: java.util.zip.DataFormatException => return null }
           total += k
           if (k == 0 && !inflater.needsInput() && !inflater.finished()) return null
         }

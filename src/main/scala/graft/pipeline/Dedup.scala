@@ -4,9 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.broadcast.Broadcast
 import graft.hash.HashKernels
-import graft.sketch.Hll
-import graft.spark.expr.Kernels
+import graft.sketch.{Hll, KeyPrefixSketch}
+import graft.spark.expr.{Kernels, SharedKeyExpr}
 import graft.spark.{functions => gf}
 
 /** The near-duplicate detection pipeline (SURVEY.md §3 "Our Spark
@@ -39,8 +40,10 @@ import graft.spark.{functions => gf}
   *    exchange feeds both endpoint joins;
   *  - every channel hands the walk one shape, `(id, phash, keys)` with
   *    `keys` the row's bucket-key array ([[saltedBucketPairs]], Hamming
-  *    walks) or `(id, keys)` ([[saltedAllPairs]]); the walk explodes the
-  *    keys and sizes its one wide exchange from them;
+  *    walks) or `(id, keys)` ([[saltedAllPairs]]); one map-only job plans
+  *    the walk ([[planWalk]]): a mergeable sketch of the keys drops every
+  *    keyed row alone in its bucket before the one wide exchange, which is
+  *    sized from the rows that survive;
   *  - bucket skew is handled EXPLICITLY by salt-and-replicate (one
   *    [[saltedSelfJoin]] serves the hot route of both walk modes) plus AQE
   *    skew-join as a backstop;
@@ -86,37 +89,107 @@ object Dedup {
   /** number of pigeonhole blocks for the configured Hamming threshold. */
   def blocksFor(cfg: Config): Int = cfg.hammingThreshold + 1
 
-  /** Scale-adaptive partition count for the walk's wide exchange (r6).
-    * The session default (`spark.sql.shuffle.partitions` = core count in
-    * the bench sessions) leaves each in-partition bv-sort with
-    * bandedRows/cores rows — at sf0.1's 136M banded rows that is 4.25M
-    * rows ≈ 200 MB of sorter pages PER TASK, all 32 tasks concurrently,
-    * which brushes the execution-memory share and intermittently spills
-    * (an r6 probe, since removed: exchange+sort at 32 parts measured
-    * 6.9-20 s vs 4.2-4.6 s at 96). Deriving the width from the DATA
+  /** The walk's plan: its exchange width, and the sketch that drops every
+    * keyed row alone in its bucket before the exchange (null: the walk runs
+    * unpruned). Built by [[planWalk]]; [[release]] frees the broadcast once
+    * the walk's output is materialized. */
+  private[graft] final case class WalkPlan(parts: Int, sketch: Broadcast[Array[Long]], log2: Int) {
+    /** the keyed rows the walk keeps: non-null keys, and with a sketch only
+      * those whose prefix bit is set (a null key evaluates to null) */
+    def keep(bv: Column): Column =
+      if (sketch == null) bv.isNotNull
+      else Bridge.column(SharedKeyExpr(Bridge.expression(bv), sketch, log2))
+    def release(): Unit = if (sketch != null) sketch.destroy()
+  }
+
+  /** The walk's planning step, ONE map-only job over the frame it explodes
+    * (an RDD pass over the frame's rows: a cached-block pass over the
+    * materialized frames most callers hand in, a read of the pHash column
+    * for the raw corpus). A value only the driver reads, so no SQL
+    * aggregate: that would plan a partial→final exchange, a second stage
+    * and an AQE re-plan around it.
+    *
+    * Each task returns its keyed-row count and a [[KeyPrefixSketch]]
+    * payload: its keys' distinct 31-bit hash prefixes with their counts.
+    * The driver merges the payloads into a broadcast bitmap of the prefixes
+    * that at least two keyed rows carry, and [[explodeKeys]] keeps only the
+    * rows whose bit is set. A row it drops shares its key with no other
+    * keyed row of the frame, so it sits alone in its bucket, where
+    * [[BucketRunPairs]] would shuffle, sort and then skip it (61% of the
+    * img_e2e and 69% of the doc_skew banded rows at perfbench seed 1, 90%+
+    * at scale). Pair sets, hot routing and probes are unchanged; a prefix
+    * collision only keeps an extra singleton.
+    *
+    * The payloads together may take half of `spark.driver.maxResultSize`
+    * and at most a quarter of the driver heap, split evenly over the tasks
+    * (about 2 bytes per distinct key). A task past its share returns no
+    * payload, and the walk then runs unpruned, sized from all keyed rows,
+    * with one WARN naming the skip. Both driver bitmaps together stay under
+    * 1/8 of the heap; a narrower bitmap only keeps more singletons.
+    *
+    * The width is scale-adaptive (r6): the session default
+    * (`spark.sql.shuffle.partitions` = core count in the bench sessions)
+    * leaves each in-partition bv-sort with bandedRows/cores rows — at
+    * sf0.1's 136M banded rows that is 4.25M rows ≈ 200 MB of sorter pages
+    * PER TASK, all 32 tasks concurrently, which brushes the
+    * execution-memory share and intermittently spills (an r6 probe, since
+    * removed: exchange+sort at 32 parts measured 6.9-20 s vs 4.2-4.6 s at
+    * 96). Deriving the width from the rows that cross the exchange
     * (rows/[[WalkRowsPerSortTask]], floored at the session default) keeps
     * per-task sorts at a bounded ~45-70 MB at every scale — the guide §2
     * rule that a cluster sizes shuffle partitions to the data, not the
     * executor count. Partition count never affects the output set (hash
     * partitioning by bv co-locates each bucket at any width, and everything
-    * downstream is order-insensitive).
-    * The row count is the walk's own: the summed `keys` sizes of the frame
-    * it explodes — a cached-block pass over the materialized frames most
-    * callers hand in, and a read of the pHash column for the raw corpus.
-    * It is a number only the driver reads, so it runs as ONE map-only job
-    * (an RDD fold over the frame's rows): a SQL `sum` would plan a
-    * partial→final exchange, a second stage and an AQE re-plan around it. A
-    * null key array explodes to nothing; its size reads -1 or null (by ANSI
-    * mode), so `greatest` counts it as 0. */
-  private[pipeline] def walkPartitions(frame: DataFrame): Int = {
-    val dflt = frame.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val keyedRows = frame.select(greatest(size(col("keys")), lit(0)))
-      .queryExecution.toRdd.map(_.getInt(0).toLong).fold(0L)(_ + _)
-    math.min(100000L, math.max(dflt.toLong,
-      (keyedRows + WalkRowsPerSortTask - 1) / WalkRowsPerSortTask)).toInt
+    * downstream is order-insensitive). A null key array or a null key
+    * explodes to no keyed row and counts for none. */
+  private[graft] def planWalk(frame: DataFrame): WalkPlan = {
+    val spark = frame.sparkSession
+    val dflt = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def width(rows: Long): Int = math.min(100000L, math.max(dflt.toLong,
+      (rows + WalkRowsPerSortTask - 1) / WalkRowsPerSortTask)).toInt
+    val heap = Runtime.getRuntime.maxMemory()
+    val cap = driverMaxResultSize()
+    val budget = math.min(if (cap > 0) cap else Long.MaxValue, heap / 2) / 2
+    val rdd = frame.select(col("keys")).queryExecution.toRdd
+    val taskBudget = budget / math.max(1, rdd.getNumPartitions)
+    val tasks = rdd.mapPartitions { it =>
+      var ps = new Array[Int](1024)
+      var n = 0
+      while (it.hasNext) {
+        val r = it.next()
+        if (!r.isNullAt(0)) {
+          val keys = r.getArray(0)
+          var i = 0
+          while (i < keys.numElements()) {
+            if (!keys.isNullAt(i)) {
+              if (n == ps.length) ps = java.util.Arrays.copyOf(ps, n * 2)
+              ps(n) = KeyPrefixSketch.prefix(keys.getLong(i))
+              n += 1
+            }
+            i += 1
+          }
+        }
+      }
+      val (entries, payload) = KeyPrefixSketch.encode(ps, n, taskBudget)
+      Iterator.single((n.toLong, entries, payload))
+    }.collect()
+    val rows = tasks.iterator.map(_._1).sum
+    if (tasks.exists(_._3 == null)) {
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"walk runs unpruned: a task's key sketch passed its $taskBudget-byte share " +
+          s"(half of spark.driver.maxResultSize, at most a quarter of the driver heap, " +
+          s"over ${tasks.length} tasks), so the singleton buckets of $rows keyed rows " +
+          "cross the walk exchange")
+      WalkPlan(width(rows), null, 0)
+    } else {
+      // two bitmaps of 2^log2 bits (2^(log2-3) bytes each) within heap/8
+      val maxLog2 = 63 - java.lang.Long.numberOfLeadingZeros(heap) - 1
+      val m = KeyPrefixSketch.merge(tasks.map(_._3).toSeq, tasks.iterator.map(_._2).sum, maxLog2)
+      WalkPlan(width(m.kept), spark.sparkContext.broadcast(m.bits), m.log2)
+    }
   }
 
-  /** banded rows per walk sort task (see [[walkPartitions]]). */
+  /** banded rows per walk sort task (see [[planWalk]]). */
   private val WalkRowsPerSortTask = 1500000L
 
   /** Hot-bucket policy of every channel: a walk buffers at most
@@ -171,24 +244,29 @@ object Dedup {
   }
 
   /** The walk's keyed rows `(id, phash, bv, extra...)`, one per element of
-    * the frame's `keys` array. explode_outer, not explode: an inner explode
+    * the frame's `keys` array that the plan keeps ([[WalkPlan.keep]]: a
+    * codegen'd read of the broadcast sketch, so the exchange carries only
+    * rows that share their bucket). explode_outer, not explode: an inner explode
     * of the `keys` attribute makes Catalyst infer `size(keys) > 0 AND
     * isnotnull(keys)` below it and push that through the caller's
     * projection, where it evaluates the key kernel twice more per row
     * (cross-operator subtrees get no CSE). The outer form infers nothing;
     * the null bv it emits for an empty or null array is dropped here. */
-  private def explodeKeys(frame: DataFrame, phash: Column, extra: Column*): DataFrame =
+  private[graft] def explodeKeys(frame: DataFrame, plan: WalkPlan, phash: Column,
+      extra: Column*): DataFrame =
     frame.select(Seq(col("id"), phash, explode_outer(col("keys")).as("bv")) ++ extra: _*)
-      .where(col("bv").isNotNull)
+      .where(plan.keep(col("bv")))
 
   /** Hamming-filtered pair generation over an LSH-keyed frame
     * `(id, phash, keys)`, `keys` the row's array of bucket keys: every pair
     * that shares a bucket and lies within `maxHamming` of each other on
-    * `phash`, deduped. The walk explodes the keys itself and sizes its
-    * exchange from them ([[walkPartitions]]).
+    * `phash`, deduped. The walk plans itself from the keys ([[planWalk]]):
+    * it explodes only the keys another keyed row shares and sizes its
+    * exchange from them.
     *
-    * One [[runWalk]] in the common case. Singleton runs (typically 90%+ of
-    * banded rows) are skipped with ZERO allocation, and the raw cross
+    * One [[runWalk]] in the common case. Singleton buckets (typically 90%+
+    * of banded rows at scale) never cross the exchange, a prefix collision's
+    * stray singleton run is skipped with ZERO allocation, and the raw cross
     * product (10-100× the surviving pairs) never materializes — earlier
     * formulations paid for both (a self-join shuffled the banded set four
     * times and materialized every in-bucket pair; a `collect_list`
@@ -217,8 +295,16 @@ object Dedup {
       hotThreshold: Int = HammingHotCap, firstAgreeBlocks: Int = 0,
       probes: Array[Long] = null): DataFrame = {
     require(maxHamming < 64, "all-pairs generation runs through saltedAllPairs")
-    val keyed = explodeKeys(frame, col("phash"))
-    val walkParts = walkPartitions(frame)
+    val plan = planWalk(frame)
+    try bucketPairs(explodeKeys(frame, plan, col("phash")), maxHamming, hotThreshold,
+      plan.parts, firstAgreeBlocks, probes)
+    finally plan.release()
+  }
+
+  /** [[saltedBucketPairs]] over the planned keyed rows; every frame it
+    * returns is materialized. */
+  private def bucketPairs(keyed: DataFrame, maxHamming: Int, hotThreshold: Int,
+      walkParts: Int, firstAgreeBlocks: Int, probes: Array[Long]): DataFrame = {
     val (hotBvs, small) = runWalk(keyed, maxHamming, hotThreshold, walkParts, firstAgreeBlocks, probes)
     if (hotBvs.isEmpty) return small
     // Hot path: bucket sizes for POPULAR band values grow ∝ corpus size, so
@@ -287,8 +373,8 @@ object Dedup {
     * `band_walk_keys`), so a bucket's key IS the shared band value.
     *
     * One [[runWalk]] whose Hamming predicate (`maxHamming` 64) passes every
-    * pair streams the cold buckets; the walk explodes and sizes the keys as
-    * in [[saltedBucketPairs]]. A hot bucket — the boilerplate-text regime,
+    * pair streams the cold buckets; the walk plans, explodes and sizes the
+    * keys as in [[saltedBucketPairs]]. A hot bucket — the boilerplate-text regime,
     * where one band value's membership grows ∝ corpus size — is pair-dense
     * by definition and there is no signature to refine it by, so it goes
     * straight to the [[saltedSelfJoin]] fan-out. That fan-out dedups at the
@@ -302,16 +388,21 @@ object Dedup {
     * pair set against brute force with the hot path forced. */
   private[graft] def saltedAllPairs(frame: DataFrame,
       hotThreshold: Int = AllPairsHotCap): DataFrame = {
-    val keyed = explodeKeys(frame, lit(0L).as("phash"), col("keys"))
-    val (hotBvs, small) = runWalk(keyed, maxHamming = 64, hotThreshold,
-      walkPartitions(frame), firstAgreeBlocks = 0, probes = null)
-    if (hotBvs.isEmpty) return small
-    val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
-    // checkpoint: like every other branch, hand back a materialized pair
-    // set, so a consumer that reads it more than once never re-executes the
-    // dense join
-    small.union(saltedSelfJoin(dense, "keys", (a, b, bv) => gf.first_agree_key(a, b) === bv))
-      .distinct().localCheckpoint()
+    val plan = planWalk(frame)
+    try {
+      val keyed = explodeKeys(frame, plan, lit(0L).as("phash"), col("keys"))
+      val (hotBvs, small) = runWalk(keyed, maxHamming = 64, hotThreshold,
+        plan.parts, firstAgreeBlocks = 0, probes = null)
+      if (hotBvs.isEmpty) small
+      else {
+        val dense = keyed.where(col("bv").isInCollection(hotBvs)).localCheckpoint()
+        // checkpoint: like every other branch, hand back a materialized pair
+        // set, so a consumer that reads it more than once never re-executes
+        // the dense join (nor reads the released sketch)
+        small.union(saltedSelfJoin(dense, "keys", (a, b, bv) => gf.first_agree_key(a, b) === bv))
+          .distinct().localCheckpoint()
+      }
+    } finally plan.release()
   }
 
   /** primitive-field rows for the walk's encoder boundaries: scala Tuple3 is

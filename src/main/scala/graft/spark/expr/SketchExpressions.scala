@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import graft.sketch.{MinHash, OrderMinHash, Cws}
+import org.apache.spark.broadcast.Broadcast
+import graft.sketch.{MinHash, OrderMinHash, Cws, KeyPrefixSketch}
 
 /** Catalyst expressions for the sketch family. Hot-path expressions emit a
   * single static call into [[Kernels]] from `doGenCode`, staying inside
@@ -247,6 +248,28 @@ case class SimHashGe64Expr(child: Expression)
     Kernels.simhashMajorityGe64(t.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"$kernelsRef.simhashMajorityGe64($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Whether the walk keeps a banded row: the bit of its key is set in a
+  * broadcast [[graft.sketch.KeyPrefixSketch]] bitmap of `2^log2` bits, so
+  * some other keyed row may share the key. The plan carries only the
+  * broadcast handle; the generated code reads the bitmap into a field once
+  * per partition. */
+case class SharedKeyExpr(child: Expression, bits: Broadcast[Array[Long]], log2: Int)
+    extends UnaryExpression with KernelCall {
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "shared_key"
+  override protected def stringArgs: Iterator[Any] = Iterator(child, log2)
+  def words(): Array[Long] = bits.value
+  protected override def nullSafeEval(k: Any): Any =
+    KeyPrefixSketch.keeps(bits.value, 31 - log2, k.asInstanceOf[Long])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sharedKeyExpr", this, classOf[SharedKeyExpr].getName)
+    val words = ctx.addMutableState("long[]", "sharedKeyBits", v => s"$v = $ref.words();",
+      forceInline = true)
+    defineCodeGen(ctx, ev, c => s"graft.sketch.KeyPrefixSketch.keeps($words, ${31 - log2}, $c)")
+  }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

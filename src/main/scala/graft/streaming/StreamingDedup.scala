@@ -173,45 +173,6 @@ object StreamingDedup {
         "reads a flat index of one row per image. Start the stream on a new outDir.")
   }
 
-  /** The pairs sink changed layout from flat appended files to `batch=N`
-    * partition dirs (the exactly-once overwrite key). A checkpoint resumed
-    * from the old layout would mix flat files with partition dirs, which
-    * `spark.read.parquet(pairsDir)` cannot read consistently — so at stream
-    * start any flat parquet files are moved into a `batch=-1` partition
-    * (an id no real micro-batch can claim: batchIds start at 0, so no
-    * replay ever overwrites it). Readers see the legacy rows under
-    * batch = -1; .crc siblings travel with their data files.
-    *
-    * Returns true when legacy rows were (or already are) present: the old
-    * layout's tail batch may have written its flat pair files before the
-    * crash whose checkpoint is now being resumed, so the replayed batch
-    * would re-emit pairs that already sit under batch=-1. A pair is
-    * emitted by exactly ONE batch in the normal flow (each id arrives
-    * once, and a pair surfaces only when its second member arrives), so
-    * the caller can anti-join new pairs against batch=-1 without ever
-    * dropping a legitimately new pair — restoring exactly-once across the
-    * layout migration. */
-  private def migrateLegacyFlatPairs(pairsDir: String): Boolean = {
-    val dir = new java.io.File(pairsDir)
-    val flat = dataFiles(dir)
-    if (flat.isEmpty) return new java.io.File(dir, "batch=-1").isDirectory
-    val legacy = new java.io.File(dir, "batch=-1")
-    legacy.mkdirs()
-    flat.foreach { f =>
-      java.nio.file.Files.move(f.toPath,
-        new java.io.File(legacy, f.getName).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      val crc = new java.io.File(dir, s".${f.getName}.crc")
-      if (crc.isFile) java.nio.file.Files.move(crc.toPath,
-        new java.io.File(legacy, crc.getName).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    }
-    // the flat layout's _SUCCESS marker would otherwise sit beside the
-    // partition dirs as a zero-length data candidate
-    new java.io.File(dir, "_SUCCESS").delete(): Unit
-    true
-  }
-
   /** run the incremental pipeline over a parquet-backed stream.
     * Returns the started query; results accumulate under `outDir/dup_pairs`,
     * the LSH index under `outDir/index` (flat, one row per image). */
@@ -226,19 +187,6 @@ object StreamingDedup {
     val indexDir = s"$outDir/index"
     val pairsDir = s"$outDir/dup_pairs"
     requireFlatIndex(indexDir)
-    val hasLegacyPairs = migrateLegacyFlatPairs(pairsDir)
-    // r6: the batch=-1 legacy pair set is FROZEN once migrated, but the
-    // exactly-once anti-join below consumed it per micro-batch — an
-    // unbounded ingest re-listed and re-scanned that parquet forever. Read
-    // and persist it once at stream start instead; each batch's anti-join
-    // then probes cached blocks. (Retiring the anti-join entirely once the
-    // replayed tail has passed would need a watermark over re-arriving ids —
-    // left as is: the cached probe is cheap and unconditionally safe.)
-    val legacyPairs =
-      if (!hasLegacyPairs) null
-      else spark.read.parquet(s"$pairsDir/batch=-1").select("id_a", "id_b")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
     stream.writeStream
       .option("checkpointLocation", s"$outDir/checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -275,16 +223,7 @@ object StreamingDedup {
         // pairs. (The index append below stays at-least-once by design.)
         // Readers of the sink see `batch` as an extra trailing partition
         // column.
-        //
-        // layout-migration exactly-once: a checkpoint resumed from the old
-        // flat layout may replay the tail batch whose pairs already sit
-        // under batch=-1 — anti-join them out. Safe because a pair is
-        // emitted by exactly one batch in the normal flow (see
-        // migrateLegacyFlatPairs), so nothing legitimately new is dropped.
-        val dedupedOut =
-          if (legacyPairs == null) pairs
-          else pairs.join(legacyPairs, Seq("id_a", "id_b"), "left_anti")
-        dedupedOut.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
+        pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$batchId")
         // append the fresh rows as ONE index file (read-before-overwrite is
         // unsafe; the index is append-only like an Iceberg append commit),
         // then merge files past the threshold. Stale `.compact-*` tmp dirs

@@ -39,15 +39,15 @@ object PlanDump {
         "no second shuffle of the banded set — is asserted by PipelineSpec " +
         "(\"candidate generation is one wide shuffle\") and shown next",
         Dedup.candidatesPhashBlocks(corpus)),
-      ("candidates keyed exchange (pre-walk)", "the subplan the walk consumes: banded explode " +
-        "then a single Exchange hashpartitioning(bv) + in-partition sort — the only wide " +
-        "movement of the banded set", {
+      ("candidates keyed exchange (pre-walk)", "the subplan the walk consumes: banded explode, " +
+        "the codegen'd shared_key filter that drops keys no other keyed row shares (the " +
+        "walk plan's broadcast sketch, bitmap width 2^n), then a single Exchange " +
+        "hashpartitioning(bv) + in-partition sort — the only wide movement of the banded set", {
         import org.apache.spark.sql.functions._
         import graft.spark.{functions => gf}
-        corpus.select(expr("cast(substring(image_id, 5) as bigint)").as("id"), col("phash"),
-            gf.phash_block_keys(col("phash"), 4).as("keys"))
-          .select(col("id"), col("phash"), explode_outer(col("keys")).as("bv"))
-          .where(col("bv").isNotNull)
+        val frame = corpus.select(Dedup.idNum(col("image_id")).as("id"), col("phash"),
+          gf.phash_block_keys(col("phash"), 4).as("keys"))
+        Dedup.explodeKeys(frame, Dedup.planWalk(frame), col("phash"))
           .repartition(col("bv"))
           .sortWithinPartitions(col("bv"))
       }),

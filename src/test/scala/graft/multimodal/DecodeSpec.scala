@@ -128,6 +128,69 @@ class DecodeSpec extends AnyFunSuite {
       pbase.getRGB(0, 0, 8, 8, null, 0, 8)))
   }
 
+  test("decode fallbacks: truncated, corrupt, interlaced and 16-bit images follow ImageIO") {
+    import java.awt.image.BufferedImage
+    import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+    def encode(img: BufferedImage, fmt: String, interlaced: Boolean = false): Array[Byte] = {
+      val writer = ImageIO.getImageWritersByFormatName(fmt).next()
+      val param = writer.getDefaultWriteParam
+      if (interlaced) param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = ImageIO.createImageOutputStream(bos)
+      try { writer.setOutput(ios); writer.write(null, new IIOImage(img, null, null), param) }
+      finally { ios.close(); writer.dispose() }
+      bos.toByteArray
+    }
+    def garble(b: Array[Byte], from: Int, n: Int): Array[Byte] = {
+      val c = b.clone()
+      for (i <- from until from + n) c(i) = (c(i) ^ 0x5a).toByte
+      c
+    }
+    val g = new scala.util.Random(3)
+    val rgb = new BufferedImage(40, 24, BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 24; x <- 0 until 40) rgb.setRGB(x, y, ((x * 6) << 16) | ((y * 10) << 8) | g.nextInt(256))
+    val png = encode(rgb, "png")
+    val jpeg = encode(rgb, "jpeg")
+    val adam7 = encode(rgb, "png", interlaced = true)
+    assert(adam7(28) === 1, "the writer did not interlace")
+    val gray16 = new BufferedImage(20, 12, BufferedImage.TYPE_USHORT_GRAY)
+    for (y <- 0 until 12; x <- 0 until 20) gray16.getRaster.setSample(x, y, 0, (x * 3001 + y * 97) & 0xffff)
+    val deep = encode(gray16, "png")
+    assert(deep(24) === 16, "the writer did not keep 16 bits")
+    val idat = new String(png, "ISO-8859-1").indexOf("IDAT")
+    val cases = Seq(
+      "truncated png" -> png.take(png.length * 3 / 5),
+      "corrupt png" -> garble(png, idat + 10, 24),
+      "truncated jpeg" -> jpeg.take(jpeg.length / 2),
+      "corrupt jpeg" -> garble(jpeg, jpeg.length / 2, 64),
+      "corrupt jpeg header" -> garble(jpeg, 3, 40), // after FF D8 FF, which ImageIO sniffs
+      "adam7 png" -> adam7,
+      "16-bit png" -> deep)
+    val dec = new Decode.ReusableDecoder
+    def agrees(name: String, bytes: Array[Byte]): Unit = {
+      val want = scala.util.Try(ImageIO.read(new java.io.ByteArrayInputStream(bytes))).toOption.flatMap(Option(_))
+      val got = scala.util.Try(dec.decodeMeta(bytes))
+      want match {
+        case Some(img) =>
+          assert(got.isSuccess, s"$name: ImageIO decodes it, decodeMeta threw ${got.failed.toOption}")
+          val (w, h, px) = got.get
+          assert((w, h) === ((img.getWidth, img.getHeight)), name)
+          assert(java.util.Arrays.equals(px, img.getRGB(0, 0, w, h, null, 0, w)), name)
+        case None =>
+          assert(got.isFailure, s"$name: ImageIO throws, decodeMeta returned ${got.map(m => s"${m._1}x${m._2}")}")
+      }
+    }
+    for ((name, bytes) <- cases) {
+      assert(new FastPng().decode(bytes) == null, s"$name: FastPng decoded it")
+      agrees(name, bytes)
+    }
+    // the supported layouts outside FastPng's scope decode through ImageIO
+    assert(dec.decodeMeta(adam7)._1 === 40 && dec.decodeMeta(deep)._1 === 20)
+    // the reused readers still decode intact images after the failures
+    agrees("intact png", png)
+    agrees("intact jpeg", jpeg)
+  }
+
   test("payloadFidelity: every row decodes allclose to regenerated ground truth") {
     val fid = Decode.payloadFidelity(corpus).collect()
     assert(fid.length === corpus.count())

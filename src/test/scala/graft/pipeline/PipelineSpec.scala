@@ -268,10 +268,16 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("driver-side scalars run as one map-only job: walk sizing, the clusters edge count") {
-    // an exchange-free frame: 4,000 rows × 3 keys
+    // an exchange-free frame: 4,000 rows × 3 keys. The walk's plan (its
+    // width and the shared-key sketch) comes from one 1-stage job
     val frame = spark.range(0L, 4000L, 1L, 4).select(col("id"), lit(0L).as("phash"),
       array(lit(1L), lit(2L), lit(3L)).as("keys"))
-    assert(jobsOf(Dedup.walkPartitions(frame)) === ((4, Seq(1))))
+    val (plan, planJobs) = jobsOf(Dedup.planWalk(frame))
+    try {
+      assert(planJobs === Seq(1))
+      assert(plan.parts === 4)
+      assert(plan.sketch != null, "the sketch was skipped")
+    } finally plan.release()
     // the driver path: one job packs, caches and sizes the edge chunks,
     // one collects them; no count job runs between
     val edges = Dedup.dupPairs(corpus).localCheckpoint()

@@ -90,8 +90,9 @@ class SaltingSpec extends AnyFunSuite {
     // 400k rows × 4 keys = 1.6M keyed rows: two sort tasks of ≤ 1.5M rows
     val frame = spark.range(400000L).select(col("id"), lit(0L).as("phash"),
       array(lit(1L), lit(2L), lit(3L), lit(4L)).as("keys"))
-    assert(withConf(spark, "spark.sql.shuffle.partitions", "1")(Dedup.walkPartitions(frame)) === 2)
+    def width(): Int = { val plan = Dedup.planWalk(frame); plan.release(); plan.parts }
+    assert(withConf(spark, "spark.sql.shuffle.partitions", "1")(width()) === 2)
     // a derived width below the session default keeps the default
-    assert(withConf(spark, "spark.sql.shuffle.partitions", "4")(Dedup.walkPartitions(frame)) === 4)
+    assert(withConf(spark, "spark.sql.shuffle.partitions", "4")(width()) === 4)
   }
 }

@@ -212,40 +212,4 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("bucket="), e.getMessage)
     assert(!new java.io.File(s"$outDir/checkpoint").exists(), "the stream started anyway")
   }
-
-  test("legacy flat pairs layout: migrated to batch=-1, replayed pairs not duplicated") {
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-    val corpus = families(120L)
-    val srcDir = tmp("stream-legacy-src")
-    val outDir = tmp("stream-legacy-out")
-    corpus.repartition(8).write.mode("overwrite").parquet(srcDir)
-
-    // a reference run gives the true pair set
-    val refOut = tmp("stream-legacy-ref")
-    runStream(srcDir, refOut)
-    val truth = streamed(refOut)
-    assert(truth.nonEmpty)
-
-    // simulate the OLD layout's crash artifact: a subset of the true pairs
-    // sits as FLAT parquet files directly in dup_pairs (written by the old
-    // appending sink before the crash), with no batch= partitioning
-    val legacySubset = truth.take(math.max(1, truth.size / 2)).toSeq
-    legacySubset.toDF("id_a", "id_b").coalesce(1)
-      .write.mode("overwrite").parquet(s"$outDir/dup_pairs")
-
-    // fresh stream over the same source: migration moves the flat files to
-    // batch=-1, and the per-batch anti-join suppresses the re-emission of
-    // every legacy pair — the union read must equal the truth with NO
-    // duplicates (the old behavior double-counted the replayed tail batch)
-    runStream(srcDir, outDir)
-    val sink = spark.read.parquet(s"$outDir/dup_pairs")
-    assert(sink.columns.contains("batch"))
-    assert(sink.where(col("batch") === -1).count() === legacySubset.size.toLong)
-    val all = sink.select("id_a", "id_b")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    assert(all.length === all.distinct.length,
-      "legacy pairs duplicated across batch=-1 and a replayed batch")
-    assert(all.toSet === truth)
-  }
 }
